@@ -898,12 +898,13 @@ def q_bbox_select_sql() -> str:
 
 
 def q_knn_kring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SHUFFLE kNN path: iterative k-ring expansion join (north
-    star: 'kNN via iterative H3 k-ring expansion'). Same oracle as
-    the broadcast path — both must agree with the cross-join truth."""
+    """The SHUFFLE kNN path: one occupancy-bounded cell join (the
+    partition-bound kNN join of "Distributed Stream KNN Join", SIGMOD
+    2021). Same oracle as the broadcast path — both must agree with
+    the cross-join truth."""
     pts = _points(spark, sf_dir)
-    # pt_id is the natural unique key (no temp-id checkpoint), and the
-    # slim output skips the payload join this projection would discard
+    # pt_id is the natural unique key, and the slim output skips the
+    # payload join this projection would discard
     out = knn_ops.knn_kring(pts, derived.sites_df(spark),  # auto res
                             pt_id_col="pt_id", with_payload=False)
     return out.select("pt_id", "nn_site_id", "nn_dist_sq")

@@ -48,13 +48,12 @@ MAX_RES = 27
 
 # The formula, written once. {lon}/{lat} are SQL sub-expressions.
 # Op order matters: both engines must evaluate the identical tree.
-_CELL_SQL = (
-    "(CAST({res} AS BIGINT) * 72057594037927936"
-    " + CAST(FLOOR(({lon} + CAST(180 AS DOUBLE)) * CAST({n!r} AS DOUBLE)"
-    " / CAST(360 AS DOUBLE)) AS BIGINT) * 268435456"
-    " + CAST(FLOOR(({lat} + CAST(90 AS DOUBLE)) * CAST({n!r} AS DOUBLE)"
-    " / CAST(180 AS DOUBLE)) AS BIGINT))"
-)
+_X_SQL = ("CAST(FLOOR(({lon} + CAST(180 AS DOUBLE)) * CAST({n!r} AS DOUBLE)"
+          " / CAST(360 AS DOUBLE)) AS BIGINT)")
+_Y_SQL = ("CAST(FLOOR(({lat} + CAST(90 AS DOUBLE)) * CAST({n!r} AS DOUBLE)"
+          " / CAST(180 AS DOUBLE)) AS BIGINT)")
+_CELL_SQL = ("(CAST({res} AS BIGINT) * 72057594037927936 + " + _X_SQL
+             + " * 268435456 + " + _Y_SQL + ")")
 
 
 def cell_sql(lon: str, lat: str, res: int) -> str:
@@ -73,6 +72,16 @@ def cell_col(lon: str, lat: str, res: int) -> Column:
     Cached: expression parsing is driver-side serial work, and the
     same (lon, lat, res) column is requested on every query."""
     return F.expr(cell_sql(lon, lat, res))
+
+
+def cell_xy_cols(lon: str, lat: str, res: int) -> tuple[Column, Column]:
+    """(cx, cy) Columns: the two halves of cell_sql, left unpacked so
+    that cells off the globe (cx < 0 or cx >= 2^res) still compare and
+    subtract. Because 2^res scales exactly, cx at res r is cx at any
+    finer res shifted right by the difference."""
+    n = float(1 << res)
+    return (F.expr(_X_SQL.format(lon=lon, n=n)),
+            F.expr(_Y_SQL.format(lat=lat, n=n)))
 
 
 def cell_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
@@ -159,29 +168,26 @@ def cell_size_deg(res: int) -> float:
 def kring_col(cell: Column | str, k: int, res: int) -> Column:
     """Array Column of the cells within Chebyshev distance k.
 
-    The H3 k_ring analog used by the kNN expansion join (reference:
-    match_closest_vec_pts python/rsgislib/vectorutils/__init__.py:3482
-    builds a full distance matrix; we expand rings instead).
+    The H3 k_ring analog, used by the radius self-join
+    (operators/knn.radius_count) and the tile halo
+    (tiling.halo_explode).
     Longitude wraps mod 2^res; latitude is clamped (cells off the
-    poles are dropped). Implemented as native Column ops (transform
-    over a literal offset array) — JVM-side, no UDF.
+    poles are dropped). Same cells in the same order as kring_np.
+    Implemented as one constant-size ``transform`` over
+    ``sequence(-k, k)`` — JVM-side, no UDF, and the expression the
+    driver builds does not grow with k.
     """
     c = F.expr(cell) if isinstance(cell, str) else cell
-    n = 1 << res
+    n = F.lit(1 << res)
     # packing is power-of-2 aligned, so extract with shifts (exact,
     # stays in long — never route int64 through a double)
     cx = F.shiftright(c, 28).bitwiseAND(F.lit((1 << 28) - 1))
     cy = c.bitwiseAND(F.lit((1 << 28) - 1))
-    offsets = [(dx, dy) for dx in range(-k, k + 1) for dy in range(-k, k + 1)]
-    cells = []
-    for dx, dy in offsets:
-        nx = (cx + F.lit(dx) + F.lit(n)) % F.lit(n)
-        ny = cy + F.lit(dy)
-        valid = (ny >= 0) & (ny < n)
-        cells.append(
-            F.when(valid, F.lit(res * RES_SHIFT) + nx * F.lit(CX_SHIFT) + ny)
-        )
-    return F.array_compact(F.array(*cells))
+    offs = F.sequence(F.lit(-k), F.lit(k))
+    return F.flatten(F.transform(offs, lambda dx: F.transform(
+        F.filter(offs, lambda dy: (cy + dy >= 0) & (cy + dy < n)),
+        lambda dy: (F.lit(res * RES_SHIFT) + F.pmod(cx + dx, n) * F.lit(CX_SHIFT)
+                    + cy + dy))))
 
 
 def kring_np(cell: np.ndarray, k: int) -> np.ndarray:

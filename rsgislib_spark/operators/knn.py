@@ -8,11 +8,12 @@ with large datasets". Our scalable plan:
 - small site table (the usual case — sites ≪ points): broadcast the
   sites into an Arrow-batched pandas UDF that argmins per batch —
   zero shuffle, embarrassingly parallel over point partitions;
-- large site table: iterative H3-style k-ring expansion — join points
-  to sites on k_ring(cell, r) for growing r, keep rows whose best
-  candidate is provably nearer than the unexplored ring shell, repeat
-  for the rest (the north star's "kNN via iterative H3 k-ring
-  expansion").
+- large site table: one bounded join (the partition-bound kNN join of
+  "Distributed Stream KNN Join", SIGMOD 2021). A small collect of
+  site occupancy per cell gives every point cell an upper bound on its
+  nearest-site distance; one lazy join of each point cell's bounded
+  window of cells against the sites, then an argmin, is exact by
+  construction.
 
 Tie-break: the reference RAISES on distance ties
 (vectorutils/__init__.py:3552-3557). We instead break ties
@@ -101,178 +102,161 @@ def knn_broadcast(points: DataFrame, sites: DataFrame, k: int = 1,
     # spread the point side: the O(|pts| * |sites|) distance kernel is
     # the whole cost of this operator, and a few-row-group parquet
     # source would hand it to one or two tasks (each row is
-    # independent, so the exchange changes nothing else). Hash-spread
-    # on (lon, lat) — near-unique deterministic values on any point
-    # layer — skips round-robin's local sort in the scan task
+    # independent, so the exchange changes nothing else). Round-robin,
+    # not a hash of (lon, lat): grid-snapped or duplicated coordinates
+    # would funnel to a few tasks, and the local sort round-robin pays
+    # is small next to the distance kernel
     from ..session import spread_scan
 
-    return spread_scan(points, by=(lon, lat)).mapInPandas(_nn, schema=schema)
+    return spread_scan(points).mapInPandas(_nn, schema=schema)
+
+
+# Pad (degrees) on the distance bound and the window. The cell formula
+# is monotone in the coordinate (every IEEE step in it is), so each
+# computed cell is an interval whose edges lie within ~1e-13 degrees of
+# the exact edges for |coord| < 1e3: the pad covers that, so no whole
+# cell of margin is needed.
+_PAD = 1e-9
 
 
 def knn_kring(points: DataFrame, sites: DataFrame, res: int | None = None,
               lon: str = "lon", lat: str = "lat",
               site_id: str = "site_id", site_lon: str = "site_lon",
               site_lat: str = "site_lat",
-              max_rings: int = 8, init_r: int | None = None,
               pt_id_col: str | None = None,
               with_payload: bool = True) -> DataFrame:
-    """k=1 nearest neighbour via iterative k-ring expansion join — the
-    shuffle path for LARGE site tables.
+    """k=1 nearest site per point in ONE bounded, exact join — the
+    shuffle path for site tables too large to broadcast.
 
-    Round r: candidates = points ⋈ sites on (point cell ∈
-    k_ring(site cell, r)). A match at squared distance d2 is FINAL
-    when d2 <= (r * cell_h)^2 — no unexplored site can be closer than
-    r-1 full cell heights away (cell_h = lat cell size, the smaller
-    guarantee). Unresolved points go to the next round with r doubled.
-    Falls back to a broadcast argmin for stragglers past max_rings.
+    The partition-bound kNN join of "Distributed Stream KNN Join"
+    (SIGMOD 2021): bound each point cell's nearest-site distance once
+    from site occupancy, then join each point only to the sites that
+    can be within that bound.
 
-    The iterative loop runs on a SLIM frame — one id key + lon/lat +
-    cell. The payload (url/html/text on the pages schema) never
-    becomes a shuffle/groupBy/anti-join key (the spatial_join pt_id
-    discipline); it is joined back exactly once at the end. Pass
-    pt_id_col when the layer has a natural unique key; without one a
-    temp monotonically_increasing_id is materialized via an eager
-    localCheckpoint (stable across both loop branches).
+    1. One eager action, a small collect: the site count per cell at
+       res 12 (or at ``res``, used as given). ``res=None`` picks the
+       coarsest res with at most ~4 sites per occupied cell, then
+       coarsens it until the bound table (one row per cell of the
+       sites' bounding box) fits the session's broadcast threshold.
+    2. Driver: for every cell of that box, the Chebyshev distance k to
+       the nearest occupied cell (numpy dilation, no longitude wrap —
+       d2 is planar). A point cell outside the box adds its Chebyshev
+       distance to the box. Every point of a cell at distance k has a
+       site within D = (k+1)·hypot(w, h), and every site within D of
+       it lies in the window ±ceil(D/w) × ±ceil(D/h) of its cell,
+       clipped to the box (no site lies outside it).
+    3. One lazy plan: distinct point cells ⋈ broadcast bounds, explode
+       the window, ⋈ sites on cell, ⋈ points on cell, keep d2 <= D²,
+       then min(struct(d2, site_id)) per point: exact by construction,
+       ties to the lowest site id.
 
-    res / init_r: cell resolution and starting ring radius. None
-    derives both from site density — expected nearest-site spacing ~
-    sqrt(globe_area / (pi * n_sites)); res is picked so ONE cell is
-    about that spacing, and init_r is sized so the FIRST ring's
-    finality guarantee (init_r * cell_h) already covers ~2x the
-    expected spacing — the bulk of points then resolve in round ONE
-    instead of paying the per-round count()+anti-join+checkpoint jobs
-    for rings that resolve almost nothing (each round is a full job;
-    starting too small is pure fixed-cost overhead, a ring too big
-    only widens the first join's fan-out, which is cheap codegen).
-    The output is ring-schedule-invariant: a point only resolves when
-    its best candidate is provably the global argmin.
+    The join runs on a slim (key, lon, lat) frame and the payload is
+    joined back once at the end. The key is ``pt_id_col``, or (lon,
+    lat) without one: the answer depends on nothing else, so duplicate
+    coordinates share it. Points without coordinates are dropped, and
+    an empty site table gives an empty result. Nothing is persisted.
 
-    with_payload=False skips the final payload join and returns the
-    slim (id, nn_site_id, nn_dist_sq) frame — for callers that only
-    want the ids, the inner join with the full point table is a
-    row-preserving identity (every resolved id comes from points and
-    is unique) and pure cost.
+    with_payload=False skips the payload join and returns the slim
+    (pt_id_col, nn_site_id, nn_dist_sq) frame.
     """
     if not with_payload and pt_id_col is None:
         raise ValueError("with_payload=False requires pt_id_col (a "
-                         "temp id would be meaningless to the caller)")
-    n_sites = None
-    if res is None or init_r is None:
-        n_sites = max(sites.count(), 1)  # dimension side: cheap count
-        est_spacing = (360.0 * 180.0 / (np.pi * n_sites)) ** 0.5
-        if res is None:
-            res = int(np.clip(np.floor(np.log2(180.0 / est_spacing)), 1, 12))
-    cell_h = 180.0 / (1 << res)  # degrees of latitude per cell
+                         "(lon, lat) key would be meaningless to the caller)")
+    from ..session import _parse_bytes
 
-    temp_id = pt_id_col is None
-    pid = pt_id_col if pt_id_col is not None else "__knn_pt_id"
-    pts_full = points
-    if temp_id:
-        pts_full = points.withColumn(
-            pid, F.monotonically_increasing_id()).localCheckpoint()
-    from ..session import spread_scan
+    spark = points.sparkSession
+    occ_res = 12 if res is None else res
+    sx, sy = quadcell.cell_xy_cols(site_lon, site_lat, occ_res)
+    occ = (sites.groupBy(sx.alias("x"), sy.alias("y")).count()
+           .dropna().toPandas())
+    x, y = occ["x"].to_numpy(np.int64), occ["y"].to_numpy(np.int64)
 
-    # spread before persisting: a few-row-group source would build
-    # the cache (and feed every round's join shuffle) from 1-2 tasks.
-    # Hash-spread on the id key — skips round-robin's local sort
-    pts = spread_scan(pts_full.select(pid, lon, lat), by=pid).withColumn(
-        "cell", quadcell.cell_col(lon, lat, res))
-    sts = sites.withColumn("scell", quadcell.cell_col(site_lon, site_lat, res))
+    def at(r):  # the res-r cells of the sites, exactly
+        return x >> (occ_res - r), y >> (occ_res - r)
 
-    if init_r is None:
-        # guarantee radius of round one = init_r * cell_h; size it to
-        # ~2x the expected nearest-site spacing so the typical point
-        # is FINAL after one join instead of surviving into a second
-        # round (each round costs ~3 fixed jobs — checkpoint, count,
-        # anti-join — which dominate when rings resolve few points)
-        est_spacing = (360.0 * 180.0 / (np.pi * n_sites)) ** 0.5
-        init_r = max(1, min(int(np.ceil(2.0 * est_spacing / cell_h)),
-                            1 << res))
+    def box(r):
+        xr, yr = at(r)
+        return (int(xr.max() - xr.min() + 1), int(yr.max() - yr.min() + 1)) \
+            if len(xr) else (0, 0)
 
-    resolved = None
-    remaining = pts.persist()
-    r = int(init_r)
-    rounds = 0
-    while rounds < max_rings:
-        cand = (
-            remaining.join(
-                sts.withColumn("jcell", F.explode(quadcell.kring_col("scell", r, res))),
-                remaining["cell"] == F.col("jcell"),
-            )
-            .withColumn(
-                "d2",
-                (F.col(lon) - F.col(site_lon)) * (F.col(lon) - F.col(site_lon))
-                + (F.col(lat) - F.col(site_lat)) * (F.col(lat) - F.col(site_lat)),
-            )
-        )
-        guarantee = (r * cell_h) ** 2
-        # Pre-filter candidates to d2 <= guarantee BEFORE the argmin:
-        # a row past the guarantee can never make its point FINAL this
-        # round — if the round minimum is <= guarantee the filtered
-        # argmin is the same argmin (ties at equal d2 all survive the
-        # filter), and if it is > guarantee the point stays unresolved
-        # either way. The kring join emits a SQUARE of cells but the
-        # guarantee is a CIRCLE, so ~half the rows (and all of the
-        # square-vs-circle overshoot at large r) never reach the
-        # per-point hash aggregate — the round's dominant cost at
-        # measured sf1.0 (32M candidate rows into a 1.5M-group agg).
-        best = (
-            cand.where(F.col("d2") <= F.lit(guarantee))
-            .groupBy(pid)
-            .agg(F.min(F.struct(F.col("d2").alias("a"),
-                                F.col(site_id).alias("b"))).alias("_bs"))
-            .select(pid, F.col("_bs.b").alias("nn_site_id"),
-                    F.col("_bs.a").alias("nn_dist_sq"))
-        )
-        # persist (columnar cache), NOT localCheckpoint: the round's
-        # resolved rows must be materialized while this round's
-        # `remaining` is still cached — otherwise `resolved` stays a
-        # lazy plan over per-round frames that are unpersisted as the
-        # loop advances and the output would re-execute every round's
-        # cand/argmin chain. The count() below populates the cache
-        # (the anti-join computing `remaining` executes `final`), so
-        # persist gives the same protection as the old eager
-        # localCheckpoint at a fraction of the cost — measured 4.0 s
-        # -> ~0 s per 1.5M-row round (columnar batches vs row-object
-        # RDD storage), and lineage survives eviction.
-        final = best.where(
-            F.col("nn_dist_sq") <= F.lit(guarantee)).persist()
-        resolved = final if resolved is None else resolved.unionByName(final)
-        # persist each round's remainder: the anti-join chain would
-        # otherwise re-execute all previous rounds every iteration
-        # (iterative-algorithm lineage growth)
-        prev = remaining
-        remaining = remaining.join(final.select(pid), pid, "left_anti").persist()
-        n_remaining = remaining.count()
-        prev.unpersist()
-        if n_remaining == 0:
-            break
-        r *= 2
-        rounds += 1
-    else:
-        # bounded fallback: knn_broadcast collects the SITE table to
-        # the driver — only safe when it is genuinely dimension-sized.
-        # A huge site table past max_rings means the ring guarantee is
-        # mis-tuned (res too fine / max_rings too low): fail loudly
-        # rather than OOM the driver.
-        if sites.count() > 5_000_000:
-            raise RuntimeError(
-                "knn_kring exhausted max_rings with a site table too "
-                "large to broadcast — raise max_rings or coarsen res")
-        tail = knn_broadcast(
-            remaining.drop("cell"), sites, k=1, lon=lon, lat=lat,
-            site_id=site_id, site_lon=site_lon, site_lat=site_lat,
-        ).select(pid, "nn_site_id", "nn_dist_sq").localCheckpoint()
-        resolved = tail if resolved is None else resolved.unionByName(tail)
-    # the break path leaves an EMPTY remaining (safe to release now);
-    # on the fallback path the tail was checkpointed above, so nothing
-    # references the cached remainder either way
-    remaining.unpersist()
+    if res is None:
+        n_sites = int(occ["count"].sum())
+        res = next((r for r in range(occ_res) if n_sites <= 4 * len(
+            np.unique(np.stack(at(r)), axis=1).T)), occ_res)
+        thr = _parse_bytes(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+        # ~32 B a bounds row; a disabled threshold (-1) means Spark's
+        # default of 10 MB, since the bounds are broadcast regardless
+        max_cells = (thr if thr > 0 else 10 << 20) // 32
+        while res > 0 and np.prod(box(res)) > max_cells:
+            res -= 1
+    xr, yr = at(res)
+    x0, y0 = (int(xr.min()), int(yr.min())) if len(xr) else (0, 0)
+    reach = np.zeros(box(res), bool)
+    reach[xr - x0, yr - y0] = True
+    k = np.where(reach, 0, -1)
+    step = 0
+    while not reach.all():  # one Chebyshev step: 3x3 max, separable
+        step += 1
+        g = reach.copy()
+        g[1:] |= reach[:-1]
+        g[:-1] |= reach[1:]
+        reach = g.copy()
+        reach[:, 1:] |= g[:, :-1]
+        reach[:, :-1] |= g[:, 1:]
+        k[reach & (k < 0)] = step
+    bx, by = np.indices(k.shape)
+    bounds = spark.createDataFrame(
+        pd.DataFrame({"bx": (bx + x0).ravel(), "by": (by + y0).ravel(),
+                      "k": k.ravel()}), "bx BIGINT, by BIGINT, k BIGINT")
+
+    c = F.col
+    w, h = 360.0 / (1 << res), 180.0 / (1 << res)
+    keys = [pt_id_col] if pt_id_col else [lon, lat]
+    cx, cy = quadcell.cell_xy_cols(lon, lat, res)
+    pts = points.select(*dict.fromkeys(keys + [lon, lat]),
+                        cx.alias("_cx"), cy.alias("_cy"))
+    dist = (c("k") + F.greatest(F.abs(c("_cx") - c("bx")),
+                                F.abs(c("_cy") - c("by"))) + 1) \
+        * F.lit(float(np.hypot(w, h))) + F.lit(_PAD)
+
+    def clamp(col, lo, hi):
+        return F.least(F.greatest(col, F.lit(lo)), F.lit(hi))
+
+    def span(col, size, lo, hi):  # the window's cells inside the box
+        r = F.ceil((c("_D") + F.lit(_PAD)) / F.lit(size))
+        return F.explode(F.sequence(clamp(col - r, lo, hi),
+                                    clamp(col + r, lo, hi)))
+
+    x1, y1 = x0 + k.shape[0] - 1, y0 + k.shape[1] - 1
+    win = (
+        pts.select("_cx", "_cy").distinct()
+        .withColumn("bx", clamp(c("_cx"), x0, x1))
+        .withColumn("by", clamp(c("_cy"), y0, y1))
+        .join(F.broadcast(bounds), ["bx", "by"])
+        .withColumn("_D", dist)
+        .withColumn("_sx", span(c("_cx"), w, x0, x1))
+        .withColumn("_sy", span(c("_cy"), h, y0, y1))
+        .select("_cx", "_cy", "_D", "_sx", "_sy")
+    )
+    sx, sy = quadcell.cell_xy_cols(site_lon, site_lat, res)
+    sts = sites.select(c(site_id).alias("_sid"), c(site_lon).alias("_slon"),
+                       c(site_lat).alias("_slat"), sx.alias("_sx"),
+                       sy.alias("_sy"))
+    d2 = ((c(lon) - c("_slon")) * (c(lon) - c("_slon"))
+          + (c(lat) - c("_slat")) * (c(lat) - c("_slat")))
+    best = (
+        pts.join(win.join(sts, ["_sx", "_sy"]), ["_cx", "_cy"])
+        .withColumn("_d2", d2)
+        .where(c("_d2") <= c("_D") * c("_D"))
+        .groupBy(*keys)
+        .agg(F.min(F.struct("_d2", "_sid")).alias("_b"))
+        .select(*keys, c("_b._sid").alias("nn_site_id"),
+                c("_b._d2").alias("nn_dist_sq"))
+    )
     if not with_payload:
-        return resolved
-    # payload joined back ONCE on the id key
-    out = pts_full.join(resolved, pid, "inner")
-    return out.drop(pid) if temp_id else out
+        return best
+    return points.join(best, keys).select(*points.columns, "nn_site_id",
+                                          "nn_dist_sq")
 
 
 def radius_count_haversine(points: DataFrame, radius_m: float,

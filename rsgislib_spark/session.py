@@ -10,6 +10,7 @@ normal spark-submit --conf.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import SparkSession
 
@@ -94,10 +95,9 @@ def spread_scan(df, min_parts: int | None = None, by=None):
     user latency). Spark's own scan split count derives from the same
     byte arithmetic (FilePartition packing: each file charged
     openCostInBytes, packed into maxPartitionBytes splits), so the
-    estimate matches what the scan would deliver; only non-file
-    sources (no inputFiles) fall back to the RDD probe."""
-    import os as _os
-
+    estimate matches what the scan would deliver; non-file sources
+    (no inputFiles), remote paths (hdfs://, s3a://) and files deleted
+    since planning fall back to the RDD probe."""
     spark = df.sparkSession
     sc = spark.sparkContext
     target = min_parts or sc.defaultParallelism
@@ -106,11 +106,8 @@ def spread_scan(df, min_parts: int | None = None, by=None):
         files = df.inputFiles()
     except Exception:  # noqa: BLE001 — unknown source
         files = None
-    if files:
-        sz = 0
-        for f in files:
-            p = f[7:] if f.startswith("file://") else f
-            sz += _os.path.getsize(p)
+    sz = _local_bytes(files) if files else None
+    if sz is not None:
         if sz < min_bytes:
             return df
         max_pb = _parse_bytes(
@@ -124,6 +121,18 @@ def spread_scan(df, min_parts: int | None = None, by=None):
     if df.rdd.getNumPartitions() < target:
         return _respread(df, target, by)
     return df
+
+
+def _local_bytes(files) -> int | None:
+    """Total size of the input files, or None when any of them is not
+    a local file (hdfs://, s3a://) or is gone since planning — the
+    caller then falls back to the partition probe."""
+    if not all(f.startswith("file:") for f in files):
+        return None
+    try:
+        return sum(os.path.getsize(unquote(urlparse(f).path)) for f in files)
+    except OSError:
+        return None
 
 
 def _respread(df, target: int, by):

@@ -1,7 +1,9 @@
-"""Cell-index unit tests (numpy + duckdb; no Spark needed)."""
+"""Cell-index unit tests (numpy + duckdb; Spark only for the
+kring_col parity test)."""
 
 import duckdb
 import numpy as np
+import pytest
 
 from rsgislib_spark.cells import quadcell, s2cell
 
@@ -56,6 +58,23 @@ def test_kring_wraps_longitude():
     xs = {int(quadcell.cell_xy(int(c))[0]) for c in ring}
     n = 1 << 5
     assert (n - 1) in xs and 0 in xs and 1 in xs
+
+
+@pytest.mark.parametrize("res", [3, 5])
+def test_kring_col_matches_numpy(spark, res):
+    """The Spark k-ring equals kring_np cell for cell, in order, for
+    k in {0, 1, 3, 8}: on the longitude-wrap columns (cx = 0 and
+    n-1), the pole rows (cy = 0 and n-1) and an interior cell; at
+    res 3 the k=8 ring wraps onto itself."""
+    n = 1 << res
+    xs, ys = [0, 1, n // 2, n - 1], [0, 1, n // 2, n - 2, n - 1]
+    cells = np.array([quadcell.pack(res, x, y) for x in xs for y in ys])
+    df = spark.createDataFrame([(int(c),) for c in cells], "cell BIGINT")
+    for k in (0, 1, 3, 8):
+        got = [r.ring for r in df.select(
+            quadcell.kring_col("cell", k, res).alias("ring")).collect()]
+        want = quadcell.kring_np(cells, k)
+        assert got == [[int(c) for c in row if c >= 0] for row in want], k
 
 
 def test_cover_bbox_covers_points():

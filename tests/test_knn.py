@@ -12,13 +12,12 @@ N = 800
 
 @pytest.fixture(scope="module")
 def pts(spark):
-    df = (
+    # a local relation: stable ids without a persist, so the cache
+    # hygiene test below can demand an empty cache
+    return spark.createDataFrame(
         geoparse(pages.pages_df(spark, N))
         .selectExpr("monotonically_increasing_id() AS pt_id", "lon", "lat")
-    )
-    df.persist()
-    df.count()
-    return df
+        .toPandas())
 
 
 @pytest.fixture(scope="module")
@@ -132,3 +131,156 @@ def test_radius_count_haversine_matches_brute(spark, pts):
         d = haversine_m(px, py, px[i], py[i])
         want = int(np.sum(d <= R)) - 1  # exclude self
         assert got[pid] == want, pid
+
+
+# ---------------------------------------------------------------- knn_kring exactness
+
+def _brute_nn(pts, sites):
+    """{pt_id: (site_id, d2)} by brute force; lowest id wins ties."""
+    s = sorted(sites)
+    s_id = np.array([r[0] for r in s])
+    sx = np.array([r[1] for r in s], dtype=np.float64)
+    sy = np.array([r[2] for r in s], dtype=np.float64)
+    want = {}
+    for pid, x, y in pts:
+        d2 = (x - sx) * (x - sx) + (y - sy) * (y - sy)
+        i = int(np.argmin(d2))
+        want[pid] = (int(s_id[i]), float(d2[i]))
+    return want
+
+
+def _kring_vs_brute(spark, pts, sites, **kw):
+    p = spark.createDataFrame(pts, "pt_id BIGINT, lon DOUBLE, lat DOUBLE")
+    s = spark.createDataFrame(sites,
+                              "site_id BIGINT, site_lon DOUBLE, site_lat DOUBLE")
+    got = {r.pt_id: (r.nn_site_id, r.nn_dist_sq)
+           for r in knn.knn_kring(p, s, **kw).collect()}
+    assert got == _brute_nn(pts, sites)
+
+
+@pytest.mark.parametrize("res", [None, 6])
+def test_knn_kring_far_points(spark, res):
+    """Points whose nearest site is more than 10 cell heights away (a
+    cluster of sites near the origin; at res 6, h = 2.8 deg) stay
+    exact."""
+    rng = np.random.default_rng(1)
+    sites = [(i, float(x), float(y)) for i, (x, y) in
+             enumerate(rng.uniform(-2.0, 2.0, (60, 2)))]
+    pts = [(i, float(x), float(y)) for i, (x, y) in
+           enumerate(rng.uniform([30.0, -80.0], [120.0, 80.0], (300, 2)))]
+    _kring_vs_brute(spark, pts, sites, res=res)
+
+
+@pytest.mark.parametrize("res", [None, 3, 8])
+def test_knn_kring_equidistant_lowest_id_wins(spark, res):
+    """Sites on an integer lattice with shuffled ids, points at the
+    centres between four of them and on lattice lines and cell edges:
+    every tie goes to the lowest site id."""
+    rng = np.random.default_rng(2)
+    grid = [(float(x), float(y)) for x in range(-4, 5) for y in range(-4, 5)]
+    ids = rng.permutation(len(grid)) * 7 + 3
+    sites = [(int(i), x, y) for i, (x, y) in zip(ids, grid)]
+    pts = [(i, x + 0.5, y + 0.5) for i, (x, y) in enumerate(grid)]
+    pts += [(1000 + i, x + 0.5, y) for i, (x, y) in enumerate(grid)]
+    pts += [(2000, 0.0, 0.0), (2001, 45.0, 0.0), (2002, -180.0, -90.0)]
+    _kring_vs_brute(spark, pts, sites, res=res)
+
+
+def test_knn_kring_sites_in_small_region(spark):
+    """500 sites inside a 0.5-degree box, points across the globe: the
+    auto res must follow the occupied cells, not the globe's area."""
+    rng = np.random.default_rng(3)
+    sites = [(i, float(x), float(y)) for i, (x, y) in
+             enumerate(rng.uniform([10.0, 40.0], [10.5, 40.5], (500, 2)))]
+    pts = [(i, float(x), float(y)) for i, (x, y) in
+           enumerate(rng.uniform([-179.9, -89.9], [179.9, 89.9], (400, 2)))]
+    pts += [(1000 + i, float(x), float(y)) for i, (x, y) in
+            enumerate(rng.uniform([9.9, 39.9], [10.6, 40.6], (200, 2)))]
+    _kring_vs_brute(spark, pts, sites)
+
+
+def test_knn_kring_empty_sites(spark, pts):
+    sites = spark.createDataFrame(
+        [], "site_id BIGINT, site_lon DOUBLE, site_lat DOUBLE")
+    assert knn.knn_kring(pts, sites).collect() == []
+    slim = knn.knn_kring(pts, sites, pt_id_col="pt_id", with_payload=False)
+    assert slim.columns == ["pt_id", "nn_site_id", "nn_dist_sq"]
+    assert slim.collect() == []
+
+
+def _executions_in_group(spark, group):
+    """SQL executions (actions) that ran a job under job group ``group``."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    n = 0
+    for i in range(execs.size()):
+        it = execs.apply(i).jobs().keys().iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(it.next())
+        n += bool(ids & jobs)
+    return n
+
+
+def test_knn_kring_leaves_no_cache(spark, pts, brute):
+    """One eager action inside the call, nothing persisted after it."""
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    for rdd_id in list(sc._jsc.getPersistentRDDs().keySet().toArray()):
+        sc._jsc.getPersistentRDDs().get(rdd_id).unpersist(True)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    sc.setJobGroup("knn_kring_call", "knn_kring call")
+    try:
+        out = knn.knn_kring(pts, derived.sites_df(spark))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _executions_in_group(spark, "knn_kring_call") == 1
+    got = {r.pt_id: (r.nn_site_id, r.nn_dist_sq) for r in out.collect()}
+    assert got == brute
+    assert sc._jsc.getPersistentRDDs().isEmpty()
+    assert cache.isEmpty()
+
+
+def test_knn_broadcast_spreads_duplicate_points(spark):
+    """2k points snapped to one grid node still spread over several
+    tasks (a hash of (lon, lat) sent them all to one) and match brute
+    force."""
+    p = spark.range(2000, numPartitions=1).selectExpr(
+        "id AS pt_id", "CAST(12.5 AS DOUBLE) AS lon", "CAST(-3.0 AS DOUBLE) AS lat")
+    out = knn.knn_broadcast(p, derived.sites_df(spark))
+    sizes = out.rdd.glom().map(len).collect()
+    assert sum(1 for n in sizes if n) > 1
+    sites = [(r.site_id, r.site_lon, r.site_lat)
+             for r in derived.sites_df(spark).collect()]
+    want = _brute_nn([(i, 12.5, -3.0) for i in range(2000)], sites)
+    assert {r.pt_id: (r.nn_site_id, r.nn_dist_sq)
+            for r in out.collect()} == want
+
+
+def test_knn_kring_matches_duckdb_oracle(spark):
+    """knn_kring on the sf0.001 tables against the DuckDB cross-join
+    oracle of the knn queries, by the order-free value hash of
+    tools/compare_oracle.py."""
+    import os
+    import sys
+
+    import duckdb
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    import compare_oracle
+    import __spark_entry__ as entry
+    from test_similarity import SF  # the sf0.001 tables
+
+    con = duckdb.connect()
+    for t in compare_oracle.TABLES:
+        if os.path.exists(f"{SF}/{t}.parquet"):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    want = con.execute(entry.q_knn_nearest_site_sql()).fetch_arrow_table()
+    got = entry.q_knn_kring(spark, SF)
+    srows = got.collect()
+    drows = list(zip(*(want.column(c).to_pylist() for c in want.column_names)))
+    assert len(srows) == len(drows) > 0
+    assert (compare_oracle.table_hash(srows, got.columns)
+            == compare_oracle.table_hash(drows, want.column_names))

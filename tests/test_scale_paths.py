@@ -160,3 +160,32 @@ def test_spread_scan_gates(spark, tmp_path):
     assert _parse_bytes("128MB") == 128 << 20
     assert _parse_bytes("1g") == 1 << 30
     assert _parse_bytes("4194304b") == 4 << 20
+
+
+def test_spread_scan_deleted_input_falls_back(spark, tmp_path):
+    """A file deleted after planning must not crash spread_scan: it
+    falls back to the partition probe (one split < parallelism)."""
+    import shutil
+
+    from rsgislib_spark.session import spread_scan
+
+    path = str(tmp_path / "gone")
+    spark.range(0, 100, 1, numPartitions=1).write.parquet(path)
+    df = spark.read.parquet(path)
+    shutil.rmtree(path)
+    out = spread_scan(df)  # no action: the input is gone
+    assert "Repartition" in out._jdf.queryExecution().logical().toString()
+
+
+def test_spread_scan_remote_path_falls_back(spark, tmp_path, monkeypatch):
+    """An hdfs:// input is never stat-ed locally: the partition probe
+    decides, as for a non-file source."""
+    from rsgislib_spark.session import spread_scan
+
+    path = str(tmp_path / "remote")
+    spark.range(0, 100, 1, numPartitions=1).write.parquet(path)
+    df = spark.read.parquet(path)
+    monkeypatch.setattr(df, "inputFiles",
+                        lambda: ["hdfs://namenode:8020/data/part-0.parquet"])
+    out = spread_scan(df)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism

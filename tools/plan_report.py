@@ -58,11 +58,11 @@ CHECKS = {
         # this a nested-loop join over the whole raster
         forbid=["BroadcastNestedLoopJoin", "CartesianProduct"],
     ),
-    "knn_kring round on the pages schema (slim id-keyed loop)": dict(
-        # the iterative loop must group/anti-join on the single id
-        # key; url/html/text must never become shuffle keys (r2's
-        # knn_kring grouped by every point column)
-        expect=["Exchange hashpartitioning(__knn_pt_id"],
+    "knn_kring bounded join on the pages schema (slim cell-keyed join)": dict(
+        # one join of the points to their cells' bounded site windows,
+        # keyed on the cell; url/html/text must never become shuffle
+        # keys (r2's knn_kring grouped by every point column)
+        expect=["Exchange hashpartitioning(_cx", "Generate explode(sequence("],
         forbid=["hashpartitioning(url", "hashpartitioning(html",
                 "hashpartitioning(text", "Exchange SinglePartition"],
     ),
@@ -208,8 +208,7 @@ def main():
         from rsgislib_spark.operators import knn as knn_ops
 
         pts = geoparse(spark.read.parquet(tmp)).where("lon IS NOT NULL")
-        return knn_ops.knn_kring(pts, derived.sites_df(spark),
-                                 res=3, max_rings=3)
+        return knn_ops.knn_kring(pts, derived.sites_df(spark), res=3)
 
     def sj_df_big():
         from rsgislib_spark.geometry import wkb as wkb_codec
