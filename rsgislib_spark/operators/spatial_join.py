@@ -34,11 +34,16 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BooleanType
 
 from ..cells import quadcell
 from ..geometry import predicates, wkb
+
+_COVER_SCHEMA = pa.schema(
+    [("poly_id", pa.int64()), ("cell", pa.int64())]
+    + [(c, pa.float64()) for c in ("xmin", "ymin", "xmax", "ymax")])
 
 DEFAULT_RES = 6
 
@@ -129,11 +134,12 @@ class PolygonIndex:
         return out
 
     def cover_df(self, spark) -> DataFrame:
-        return spark.createDataFrame(
-            self.cover_rows(),
-            "poly_id BIGINT, cell BIGINT, xmin DOUBLE, ymin DOUBLE, "
-            "xmax DOUBLE, ymax DOUBLE",
-        )
+        """The cover as a local relation. It is built from Arrow, not
+        from a Python list (an RDD-backed leaf), so its rows are part
+        of the plan: a checkpoint lineage fingerprint identifies it by
+        content and a restarted job that rebuilds it can resume."""
+        cols = list(zip(*self.cover_rows())) or [()] * len(_COVER_SCHEMA)
+        return spark.createDataFrame(pa.table(cols, schema=_COVER_SCHEMA))
 
     # ------------------------------------------------------- refine
     def refine_udf(self):

@@ -2,9 +2,10 @@
 
 Single place where the 100 TB posture is configured: AQE (runtime
 re-planning + skew-join splitting for dense city cells), Arrow for
-every pandas-UDF boundary, and shuffle-partition defaults sized for
-the sandbox (local[32]) but overridable for a real cluster via
-normal spark-submit --conf.
+every pandas-UDF boundary, a local master as wide as the CPUs this
+process may use (``SPARK_GRAFT_CPUS`` overrides it), and
+shuffle-partition defaults overridable for a real cluster via normal
+spark-submit --conf.
 """
 
 from __future__ import annotations
@@ -42,7 +43,8 @@ DEFAULTS = {
 
 def get_spark(app: str = "rsgislib_spark", master: str | None = None,
               **conf) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     builder = SparkSession.builder.appName(app).master(master or f"local[{cpus}]")
     merged = {**DEFAULTS, **conf}
     for k, v in merged.items():

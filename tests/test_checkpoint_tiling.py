@@ -1,5 +1,6 @@
 """Checkpoint manifests (resume semantics) + tiling/salting."""
 
+import itertools
 import os
 
 import pytest
@@ -166,6 +167,204 @@ def test_prune_never_touches_unrecorded_partitions(spark, assigned, tmp_path):
                                       prune_stale=True)
     assert r["pruned"] == len(all_tiles) - len(keep)
     assert os.path.exists(os.path.join(foreign, "marker"))
+
+
+# ---------------------------------------------------- resume over inputs
+
+@pytest.fixture(scope="module")
+def pages_src(spark, tmp_path_factory):
+    """A pages parquet input in two files."""
+    src = str(tmp_path_factory.mktemp("pages") / "pages")
+    pages.pages_df(spark, 2000).coalesce(2).write.parquet(src)
+    return src
+
+
+def _tiles_from(spark, src):
+    """The tile frame built from scratch over ``src``, as a restarted
+    job builds it (fresh exprIds, fresh file listing)."""
+    return tiling.assign_tiles(
+        geoparse(spark.read.parquet(src)).where("lon IS NOT NULL")
+    ).select("url", "lon", "lat", "cell_r5")
+
+
+_groups = itertools.count()
+
+
+def _jobs_during(spark, fn):
+    """(fn(), number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    group = f"checkpoint_call_{next(_groups)}"
+    sc.setJobGroup(group, "checkpointed_write call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_resume_rebuilt_plan_skips_with_zero_jobs(spark, pages_src, tmp_path):
+    """A restarted job rebuilds its plan from scratch over the same
+    parquet input: every tile is skipped and no Spark job runs."""
+    path = str(tmp_path / "tiles")
+    df = _tiles_from(spark, pages_src)
+    r1, jobs1 = _jobs_during(spark, lambda: checkpoint.checkpointed_write(
+        df, path, "cell_r5"))
+    assert r1["written"] > 0 and jobs1 > 0
+    # (reading the parquet schema runs a job, so build outside the call)
+    rebuilt = _tiles_from(spark, pages_src)
+    r2, jobs2 = _jobs_during(spark, lambda: checkpoint.checkpointed_write(
+        rebuilt, path, "cell_r5"))
+    assert jobs2 == 0
+    assert (r2["written"], r2["skipped"], r2["rows"]) == (0, r1["written"], 0)
+    assert r2["lineage"] == r1["lineage"]
+
+
+def test_touched_input_recomputes_every_tile(spark, pages_src, tmp_path):
+    """A new modification time on one input file is a new input: the
+    next call recomputes every tile under a new lineage."""
+    import shutil
+
+    src = str(tmp_path / "pages")
+    shutil.copytree(pages_src, src)
+    path = str(tmp_path / "tiles")
+    r1 = checkpoint.checkpointed_write(_tiles_from(spark, src), path, "cell_r5")
+    part = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))[0]
+    st = os.stat(os.path.join(src, part))
+    os.utime(os.path.join(src, part), (st.st_atime, st.st_mtime + 10))
+    r2 = checkpoint.checkpointed_write(_tiles_from(spark, src), path, "cell_r5")
+    assert r2["lineage"] != r1["lineage"]
+    assert (r2["written"], r2["skipped"]) == (r1["written"], 0)
+    assert r2["rows"] == r1["rows"]
+
+
+def test_fingerprint_separates_local_frames(spark):
+    """The canonical plan of a local frame prints no rows: frames of one
+    schema and different rows must still fingerprint apart. Local rows
+    (LocalRelation) are hashed, so equal rows fingerprint equal; an
+    RDD-backed frame is identified per object."""
+    import pandas as pd
+
+    schema = "cell_r5 BIGINT, v STRING"
+    a = spark.createDataFrame([(1, "a")], schema)
+    b = spark.createDataFrame([(1, "b")], schema)
+    fp = checkpoint.lineage_fingerprint
+    assert fp(a) != fp(b)
+    assert fp(a) != fp(spark.createDataFrame([(1, "a")], schema))
+    assert fp(a.where("v = 'a'")) == fp(a.where("v = 'a'"))
+    pa = pd.DataFrame({"cell_r5": [1], "v": ["a"]})
+    pb = pd.DataFrame({"cell_r5": [1], "v": ["b"]})
+    assert fp(spark.createDataFrame(pa)) != fp(spark.createDataFrame(pb))
+    assert fp(spark.createDataFrame(pa)) == fp(spark.createDataFrame(pa))
+
+
+def test_fingerprint_reads_the_whole_plan(spark):
+    """The plan is printed without Spark's 25-field cap: frames that
+    differ only past it fingerprint apart, and the session's print
+    settings are left as they were."""
+    def wide(last):
+        return spark.range(3).select(
+            *[(F.col("id") + i).alias(f"c{i}") for i in range(30)],
+            F.lit(last).alias("z"))
+
+    fp = checkpoint.lineage_fingerprint
+    assert fp(wide(1)) != fp(wide(2))
+    assert fp(wide(1)) == fp(wide(1))
+    assert spark.conf.get("spark.sql.debug.maxToStringFields", None) is None
+
+
+def test_spatial_join_frame_fingerprints_equal_when_rebuilt(spark):
+    """The polygon cover is a local relation identified by its rows, so
+    a rebuilt spatial-join frame keeps its lineage and can resume."""
+    from rsgislib_spark.data import fixtures
+    from rsgislib_spark.operators import spatial_join as sj
+
+    def build():
+        pts = spark.range(50).selectExpr(
+            "id AS pt_id", "CAST(id AS DOUBLE) - 25 AS lon",
+            "CAST(id AS DOUBLE) AS lat")
+        return sj.spatial_join(pts, sj.PolygonIndex.from_fixture(
+            fixtures.POLYGONS), how="left", pt_id_col="pt_id")
+
+    fp = checkpoint.lineage_fingerprint
+    assert fp(build()) == fp(build())
+
+
+def test_overwritten_tile_falls_back_to_anti_join(spark, pages_src, tmp_path):
+    """A tile another lineage overwrote is no longer this lineage's: the
+    next call rewrites exactly that tile and skips the rest."""
+    path = str(tmp_path / "tiles")
+    df = _tiles_from(spark, pages_src)
+    r1 = checkpoint.checkpointed_write(df, path, "cell_r5")
+    tile = sorted(checkpoint.read_manifest(path))[0]
+    other = df.where(F.col("cell_r5") == tile).withColumn(
+        "lon", F.col("lon") + 0.0)
+    assert checkpoint.checkpointed_write(other, path, "cell_r5")["written"] == 1
+
+    r3 = checkpoint.checkpointed_write(_tiles_from(spark, pages_src), path,
+                                       "cell_r5")
+    assert (r3["written"], r3["skipped"]) == (1, r1["written"] - 1)
+    assert r3["rows"] == checkpoint.read_manifest(path)[tile]["rows"]
+    assert {e["lineage"] for e in checkpoint.read_manifest(path).values()} \
+        == {r1["lineage"]}
+    assert spark.read.parquet(path).count() == r1["rows"]
+    # the lineage's tile set is whole again: the next resume runs no job
+    rebuilt = _tiles_from(spark, pages_src)
+    r4, jobs = _jobs_during(spark, lambda: checkpoint.checkpointed_write(
+        rebuilt, path, "cell_r5"))
+    assert (r4["written"], jobs) == (0, 0)
+
+
+def test_prune_stale_on_full_skip(spark, pages_src, tmp_path):
+    """prune_stale=True still removes tiles a superseded lineage left
+    behind when the call itself skips everything without a job."""
+    path = str(tmp_path / "tiles")
+    df = _tiles_from(spark, pages_src)
+    checkpoint.checkpointed_write(df, path, "cell_r5")
+    all_tiles = set(checkpoint.read_manifest(path))
+    keep = sorted(all_tiles)[: len(all_tiles) // 2]
+    checkpoint.checkpointed_write(
+        df.where(F.col("cell_r5").isin(keep)), path, "cell_r5")
+    assert set(checkpoint.read_manifest(path)) == all_tiles
+
+    rebuilt = _tiles_from(spark, pages_src).where(F.col("cell_r5").isin(keep))
+    r, jobs = _jobs_during(spark, lambda: checkpoint.checkpointed_write(
+        rebuilt, path, "cell_r5", prune_stale=True))
+    assert jobs == 0
+    assert (r["written"], r["skipped"]) == (0, len(keep))
+    assert r["pruned"] == len(all_tiles) - len(keep)
+    assert set(checkpoint.read_manifest(path)) == set(keep)
+    assert {r[0] for r in spark.read.parquet(path)
+            .select("cell_r5").distinct().collect()} == set(keep)
+
+
+def test_fresh_write_one_file_per_tile(spark, assigned, tmp_path):
+    path = str(tmp_path / "tiles")
+    df = assigned.select("url", "lon", "lat", "cell_r5")
+    r = checkpoint.checkpointed_write(df, path, "cell_r5")
+    parts = [d for d in os.listdir(path) if d.startswith("cell_r5=")]
+    assert len(parts) == r["written"]
+    for d in parts:
+        files = [f for f in os.listdir(os.path.join(path, d))
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, d
+
+
+def test_checkpointed_write_rejects_table_identifier(spark, assigned,
+                                                     tmp_path, monkeypatch):
+    """The manifest is a file next to the tiles, so a catalog table is
+    refused up front: no job runs and no directory named after the
+    table appears."""
+    monkeypatch.chdir(tmp_path)
+    df = assigned.select("url", "cell_r5")
+
+    def reject():
+        with pytest.raises(ValueError, match="filesystem path"):
+            checkpoint.checkpointed_write(df, "local.db.tiles", "cell_r5")
+
+    _, jobs = _jobs_during(spark, reject)
+    assert jobs == 0
+    assert os.listdir(tmp_path) == []
 
 
 # ------------------------------------------------------ catalog backend

@@ -55,7 +55,8 @@ def main() -> None:
 
     spark = get_spark("ab-refine")
     spark.sparkContext.setLogLevel("ERROR")
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cores = os.environ.get("SPARK_GRAFT_CPUS",
+                           str(len(os.sched_getaffinity(0))))
 
     # warm both arms (codegen compile / python-worker pool spawn are
     # one-time costs that must not land inside either timed series)

@@ -20,7 +20,8 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", type=int, default=100_000)
     ap.add_argument("--pages-path", default=None,
-                    help="existing pages parquet (else synthesize --pages rows)")
+                    help="existing pages parquet, one row per url "
+                         "(else synthesize --pages rows)")
     ap.add_argument("--out", required=True)
     ap.add_argument("--partition-res", type=int, default=5)
     args = ap.parse_args()
@@ -45,7 +46,9 @@ def main() -> None:
     pts = geoparse(pg).where("lon IS NOT NULL")
     assigned = tiling.assign_tiles(pts)
     idx = sj.PolygonIndex.from_fixture(fixtures.POLYGONS)
-    joined = sj.spatial_join(assigned, idx, how="left")
+    # url is the pages table's key: joining back on it keeps the plan
+    # free of a checkpointed temp id, so a re-run can resume
+    joined = sj.spatial_join(assigned, idx, how="left", pt_id_col="url")
 
     cell_col = f"cell_r{args.partition_res}"
     # prune_stale=True: this job OWNS args.out exclusively, so tiles
