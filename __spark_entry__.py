@@ -162,13 +162,15 @@ def q_spatial_join_within_sql() -> str:
 
 
 def q_spatial_join_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same join with the Arrow pandas refine FORCED (the path auto
-    mode reserves for ring sets too large for a codegen CASE) — both
+    """Same join with the banded edge refine FORCED (the path auto
+    mode takes for ring sets too large for a codegen CASE) — both
     refine implementations stay driver-verified against the one
-    oracle; they evaluate the identical IEEE crossing formula."""
+    oracle; they evaluate the identical IEEE crossing formula. The
+    registry key keeps its old name (this entry once forced an Arrow
+    pandas refine)."""
     pts = _points(spark, sf_dir)
     return sj.spatial_join(pts, _poly_index(), how="inner",
-                           refine="arrow").select("pt_id", "poly_id")
+                           refine="edges").select("pt_id", "poly_id")
 
 
 def q_spatial_join_arrow_sql() -> str:
@@ -246,9 +248,9 @@ def _diamond_layer(spark: SparkSession, n: int = _BIG_N_POLYS) -> DataFrame:
 def q_spatial_join_big(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LARGE-polygon-layer join path (sjoin semantics for layers
     the reference loads via rtree, vectorattrs/__init__.py:1301-1303,
-    but too big for a driver index): distributed WKB cover
-    (mapInPandas) -> cell hash join -> salted COGROUPED ray-cast
-    refine, rings arriving with the candidate batch. Nothing is ever
+    but too big for a driver index): one distributed polygon pass
+    (mapInArrow) emits the WKB cover and edge table -> cell hash join
+    -> banded edge join + crossing-parity count. Nothing is ever
     collected; a 10M-parcel layer runs the same plan."""
     pts = _points(spark, sf_dir)
     # slim output: this projection discards everything the payload

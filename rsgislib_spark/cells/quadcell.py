@@ -245,13 +245,12 @@ def adaptive_cover_res(lon_min: float, lat_min: float, lon_max: float,
     This is the engine's analog of the reference choosing a tile size
     (create_tiles width/height, python/src/imageutils.cpp:2061): small
     polygons index at fine res (selective join key), continent-sized
-    ones at coarse res (bounded explode fan-out).
+    ones at coarse res (bounded explode fan-out). Scalars or arrays.
     """
-    width = (lon_max - lon_min) % 360.0 or 360.0
-    height = max(lat_max - lat_min, 1e-9)
-    for res in range(hi, lo - 1, -1):
+    w = np.mod(np.subtract(lon_max, lon_min), 360.0)
+    w, h = np.where(w == 0.0, 360.0, w), np.maximum(np.subtract(lat_max, lat_min), 1e-9)
+    out = np.full(np.shape(w), lo)  # the finest res that fits wins
+    for res in range(lo + 1, hi + 1):
         n = 1 << res
-        cells = (width / (360.0 / n) + 1) * (height / (180.0 / n) + 1)
-        if cells <= max_cells:
-            return res
-    return lo
+        out = np.where((w / (360.0 / n) + 1) * (h / (180.0 / n) + 1) <= max_cells, res, out)
+    return int(out) if out.ndim == 0 else out

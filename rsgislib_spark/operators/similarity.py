@@ -7,8 +7,8 @@ coarse quantization: assign vectors to the nearest of k centroids and
 probe only matching (or adjacent) cells — the standard
 inverted-file ANN layout re-expressed as a Spark equi-join.
 
-Dot products run in two tiers, mirroring spatial_join's refine
-dispatch (codegen CASE vs Arrow UDF):
+Dot products run in two tiers (cf. spatial_join's refine dispatch,
+codegen CASE below codegen_max_edges):
 
 1. Column-vs-column and SMALL fixed-matrix dots are UNROLLED
    fixed-dim arithmetic (``v[0]*c0 + v[1]*c1 + ...``) — pure

@@ -8,48 +8,255 @@ dominates the web-scale workload (pages are points).
 
 Plan shape (SURVEY.md §3 EP3):
 
-  pages ──(codegen)── cell id at res r ─┐
-                                        ├─ hash join on cell ── bbox
-  polys ── cover cells (numpy, driver) ─┘    prefilter (codegen) ──
-       ray-cast refine (Arrow-batched pandas UDF) ── how-semantics
+  points ──(codegen)── cell id per res ──┐
+                                         ├─ hash join on cell ── bbox
+  polygons ── polygon pass ──── cover ───┘   prefilter ── band, slab
+                   └─────────── edges ────── hash join on (poly_id,
+      band, slab) ── crossing test (codegen) ── count per (pt_id,
+      poly_id), odd count = inside ── how-semantics
 
-Scale notes (the 100 TB story):
-- The polygon side is broadcast when its exploded cover is small
-  (< ``broadcast_max_cover`` rows) — no shuffle at all: the join is a
-  map-side BroadcastHashJoin and the refine is a mapPartitions-shaped
-  pandas UDF. This mirrors the reference loading the small layer
-  fully in memory (vectorattrs/__init__.py:1293) but distributes the
-  probe side.
-- For large polygon sets the cover is a DataFrame and Catalyst picks
-  a shuffle hash join on the cell key; dense cells (cities) are the
-  skew risk — see tiling.salt_hot_cells and AQE skew-join config in
-  session.py.
-- The refine UDF sees only candidates that already passed cell AND
-  bbox filters (both JVM-side), so Python touches a small fraction of
-  rows — the reference's filter-refine trick
-  (vectorutils/__init__.py:2197) turned into dataflow.
+The polygon pass is the only Python in the plan and runs once per
+layer: numpy over every polygon at once (``_cover_edges``), on the
+driver (``PolygonIndex``) or in one ``mapInArrow`` over a polygon
+DataFrame (``spatial_join_df``). It emits each polygon's cell cover
+and its edge table together. The exact test never crosses into
+Python — shipping candidates to Python workers costs Arrow
+serialization per row and workers competing with the executor JVMs
+("Accelerating Python UDFs in Vectorized Query Execution", CIDR
+2022). A candidate meets its polygon's edges in its latitude band in
+a JVM join, and the even-odd rule is a count. A polygon gets
+``ceil(non-horizontal edges / BAND_EDGES)`` bands; edges that span a
+band are further split into x-slabs, so a candidate meets a few dozen
+edges however large or spiky its polygon. Dimension-sized driver
+indexes (``codegen_max_edges``) refine with a codegen CASE over
+literal rings instead, in one WholeStageCodegen span.
+
+Both refines evaluate the IEEE crossing formula of
+predicates.point_in_rings / raycast_sql: bit-exact against the numpy
+and DuckDB oracles. Scale: the cover and the edges are broadcast
+while their row counts stay under a gate (no shuffle of the point
+side); larger layers take shuffled hash joins. Dense cells (cities)
+are the skew risk — see tiling.salt_hot_cells and AQE in session.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BooleanType
 
 from ..cells import quadcell
 from ..geometry import predicates, wkb
 
-_COVER_SCHEMA = pa.schema(
-    [("poly_id", pa.int64()), ("cell", pa.int64())]
-    + [(c, pa.float64()) for c in ("xmin", "ymin", "xmax", "ymax")])
-
 DEFAULT_RES = 6
+BAND_EDGES = 16  # edges per latitude band, and spanning edges per x-slab
 
+_COVER = pa.schema(
+    [("poly_id", pa.int64()), ("cell", pa.int64())]
+    + [(c, pa.float64()) for c in ("xmin", "ymin", "xmax", "ymax")]
+    + [(c, pa.int32()) for c in ("res", "nb", "ms")])  # nb bands, ms slabs
+_EDGES = pa.schema(
+    [("poly_id", pa.int64()), ("band", pa.int32()), ("slab", pa.int32())]
+    + [(c, pa.float64()) for c in ("x1", "y1", "x2", "y2")])
+_PASS = pa.unify_schemas([_COVER, _EDGES])  # both outputs of the pass
+
+# Bin of v in n equal bins over [lo, hi] (a latitude band, an x-slab),
+# op for op the numpy ``_bin``. n = 1 needs no division (and the ring
+# may have zero height: ANSI Spark raises on x / 0.0).
+_BIN_SQL = ("CAST(CASE WHEN {n} > 1 THEN LEAST(GREATEST(FLOOR(({v} - {lo})"
+            " * CAST({n} AS DOUBLE) / ({hi} - {lo})), 0), {n} - 1) ELSE 0 END"
+            " AS INT)")
+# point_in_rings' crossing test. y2 - y1 is never 0: the pass drops
+# horizontal edges, and distinct doubles never subtract to zero.
+_CROSS_SQL = ("((y1 > _y) <> (y2 > _y))"
+              " AND _x < (x2 - x1) * (_y - y1) / (y2 - y1) + x1")
+# a parity row: an edge far right spanning every latitude, so every
+# candidate of its (band, slab) counts it (finite: the formula is exact)
+_SURE = 1e300
+
+# covers and edge tables above this many rows are joined by shuffled
+# hash instead of broadcast (~48 B/row -> ~190 MB of broadcast at the
+# cap, inside the "few hundred MB" comfort zone of guide 3.1).
+_BROADCAST_MAX_ROWS = 4_000_000
+
+
+# ------------------------------------------------------ polygon pass
+
+def _runs(counts: np.ndarray):
+    """Owner index and offset within the run, for runs of ``counts``."""
+    owner = np.repeat(np.arange(len(counts)), counts)
+    return owner, np.arange(len(owner)) - np.repeat(np.cumsum(counts) - counts, counts)
+
+
+def _bin(v, lo, hi, n) -> np.ndarray:
+    """numpy twin of ``_BIN_SQL``. Monotone in v: bin(a) < bin(b)
+    implies a < b, so an edge listed in bands band(ylo)..band(yhi)
+    meets every point with ylo <= lat < yhi."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        b = np.floor((v - lo) * n.astype(np.float64) / (hi - lo))
+    return np.where(n > 1, np.clip(b, 0, n - 1), 0).astype(np.int64)
+
+
+def _cover_edges(pid, xy, ring_len, poly_rings, res, max_cells):
+    """Cell cover and edge table of a polygon set, in numpy.
+
+    pid: (P,) ids; xy: (V, 2) vertices of every ring, polygon after
+    polygon; ring_len: vertices per ring; poly_rings: rings per
+    polygon. Rings come antimeridian-unwrapped (bbox xmax > 180 marks
+    the polygon). ``res`` None picks quadcell.adaptive_cover_res per
+    polygon. Cover cells are exactly quadcell.cover_bbox's.
+
+    Returns (res per polygon, cover table, edge table). Every
+    non-horizontal edge is listed in each band its y-span touches: in
+    its end bands as a row every candidate of the band tests (slab
+    -1); in the bands it spans (it crosses every line of them, since
+    the band is monotone) only for the slabs its x-range in the band
+    may reach. Slabs it is surely left of skip it; for slabs it is
+    surely right of it is counted in a parity row. The x-range uses
+    margins far above rounding, so "surely" is exact.
+    """
+    pid = np.asarray(pid, np.int64)
+    n_poly = len(pid)
+    ring_len = np.asarray(ring_len, np.int64)
+    owner = np.repeat(np.repeat(np.arange(n_poly), poly_rings), ring_len)
+    poly_len = np.bincount(owner, minlength=n_poly)
+    x, y = xy[:, 0], xy[:, 1]
+    vstart = np.cumsum(poly_len) - poly_len
+    xmin, xmax = np.minimum.reduceat(x, vstart), np.maximum.reduceat(x, vstart)
+    ymin, ymax = np.minimum.reduceat(y, vstart), np.maximum.reduceat(y, vstart)
+    res_p = (np.asarray(quadcell.adaptive_cover_res(
+        xmin, ymin, xmax, ymax, max_cells=max_cells), np.int64)
+        if res is None else np.full(n_poly, res, np.int64))
+
+    # cover: the cover_bbox box of cells, x-major, wrapping past 2^res
+    n = np.left_shift(1, res_p)
+
+    def grid(v, half):
+        return np.clip(np.floor((v + half) * n / (2 * half)), 0, n - 1).astype(np.int64)
+
+    east = np.where(xmax > 180.0, xmax - 360.0, xmax)
+    gx0, gx1, gy0, gy1 = (grid(xmin, 180.0), grid(east, 180.0),
+                          grid(ymin, 90.0), grid(ymax, 90.0))
+    nx = np.where(xmin > east, n - gx0 + gx1 + 1, gx1 - gx0 + 1)
+    ny = gy1 - gy0 + 1
+    c, j = _runs(nx * ny)
+    cells = quadcell.pack(res_p[c], (gx0[c] + j // ny[c]) % n[c], gy0[c] + j % ny[c])
+
+    # (edge, band) pairs of consecutive vertices of one ring
+    last = np.zeros(max(len(x) - 1, 0), bool)
+    last[(np.cumsum(ring_len) - 1)[:-1]] = True
+    e = np.flatnonzero(~last & (y[:-1] != y[1:]))
+    nb = np.maximum(1, -(-np.bincount(owner[e], minlength=n_poly) // BAND_EDGES))
+    ylo, yhi = np.minimum(y[e], y[e + 1]), np.maximum(y[e], y[e + 1])
+    lo, hi = (_bin(v, ymin[owner[e]], ymax[owner[e]], nb[owner[e]]) for v in (ylo, yhi))
+    k, j = _runs(hi - lo + 1)
+    e, band, span = e[k], lo[k] + j, (lo[k] + j > lo[k]) & (lo[k] + j < hi[k])
+    p = owner[e]
+    # ms slabs per polygon: ~BAND_EDGES spanning edges per slab
+    ms = np.where(xmax > xmin, np.maximum(1, -(-np.bincount(
+        p[span], minlength=n_poly) // (nb * BAND_EDGES))), 1)
+    s = np.flatnonzero(span)
+    ps, bs, ex, ey = p[s], band[s], x[e[s]], y[e[s]]
+    dx, dy, h = x[e[s] + 1] - ex, y[e[s] + 1] - ey, ymax[ps] - ymin[ps]
+    m = 1e-9 * (np.abs(ymin[ps]) + np.abs(ymax[ps]) + 1.0)
+    ya = np.maximum(ylo[k][s], ymin[ps] + bs * h / nb[ps] - m)
+    yb = np.minimum(yhi[k][s], ymin[ps] + (bs + 1) * h / nb[ps] + m)
+    xa, xb = ex + (ya - ey) * dx / dy, ex + (yb - ey) * dx / dy
+    mu = 1e-9 * (np.abs(ex) + np.abs(ex + dx) + 1.0)
+    ka = _bin(np.minimum(xa, xb) - mu, xmin[ps], xmax[ps], ms[ps])
+    kb = _bin(np.maximum(xa, xb) + mu, xmin[ps], xmax[ps], ms[ps])
+    r, jr = _runs(kb - ka + 1)
+    # parity rows: (band, slab) cells with an odd count of k < ka
+    base = np.cumsum(nb * ms) - nb * ms
+    first, n_cell = base[ps] + bs * ms[ps], int((nb * ms).sum())
+    odd = np.flatnonzero(np.cumsum(
+        np.bincount(first, minlength=n_cell + 1)
+        - np.bincount(first + ka, minlength=n_cell + 1))[:n_cell] % 2)
+    op = np.searchsorted(base, odd, side="right") - 1
+    ob, ok = np.divmod(odd - base[op], ms[op])
+
+    t = np.concatenate([np.flatnonzero(~span), s[r]])  # tested pairs
+    sure = np.full(len(odd), _SURE)
+    cover = dict(poly_id=pid[c], cell=cells, xmin=xmin[c], ymin=ymin[c],
+                 xmax=xmax[c], ymax=ymax[c], res=res_p[c], nb=nb[c], ms=ms[c])
+    edges = dict(
+        poly_id=np.concatenate([pid[p[t]], pid[op]]),
+        band=np.concatenate([band[t], ob]),
+        slab=np.concatenate([np.full(len(t) - len(r), -1),
+                             np.where(ms[ps[r]] > 1, ka[r] + jr, -1), ok]),
+        x1=np.concatenate([x[e[t]], sure]), y1=np.concatenate([y[e[t]], -sure]),
+        x2=np.concatenate([x[e[t] + 1], sure]), y2=np.concatenate([y[e[t] + 1], sure]))
+    return (res_p, pa.Table.from_pydict(cover, _COVER),
+            pa.Table.from_pydict(edges, _EDGES))
+
+
+def _pass_batch(batch: pa.RecordBatch, res, max_cells) -> pa.Table:
+    """The polygon pass over one Arrow batch of (poly_id, WKB): cover
+    rows then edge rows, in ``_PASS``.
+
+    Single-ring little-endian polygons no wider than 180° are decoded
+    in bulk over the batch's joined buffer: header fields gathered by
+    fancy indexing, coordinates viewed as ``<f8``. Holes,
+    multipolygons and wide rings take wkb.wkb_to_rings +
+    predicates.unwrap_antimeridian. Both feed one ``_cover_edges``.
+    """
+    pid = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+    geom = batch.column(1)
+    otype = np.int64 if pa.types.is_large_binary(geom.type) else np.int32
+    off = np.frombuffer(geom.buffers()[1], otype)[
+        geom.offset:geom.offset + len(geom) + 1].astype(np.int64)
+    data = (np.frombuffer(geom.buffers()[2], np.uint8)
+            if geom.buffers()[2] is not None else np.zeros(0, np.uint8))
+    start, size = off[:-1], np.diff(off)
+    head = np.zeros((len(pid), 13), np.uint8)
+    ok = size >= 13
+    head[ok] = data[start[ok, None] + np.arange(13)]
+    gtype, nrings, npts = head[:, 1:].copy().view("<u4").astype(np.int64).T
+    ok &= ((head[:, 0] == 1) & (gtype == wkb.WKB_POLYGON) & (nrings == 1)
+           & (npts > 0) & (size == 13 + 16 * npts))
+    s = np.flatnonzero(ok)
+    v, j = _runs(16 * npts[s])
+    xy = data[start[s][v] + 13 + j].view("<f8").reshape(-1, 2)
+    vs = np.cumsum(npts[s]) - npts[s]
+    wide = np.maximum.reduceat(xy[:, 0], vs) - np.minimum.reduceat(xy[:, 0], vs) > 180.0
+    ok[s[wide]] = False
+    xy, s = xy[~np.repeat(wide, npts[s])], s[~wide]
+    rest = np.flatnonzero(~ok)
+    rings = [predicates.unwrap_antimeridian(wkb.wkb_to_rings(geom[i].as_py()))
+             for i in rest]
+    flat = [r for rs in rings for r in rs]
+    _, cover, edges = _cover_edges(
+        np.concatenate([pid[s], pid[rest]]),
+        np.concatenate([xy] + flat) if flat else xy,
+        np.concatenate([npts[s], [len(r) for r in flat]]).astype(np.int64),
+        np.concatenate([np.ones(len(s), np.int64), [len(rs) for rs in rings]]).astype(np.int64),
+        res, max_cells)
+    return pa.concat_tables([cover, edges], promote_options="default")
+
+
+def _polygon_pass(polys: DataFrame, res, max_cells, id_col, geom_col) -> DataFrame:
+    """Cover and edge rows of a polygon DataFrame: one mapInArrow over
+    (id cast to BIGINT, WKB). Nothing reaches the driver."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    def run(batches):
+        for b in batches:
+            yield from _pass_batch(b, res, max_cells).to_batches()
+
+    return polys.select(F.col(id_col).cast("bigint"), geom_col).mapInArrow(
+        run, from_arrow_schema(_PASS))
+
+
+def _part(layer: DataFrame, schema: pa.Schema) -> DataFrame:
+    """The cover (``_COVER``: cell set) or edge (``_EDGES``: band set)
+    rows of a pass."""
+    return layer.where(f"{schema.names[1]} IS NOT NULL").select(*schema.names)
+
+
+# ---------------------------------------------------- driver index
 
 class PolygonIndex:
-    """Driver-side polygon set: rings + bbox + cell cover.
+    """Driver-side polygon set: rings + bbox + cell cover + edges.
 
     The analog of the reference's rtree
     (vectorattrs/__init__.py:1283): a structure that maps a point's
@@ -74,17 +281,16 @@ class PolygonIndex:
         for p in polys:
             rings = [np.asarray(r, dtype=np.float64) for r in p["rings"]]
             bbox = predicates.ring_bbox(rings)
-            unwrapped = bbox[2] > 180.0
-            if res is None:
-                xmin, ymin, xmax, ymax = bbox
-                pres = quadcell.adaptive_cover_res(
-                    xmin, ymin, xmax, ymax, max_cells=max_cells)
-            else:
-                pres = res
-            self.polys.append(
-                dict(poly_id=int(p["poly_id"]), rings=rings, bbox=bbox,
-                     unwrapped=unwrapped, res=pres)
-            )
+            self.polys.append(dict(poly_id=int(p["poly_id"]), rings=rings,
+                                   bbox=bbox, unwrapped=bbox[2] > 180.0))
+        flat = [r for p in self.polys for r in p["rings"]]
+        res_p, self._cover, self._edges = _cover_edges(
+            [p["poly_id"] for p in self.polys],
+            np.concatenate(flat) if flat else np.zeros((0, 2)),
+            [len(r) for r in flat], [len(p["rings"]) for p in self.polys],
+            res, max_cells)
+        for p, r in zip(self.polys, res_p.tolist()):
+            p["res"] = r
 
     @property
     def res_set(self) -> list:
@@ -107,8 +313,8 @@ class PolygonIndex:
 
         Collecting the dimension side is the broadcast pattern — the
         polygon layer is the small side by design (north star: pages
-        >> polygons). For huge polygon layers, pre-explode the cover
-        into a table instead (cover_rows as a DataFrame join).
+        >> polygons). For huge polygon layers use spatial_join_df,
+        which runs the same polygon pass distributed.
         """
         rows = polygons.select(id_col, geom_col).collect()
         polys = []
@@ -117,57 +323,26 @@ class PolygonIndex:
             polys.append(dict(poly_id=r[id_col], rings=rings))
         return cls(polys, res=res)
 
-    # -------------------------------------------------------- cover
+    # -------------------------------------------------------- tables
     def cover_rows(self) -> list:
         """(poly_id, cell, xmin, ymin, xmax, ymax) candidate rows;
         each polygon's cells are at ITS resolution (cell ids encode
         the res, so mixed-res rows coexist in one table)."""
-        out = []
-        for p in self.polys:
-            xmin, ymin, xmax, ymax = p["bbox"]
-            if xmax > 180.0:  # unwrapped antimeridian bbox → wrap signature
-                cells = quadcell.cover_bbox(xmin, ymin, xmax - 360.0, ymax, p["res"])
-            else:
-                cells = quadcell.cover_bbox(xmin, ymin, xmax, ymax, p["res"])
-            for c in cells.tolist():
-                out.append((p["poly_id"], c, xmin, ymin, xmax, ymax))
-        return out
+        return list(zip(*(self._cover.column(i).to_pylist() for i in range(6))))
 
+    # The frames below are local relations built from Arrow, not from
+    # a Python list (an RDD-backed leaf), so their rows are part of the
+    # plan: a checkpoint lineage fingerprint identifies them by content
+    # and a restarted job that rebuilds them can resume.
     def cover_df(self, spark) -> DataFrame:
-        """The cover as a local relation. It is built from Arrow, not
-        from a Python list (an RDD-backed leaf), so its rows are part
-        of the plan: a checkpoint lineage fingerprint identifies it by
-        content and a restarted job that rebuilds it can resume."""
-        cols = list(zip(*self.cover_rows())) or [()] * len(_COVER_SCHEMA)
-        return spark.createDataFrame(pa.table(cols, schema=_COVER_SCHEMA))
+        return spark.createDataFrame(self._cover)
 
-    # ------------------------------------------------------- refine
-    def refine_udf(self):
-        """Arrow-batched pandas UDF: (poly_id, lon, lat) → inside.
+    def edges_df(self, spark) -> DataFrame:
+        return spark.createDataFrame(self._edges)
 
-        Candidates are grouped by poly_id inside each Arrow batch and
-        tested vectorized (point_in_rings broadcasts points x edges).
-        The crossing formula is IEEE-identical to the SQL oracle
-        (predicates.raycast_sql).
-        """
-        rings_by_id = {p["poly_id"]: (p["rings"], p["unwrapped"]) for p in self.polys}
-
-        @F.pandas_udf(BooleanType())
-        def _inside(poly_id: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-            out = np.zeros(len(poly_id), dtype=bool)
-            pid = poly_id.to_numpy()
-            px = lon.to_numpy(dtype=np.float64)
-            py = lat.to_numpy(dtype=np.float64)
-            for the_id in np.unique(pid):
-                rings, unwrapped = rings_by_id[int(the_id)]
-                m = pid == the_id
-                x = px[m]
-                if unwrapped:
-                    x = np.where(x < 0.0, x + 360.0, x)
-                out[m] = predicates.point_in_rings(x, py[m], rings)
-            return pd.Series(out)
-
-        return _inside
+    def ids_df(self, spark) -> DataFrame:
+        return spark.createDataFrame(pa.table({"poly_id": pa.array(
+            [p["poly_id"] for p in self.polys], pa.int64())}))
 
     def total_edges(self) -> int:
         return sum(len(r) - 1 for p in self.polys for r in p["rings"])
@@ -175,35 +350,125 @@ class PolygonIndex:
     def refine_expr(self, lon: str, lat: str, poly_id_col: str = "poly_id"):
         """Pure-codegen ray-cast refine: one CASE over per-polygon
         crossing expressions (predicates.raycast_sql — the SAME IEEE
-        formula as refine_udf and the DuckDB oracle, so swapping
-        refine paths is bit-exact).
-
-        Why it exists: the Arrow refine ships every candidate row to a
-        Python worker. At high core counts those workers compete with
-        the executor JVMs for memory bandwidth — measurably hurting
-        the N→4N scaling the north rule grades. For dimension-sized
-        layers (bounded total edge count) the whole filter-refine
-        pipeline instead stays inside one WholeStageCodegen span:
-        zero Python processes in the hot path.
+        formula as the edge refine and the DuckDB oracle, so swapping
+        refine paths is bit-exact). For dimension-sized layers the
+        whole filter-refine pipeline stays in one WholeStageCodegen
+        span; a giant CASE would blow past the JIT method limit, so
+        larger layers take the edge refine.
         """
         lon, lat = f"`{lon}`", f"`{lat}`"  # names, not expressions
         if not self.polys:
             # zero WHEN clauses would render "CASE ELSE false END",
             # which the SQL parser rejects; an empty index matches
-            # nothing (the Arrow refine's behavior on no candidates)
+            # nothing
             return F.lit(False)
         whens = []
         for p in self.polys:
             x = lon
             if p["unwrapped"]:
-                # same wrap rule as refine_udf: unwrapped polys test
-                # western-hemisphere points at lon+360
+                # same wrap rule as the edge refine: unwrapped polys
+                # test western-hemisphere points at lon+360
                 x = (f"(CASE WHEN {lon} < CAST(0.0 AS DOUBLE) "
                      f"THEN {lon} + CAST(360.0 AS DOUBLE) ELSE {lon} END)")
             cond = predicates.raycast_sql(x, lat, p["rings"])
             whens.append(f"WHEN {poly_id_col} = {p['poly_id']} THEN {cond}")
         return F.expr("CASE " + " ".join(whens) + " ELSE false END")
 
+
+# ------------------------------------------------------ shared core
+
+_HOWS = ("inner", "left", "right", "left_semi")
+
+
+def _tag(points: DataFrame, pt_id_col: str | None, needed: bool):
+    """(points, id column, temp columns). Without a natural key a temp
+    monotonically_increasing_id is MATERIALIZED by an eager
+    localCheckpoint, so no branch of the self-join sees other ids;
+    unlike persist(), whose evicted partitions silently RECOMPUTE with
+    fresh ids, a lost checkpoint partition fails the job loudly."""
+    if pt_id_col is not None or not needed:
+        return points, pt_id_col, []
+    tagged = points.withColumn("__sj_pt_id", F.monotonically_increasing_id())
+    return tagged.localCheckpoint(), "__sj_pt_id", ["__sj_pt_id"]
+
+
+def _gate(df: DataFrame, rows: int, max_rows: int) -> DataFrame:
+    """Broadcast a polygon-side table up to ``max_rows``, else a
+    shuffled hash join (its per-partition build side is rows/N;
+    measured 1.8x faster than sort-merge on the cover shape). Counts,
+    not Catalyst's estimates: a point side estimated from its
+    column-pruned source would otherwise be the one broadcast."""
+    return F.broadcast(df) if rows <= max_rows else df.hint("shuffle_hash")
+
+
+def _candidates(pts: DataFrame, cover: DataFrame, res_set: list,
+                lon: str, lat: str) -> DataFrame:
+    """Points ⋈ cover on one probe cell per resolution in use (cell
+    ids encode the res, so one equi-join key serves every
+    granularity; the explode fans out the PROBE side only), then the
+    codegen bbox prefilter."""
+    if len(res_set) == 1:
+        cell = quadcell.cell_col(lon, lat, res_set[0])
+    else:
+        cell = F.explode(F.array(*[quadcell.cell_col(lon, lat, r) for r in res_set]))
+    x, y = F.col(lon), F.col(lat)
+    in_y = (y >= F.col("ymin")) & (y <= F.col("ymax"))
+    return pts.withColumn("cell", cell).join(cover, "cell").where(
+        (x >= F.col("xmin")) & (x <= F.col("xmax")) & in_y
+        # antimeridian bbox: xmax>180 means the wrapped-west part is
+        # also in range; re-check lon+360
+        | ((F.col("xmax") > 180.0) & (x + 360.0 >= F.col("xmin"))
+           & (x + 360.0 <= F.col("xmax")) & in_y))
+
+
+def _edge_pairs(cand: DataFrame, edges: DataFrame, pt_id: str,
+                lon: str, lat: str) -> DataFrame:
+    """The edge refine: (pt_id, poly_id) pairs whose candidate crosses
+    an odd number of its polygon's edges — the band's rows of slab -1
+    and of the candidate's own slab (see ``_cover_edges``). Unwrapped
+    antimeridian polygons test western points at lon+360."""
+    x = F.when((F.col("xmax") > 180.0) & (F.col(lon) < 0.0),
+               F.col(lon) + 360.0).otherwise(F.col(lon))
+    band = _BIN_SQL.format(v=f"`{lat}`", lo="ymin", hi="ymax", n="nb")
+    slab = _BIN_SQL.format(v="_x", lo="xmin", hi="xmax", n="ms")
+    probe = cand.select(pt_id, "poly_id", x.alias("_x"), F.col(lat).alias("_y"),
+                        F.expr(band).alias("band"), "xmin", "xmax", "ms")
+    probe = probe.select(pt_id, "poly_id", "_x", "_y", "band", F.explode(F.expr(
+        f"CASE WHEN ms > 1 THEN array(-1, {slab}) ELSE array(-1) END")).alias("slab"))
+    return (probe.join(edges, ["poly_id", "band", "slab"]).where(F.expr(_CROSS_SQL))
+            .groupBy(pt_id, "poly_id").count()
+            .where("count % 2 = 1").select(pt_id, "poly_id"))
+
+
+def _attach(points: DataFrame, how: str, pt_id: str | None, temp: list,
+            ids: DataFrame | None, pairs: DataFrame | None = None,
+            matched: DataFrame | None = None) -> DataFrame:
+    """how-semantics over the refined matches: ``matched`` rows carry
+    the payload (codegen refine), ``pairs`` only (pt_id, poly_id);
+    ``ids`` lists every polygon, for how='right'. Non-inner hows join
+    back on the ONE id column (the reference's temp-unique-id trick,
+    vectorutils/__init__.py:1585), never on payload columns (shuffle
+    keys of html/text, fan-out of duplicate rows, NULLs dropping
+    matched rows in a null-unsafe equi-join)."""
+    if matched is None and how in ("inner", "right"):
+        matched = points.join(pairs, pt_id)
+    if pairs is None and how != "inner":
+        pairs = matched.select(pt_id, "poly_id")
+    if how == "inner":
+        out = matched
+    elif how == "left_semi":
+        # matched ids only — dedupes polygon fan-out; LEFT SEMI keeps
+        # the probe side unshuffled wide (only the id is a join key)
+        out = points.join(pairs.select(pt_id).dropDuplicates([pt_id]),
+                          pt_id, "left_semi")
+    elif how == "left":
+        out = points.join(pairs, pt_id, "left")
+    else:  # right: every polygon id, matched points or nulls
+        out = ids.join(matched, "poly_id", "left")
+    return out.drop(*temp)
+
+
+# ------------------------------------------------------ entry points
 
 def spatial_join(points: DataFrame, index: PolygonIndex, how: str = "inner",
                  lon: str = "lon", lat: str = "lat",
@@ -220,178 +485,52 @@ def spatial_join(points: DataFrame, index: PolygonIndex, how: str = "inner",
     how='left_semi' → just the matched points, deduped
     (spatial_select_gp semantics, vectorutils/__init__.py:1585:
     tmp unique id + drop_duplicates).
+
+    refine: 'codegen' (a CASE over the literal rings), 'edges' (the
+    edge join) or 'auto' — codegen up to ``codegen_max_edges`` total
+    edges. Both evaluate the identical IEEE crossing formula.
+
+    pt_id_col: pass the layer's natural unique key (url, pt_id) — the
+    robust zero-cost path. Without one, the hows that join back (and
+    the edge refine, which counts per point) tag the points with a
+    materialized temp id (see ``_tag``).
     """
-    if how not in {"inner", "left", "right", "left_semi"}:
-        raise ValueError(f"join_how must be inner/left/right/left_semi, got {how}")
-
+    if how not in _HOWS or refine not in ("auto", "codegen", "edges"):
+        raise ValueError(f"how must be one of {_HOWS} and refine one of "
+                         f"auto/codegen/edges, got {how!r}, {refine!r}")
     spark = points.sparkSession
-    # Non-inner hows rejoin matches to the input. The join-back key is
-    # ONE column (the reference's own temp-unique-id trick,
-    # vectorutils/__init__.py:1585) — never the full payload columns
-    # (html/text would become shuffle keys, duplicate rows would fan
-    # out multiplicatively, and a NULL column would make the
-    # null-unsafe equi-join drop matched rows).
-    #
-    # pt_id_col: pass the layer's natural unique key (url, pt_id) —
-    # the robust zero-cost path. Without one, a temp
-    # monotonically_increasing_id is generated; because the id is
-    # re-evaluated on BOTH sides of the self-join, the tagged frame is
-    # localCheckpoint'ed (eager): the ids are MATERIALIZED once, so a
-    # nondeterministically-ordered upstream cannot assign different
-    # ids per branch, and — unlike persist(), whose evicted partitions
-    # silently RECOMPUTE with fresh ids — a lost checkpoint partition
-    # fails the job loudly. The checkpointed blocks are released by
-    # the ContextCleaner when the frame goes out of scope (no
-    # explicit unpersist needed across the lazy output's lifetime).
-    tagged_persisted = False
-    if pt_id_col is not None:
-        pt_id = pt_id_col
-    else:
-        pt_id = "__sj_pt_id"
-        if how != "inner":
-            points = points.withColumn(
-                pt_id, F.monotonically_increasing_id()).localCheckpoint()
-            tagged_persisted = True
-    cover = index.cover_df(spark)
-    if len(index.cover_rows()) <= broadcast_max_cover:
-        cover = F.broadcast(cover)
-
-    # one probe cell per resolution in use (cell ids encode the res,
-    # so a single equi-join key serves every granularity); explode is
-    # a |res_set|-fold fan-out of the PROBE side only, still a plain
-    # hash join
-    res_set = index.res_set
-    if len(res_set) == 1:
-        pts = points.withColumn("cell", quadcell.cell_col(lon, lat, res_set[0]))
-    else:
-        pts = points.withColumn(
-            "cell",
-            F.explode(F.array(*[quadcell.cell_col(lon, lat, r)
-                                for r in res_set])),
-        )
-    cand = (
-        pts.join(cover, "cell")
-        .where(
-            (F.col(lon) >= F.col("xmin")) & (F.col(lon) <= F.col("xmax"))
-            & (F.col(lat) >= F.col("ymin")) & (F.col(lat) <= F.col("ymax"))
-            # antimeridian bbox: xmax>180 means the wrapped-west part
-            # is also in range; re-check lon+360
-            | ((F.col("xmax") > 180.0) & (F.col(lon) + 360.0 >= F.col("xmin"))
-               & (F.col(lon) + 360.0 <= F.col("xmax"))
-               & (F.col(lat) >= F.col("ymin")) & (F.col(lat) <= F.col("ymax")))
-        )
-    )
-    # refine path: codegen CASE for dimension-sized layers (keeps the
-    # scan→join→refine pipeline in one WholeStageCodegen span, no
-    # Python workers), Arrow pandas UDF for larger ring sets (a giant
-    # expression would blow past the JIT method limit and fall back
-    # to slower interpreted eval). Both evaluate the identical IEEE
-    # crossing formula — gated queries verify either path bit-exact
-    # vs the DuckDB oracle.
-    if refine not in {"auto", "codegen", "arrow"}:
-        raise ValueError(f"refine must be auto/codegen/arrow, got {refine}")
     use_codegen = refine == "codegen" or (
         refine == "auto" and index.total_edges() <= codegen_max_edges)
+    points, pt_id, temp = _tag(points, pt_id_col, how != "inner" or not use_codegen)
+    cover = _gate(index.cover_df(spark), index._cover.num_rows, broadcast_max_cover)
+    ids = index.ids_df(spark) if how == "right" else None
     if use_codegen:
-        inside_pred = index.refine_expr(lon, lat)
-    else:
-        inside = index.refine_udf()
-        inside_pred = inside(F.col("poly_id"), F.col(lon), F.col(lat))
-    matched = (
-        cand.where(inside_pred)
-        .drop("cell", "xmin", "ymin", "xmax", "ymax")
-    )
-
-    temp_cols = [pt_id] if tagged_persisted else []
-    if how == "inner":
-        return matched
-    if how == "left_semi":
-        # matched ids only — dedupes polygon fan-out without touching
-        # payload columns; LEFT SEMI keeps the probe side unshuffled
-        # wide (only the id survives to the join key)
-        hit_ids = matched.select(pt_id).dropDuplicates([pt_id])
-        return points.join(hit_ids, pt_id, "left_semi").drop(*temp_cols)
-    if how == "right":
-        ids = spark.createDataFrame(
-            [(p["poly_id"],) for p in index.polys], "poly_id BIGINT")
-        out_cols = [c for c in points.columns if c not in temp_cols]
-        return ids.join(matched.select(*out_cols, "poly_id"),
-                        "poly_id", "left")
-    # left: keep unmatched points with null poly_id; join back on the
-    # single id key (matched side carries only id + poly_id)
-    return (
-        points.join(matched.select(pt_id, "poly_id"), pt_id, "left")
-        .drop(*temp_cols)
-    )
-
-
-# poly_cover_df covers above this many rows are joined via shuffled
-# hash instead of broadcast (~48 B/row -> ~190 MB of broadcast at the
-# cap, inside the "few hundred MB" comfort zone of guide 3.1).
-_COVER_BROADCAST_MAX_ROWS = 4_000_000
+        matched = (_candidates(points, cover, index.res_set, lon, lat)
+                   .where(index.refine_expr(lon, lat)).drop(*_COVER.names[1:]))
+        return _attach(points, how, pt_id, temp, ids, matched=matched)
+    cand = _candidates(points.select(pt_id, lon, lat), cover, index.res_set, lon, lat)
+    edges = _gate(index.edges_df(spark), index._edges.num_rows, broadcast_max_cover)
+    return _attach(points, how, pt_id, temp, ids,
+                   pairs=_edge_pairs(cand, edges, pt_id, lon, lat))
 
 
 def poly_cover_df(polys: DataFrame, res: int | None = None,
                   max_cells: int = 8, id_col: str = "poly_id",
                   geom_col: str = "geometry") -> DataFrame:
     """DISTRIBUTED cell cover of a polygon DataFrame — the large-layer
-    twin of PolygonIndex.cover_rows (which collects to the driver).
+    twin of PolygonIndex.cover_rows: (poly_id, cell, xmin, ymin, xmax,
+    ymax, res), from the same polygon pass spatial_join_df runs.
 
     ``max_cells`` defaults to 8 here (vs PolygonIndex's 256): on this
-    path the cover is a SHUFFLED table, so its row count is the
-    dominant cost — cover_rows ~= |polys| * cells_per_poly of
-    (id, cell, bbox) rows written, shuffled, and joined. The finest
-    res under 256 put ~58 cells on every city-block polygon (5.8M
-    cover rows for a 100k layer, measured); at ~4-8 cells the cover
-    shrinks ~10x while the candidate set only grows by the bbox
-    overhang of one coarser cell — and every extra candidate is
-    removed by the CODEGEN bbox prefilter before the Python refine
-    ever sees it. At 10^12 pages x 10M polygons the 58-cell cover is
-    the job's largest shuffle; the 4-8-cell cover is noise.
-
-    mapInPandas over (poly_id, wkb): per polygon, decode rings,
-    antimeridian-unwrap, pick the adaptive resolution (res=None) and
-    emit (poly_id, cell, bbox, res) rows. Nothing reaches the driver;
-    a 10M-polygon parcel layer covers in one Arrow-batched pass.
-    xmax > 180 signals an unwrapped antimeridian bbox (same convention
-    as PolygonIndex)."""
-    from ..geometry import predicates as P
-
-    def gen(batches):
-        for pdf in batches:
-            pid_out, cell_out, bx = [], [], [[], [], [], []]
-            res_out = []
-            for pid, g in zip(pdf[id_col], pdf[geom_col]):
-                rings = P.unwrap_antimeridian(wkb.wkb_to_rings(bytes(g)))
-                xmin, ymin, xmax, ymax = P.ring_bbox(rings)
-                pres = (quadcell.adaptive_cover_res(
-                    xmin, ymin, xmax, ymax, max_cells=max_cells)
-                    if res is None else res)
-                if xmax > 180.0:
-                    cells = quadcell.cover_bbox(
-                        xmin, ymin, xmax - 360.0, ymax, pres)
-                else:
-                    cells = quadcell.cover_bbox(xmin, ymin, xmax, ymax, pres)
-                for c in cells.tolist():
-                    pid_out.append(pid)
-                    cell_out.append(c)
-                    for k, v in zip(bx, (xmin, ymin, xmax, ymax)):
-                        k.append(v)
-                    res_out.append(pres)
-            yield pd.DataFrame({
-                "poly_id": pd.Series(pid_out, dtype="int64"),
-                "cell": pd.Series(cell_out, dtype="int64"),
-                "xmin": pd.Series(bx[0], dtype="float64"),
-                "ymin": pd.Series(bx[1], dtype="float64"),
-                "xmax": pd.Series(bx[2], dtype="float64"),
-                "ymax": pd.Series(bx[3], dtype="float64"),
-                "res": pd.Series(res_out, dtype="int32"),
-            })
-
-    return polys.select(F.col(id_col).alias(id_col), geom_col).mapInPandas(
-        gen,
-        "poly_id BIGINT, cell BIGINT, xmin DOUBLE, ymin DOUBLE, "
-        "xmax DOUBLE, ymax DOUBLE, res INT")
+    path the cover may be a SHUFFLED table, so its row count is the
+    dominant cost. The finest res under 256 put ~58 cells on every
+    city-block polygon (5.8M cover rows for a 100k layer, measured);
+    at ~4-8 cells the cover shrinks ~10x while the candidate set only
+    grows by the bbox overhang of one coarser cell — removed by the
+    codegen bbox prefilter before the refine. xmax > 180 signals an
+    unwrapped antimeridian bbox (same convention as PolygonIndex)."""
+    layer = _polygon_pass(polys, res, max_cells, id_col, geom_col)
+    return _part(layer, _COVER).drop("nb", "ms")
 
 
 def spatial_join_df(points: DataFrame, polys: DataFrame,
@@ -399,32 +538,23 @@ def spatial_join_df(points: DataFrame, polys: DataFrame,
                     res: int | None = None, max_cells: int = 8,
                     id_col: str = "poly_id", geom_col: str = "geometry",
                     pt_id_col: str | None = None,
-                    salt: int = 8, refine_buckets: int = 64,
                     with_payload: bool = True) -> DataFrame:
     """Spatial join against a polygon DataFrame TOO LARGE TO COLLECT —
     the DataFrame-native path the reference's sjoin implies for
     arbitrary-size layers (vectorattrs/__init__.py:1301-1303).
 
     No driver collect anywhere:
-    1. cover = poly_cover_df (distributed, adaptive per-polygon res);
+    1. the polygon pass (one mapInArrow) emits the cover and the edge
+       table, materialized once by an eager localCheckpoint — no
+       CacheManager entry is left behind; one aggregate over it gives
+       the res probe set and the row counts of the broadcast gates;
     2. candidates = points ⋈ cover on the cell key + codegen bbox
        prefilter (the exact filter spatial_join uses);
-    3. refine = COGROUPED applyInPandas on (hash-bucket(poly_id),
-       salt): each group receives its bucket's polygon WKBs plus the
-       candidates for those polygons — rings travel with the batch,
-       never in a UDF closure, and each polygon is decoded once per
-       group. Bucketing (NOT per-polygon groups) keeps the group
-       count CONSTANT at refine_buckets*salt: per-group Python
-       overhead would otherwise scale with |polygons| and dominate
-       (measured 10x on a 100k-polygon layer). ``salt`` splits a hot
-       polygon's candidates across ``salt`` tasks (the polygon rows
-       are replicated salt-fold — KBs per task, vs a continent's
-       candidate list in ONE task);
+    3. the edge refine joins each candidate to its polygon's edges in
+       its band and slab and keeps odd crossing counts — no Python
+       sees a candidate;
     4. matched pairs are slim (pt_id, poly_id); payload joins back
        once on the id key (the spatial_join pt_id discipline).
-
-    The distinct-res probe set comes from one tiny aggregation over
-    the cover (≤ a dozen rows collected — a scalar, not the layer).
 
     with_payload=False (inner join + natural pt_id_col only) returns
     the slim (pt_id, poly_id) pair frame directly: for callers that
@@ -432,149 +562,30 @@ def spatial_join_df(points: DataFrame, polys: DataFrame,
     row-preserving identity (every matched id comes from points and
     the join key is unique there) and pure cost.
     """
-    if how not in {"inner", "left", "right", "left_semi"}:
-        raise ValueError(f"join_how must be inner/left/right/left_semi, got {how}")
+    if how not in _HOWS:
+        raise ValueError(f"how must be one of {_HOWS}, got {how!r}")
     if not with_payload and (how != "inner" or pt_id_col is None):
         raise ValueError("with_payload=False requires how='inner' and a "
                          "natural pt_id_col")
-
-    temp_id = pt_id_col is None
-    pt_id = pt_id_col if pt_id_col is not None else "__sj_pt_id"
-    if temp_id:
-        # eager localCheckpoint: ids materialized once (see
-        # spatial_join's note on id stability)
-        points = points.withColumn(
-            pt_id, F.monotonically_increasing_id()).localCheckpoint()
-
-    cover = poly_cover_df(polys, res, max_cells, id_col, geom_col)
-    # iterative consumer (res_set now, candidates later) → cache the
-    # cover, not the polygons (cover is the small derived table)
-    cover = cover.persist()
-    # ONE aggregate action yields both the distinct-res probe set and
-    # the cover row count (the broadcast gate below) — same job cost
-    # as the previous select("res").distinct()
-    res_rows = cover.groupBy("res").count().collect()
-    res_set = sorted(r["res"] for r in res_rows)
-    n_cover = sum(r["count"] for r in res_rows)
-
     from ..session import spread_scan
 
+    points, pt_id, temp = _tag(points, pt_id_col, True)
+    layer = _polygon_pass(polys, res, max_cells, id_col, geom_col).localCheckpoint()
+    rows = {r["res"]: r["count"] for r in layer.groupBy("res").count().collect()}
+    n_edges = rows.pop(None, 0)  # edge rows carry no res
+    cover = _gate(_part(layer, _COVER), sum(rows.values()), _BROADCAST_MAX_ROWS)
     # spread the slim point side: the cell-assign/explode stage feeds
-    # the candidate shuffle, and a few-row-group source would write
-    # that whole shuffle from 1-2 tasks. Hash-spread on the id key:
-    # no sort-before-repartition inside the single scan task
+    # the candidate joins, and a few-row-group source would run them
+    # in 1-2 tasks. Hash-spread on the id key: no sort inside the scan
+    # task, and the per-point count needs no further shuffle
     slim = spread_scan(points.select(pt_id, lon, lat), by=pt_id)
-    if len(res_set) == 1:
-        pts = slim.withColumn("cell", quadcell.cell_col(lon, lat, res_set[0]))
-    else:
-        pts = slim.withColumn(
-            "cell",
-            F.explode(F.array(*[quadcell.cell_col(lon, lat, r)
-                                for r in res_set])))
-    # Join-side discipline (guide §3.1): the point side's size estimate
-    # comes from the (column-pruned) source file and is far below its
-    # true exploded size, so left alone Catalyst BROADCASTS THE POINT
-    # SIDE — a 10^12-row layer would OOM the driver the moment the
-    # estimate stays under the threshold, and even here building a
-    # 3M-row hashed relation measured 4x slower than broadcasting the
-    # cover. Count-gate instead (the count is free, from the res-probe
-    # aggregate above): a bounded cover is broadcast — the point side
-    # is then never shuffled at all — and a huge cover falls back to a
-    # shuffled-hash join (its per-partition build side is cover/N
-    # rows; measured 1.8x faster than sort-merge on this shape).
-    cov = cover.drop("res")
-    cov = (F.broadcast(cov) if n_cover <= _COVER_BROADCAST_MAX_ROWS
-           else cov.hint("shuffle_hash"))
-    cand = (
-        pts.join(cov, "cell")
-        .where(
-            (F.col(lon) >= F.col("xmin")) & (F.col(lon) <= F.col("xmax"))
-            & (F.col(lat) >= F.col("ymin")) & (F.col(lat) <= F.col("ymax"))
-            | ((F.col("xmax") > 180.0) & (F.col(lon) + 360.0 >= F.col("xmin"))
-               & (F.col(lon) + 360.0 <= F.col("xmax"))
-               & (F.col(lat) >= F.col("ymin")) & (F.col(lat) <= F.col("ymax")))
-        )
-        .select(pt_id, lon, lat, "poly_id")
-        .withColumn("_bkt", F.pmod(F.xxhash64("poly_id"),
-                                   F.lit(refine_buckets)).cast("int"))
-        .withColumn("_salt", F.pmod(F.xxhash64(pt_id), F.lit(salt)).cast("int"))
-    )
-    # cast to BIGINT before hashing: xxhash64 is TYPE-sensitive
-    # (hashInt != hashLong for the same value), and the cand side's
-    # poly_id is BIGINT via poly_cover_df's declared schema — hashing
-    # an INT id column raw would land the two sides in different
-    # buckets and silently produce an empty join
-    polys_s = polys.select(
-        F.col(id_col).cast("bigint").alias("poly_id"),
-        F.col(geom_col).alias("_wkb")
-    ).withColumn("_bkt", F.pmod(F.xxhash64("poly_id"),
-                                F.lit(refine_buckets)).cast("int")) \
-     .withColumn("_salt", F.explode(F.array(*[F.lit(s) for s in range(salt)])))
-
-    pt_id_type = dict(points.dtypes)[pt_id]
-    out_schema = f"`{pt_id}` {pt_id_type}, poly_id BIGINT"
-    from ..geometry import predicates as P
-
-    def refine(cand_pdf: pd.DataFrame, poly_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({
-            pt_id: pd.Series([], dtype=cand_pdf[pt_id].dtype
-                             if pt_id in cand_pdf else "int64"),
-            "poly_id": pd.Series([], dtype="int64")})
-        if cand_pdf.empty or poly_pdf.empty:
-            return empty
-        wkb_by_id = dict(zip(poly_pdf["poly_id"].to_numpy(),
-                             poly_pdf["_wkb"]))
-        # decode each polygon ONCE per group, ray-cast its candidate
-        # batch vectorized (same kernel as PolygonIndex.refine_udf).
-        # Candidates are sliced as numpy RUNS of a sorted poly_id
-        # array — the previous pandas groupby/.loc/.copy per polygon
-        # cost ~1.3 ms of frame overhead per candidate polygon
-        # (measured 79 s CPU per pass on the 100k-diamond layer, vs
-        # ~3 s this way); the kept mask is one boolean array, and the
-        # output is assembled once.
-        pid_arr = cand_pdf["poly_id"].to_numpy(np.int64)
-        order = np.argsort(pid_arr, kind="stable")
-        pid_s = pid_arr[order]
-        x_all = cand_pdf[lon].to_numpy(dtype=np.float64)[order]
-        y_all = cand_pdf[lat].to_numpy(dtype=np.float64)[order]
-        ptid_s = cand_pdf[pt_id].to_numpy()[order]
-        bounds = np.flatnonzero(
-            np.r_[True, pid_s[1:] != pid_s[:-1], True])
-        keep = np.zeros(len(pid_s), dtype=bool)
-        for i in range(len(bounds) - 1):
-            lo, hi = bounds[i], bounds[i + 1]
-            g = wkb_by_id.get(pid_s[lo])
-            if g is None:
-                continue
-            rings = P.unwrap_antimeridian(wkb.wkb_to_rings(bytes(g)))
-            xs = x_all[lo:hi]
-            if P.ring_bbox(rings)[2] > 180.0:
-                xs = np.where(xs < 0.0, xs + 360.0, xs)
-            keep[lo:hi] = P.point_in_rings(xs, y_all[lo:hi], rings)
-        if not keep.any():
-            return empty
-        return pd.DataFrame({pt_id: ptid_s[keep],
-                             "poly_id": pid_s[keep]})
-
-    pairs = (
-        cand.groupBy("_bkt", "_salt")
-        .cogroup(polys_s.groupBy("_bkt", "_salt"))
-        .applyInPandas(refine, out_schema)
-    )
-
+    pairs = _edge_pairs(_candidates(slim, cover, sorted(rows), lon, lat),
+                        _gate(_part(layer, _EDGES), n_edges, _BROADCAST_MAX_ROWS),
+                        pt_id, lon, lat)
     if not with_payload:
         return pairs
-    if how == "inner":
-        out = points.join(pairs, pt_id, "inner")
-    elif how == "left":
-        out = points.join(pairs, pt_id, "left")
-    elif how == "left_semi":
-        out = points.join(pairs.select(pt_id).dropDuplicates([pt_id]),
-                          pt_id, "left_semi")
-    else:  # right: every polygon id, matched points or nulls
-        ids = polys.select(F.col(id_col).alias("poly_id"))
-        out = ids.join(points.join(pairs, pt_id, "inner"), "poly_id", "left")
-    return out.drop(pt_id) if temp_id else out
+    ids = polys.select(F.col(id_col).alias("poly_id")) if how == "right" else None
+    return _attach(points, how, pt_id, temp, ids, pairs=pairs)
 
 
 def count_points_per_polygon(points: DataFrame, index: PolygonIndex,
@@ -583,13 +594,9 @@ def count_points_per_polygon(points: DataFrame, index: PolygonIndex,
     (vectorattrs/__init__.py:1022-1103): per-polygon count of
     intersecting points; polygons with no points get NULL (the pandas
     left-merge leaves NaN, which the reference writes as missing)."""
-    spark = points.sparkSession
     matched = spatial_join(points, index, how="inner", lon=lon, lat=lat)
     counts = matched.groupBy("poly_id").agg(F.count("*").alias("n_points"))
-    ids = spark.createDataFrame(
-        [(p["poly_id"],) for p in index.polys], "poly_id BIGINT"
-    )
-    return ids.join(counts, "poly_id", "left")
+    return index.ids_df(points.sparkSession).join(counts, "poly_id", "left")
 
 
 def annotate_selection(points: DataFrame, index: PolygonIndex,
@@ -599,19 +606,12 @@ def annotate_selection(points: DataFrame, index: PolygonIndex,
     """annotate_vec_selection semantics
     (vectorattrs/__init__.py:1158): boolean flag = point intersects
     any polygon. Implemented as an id-keyed probe (never the payload
-    columns — see spatial_join's pt_id note; pass pt_id_col when the
-    layer has a natural unique key, else a persisted temp id)."""
-    if pt_id_col is not None:
-        pt_id, tagged, temp = pt_id_col, points, []
-    else:
-        pt_id = "__sj_pt_id"
-        # eager localCheckpoint, not persist — see spatial_join's note
-        # on id stability under eviction
-        tagged = points.withColumn(
-            pt_id, F.monotonically_increasing_id()).localCheckpoint()
-        temp = [pt_id]
+    columns — see ``_attach``; pass pt_id_col when the layer has a
+    natural unique key, else a materialized temp id)."""
+    tagged, pt_id, temp = _tag(points, pt_id_col, True)
     hit_ids = (
-        spatial_join(tagged, index, how="inner", lon=lon, lat=lat)
+        spatial_join(tagged, index, how="inner", lon=lon, lat=lat,
+                     pt_id_col=pt_id)
         .select(pt_id).dropDuplicates([pt_id])
         .withColumn(flag_col, F.lit(True))
     )

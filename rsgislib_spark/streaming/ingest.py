@@ -62,10 +62,11 @@ def stream_spatial_join(pages: DataFrame, index,
     polygon cover, so the stream needs no watermark and runs in plain
     append mode — Structured Streaming executes the identical
     codegen-refine plan the batch path uses (spatial_join.py
-    refine="auto"/"codegen"; the Arrow refine also streams, as a
-    stream-side pandas UDF). A 1000-executor cluster runs this on a
+    refine="auto"/"codegen"). A 1000-executor cluster runs this on a
     live WARC feed with the same zero-shuffle hot path the scaling
-    bench measures.
+    bench measures. The edge refine (above codegen_max_edges) counts
+    crossings per point, an aggregation append mode rejects without a
+    watermark: keep streamed layers under the codegen limit.
 
     Inner-join semantics only: the other hows rejoin matches to the
     input — a stream-stream join Spark rejects without

@@ -2,6 +2,7 @@
 pages fixture (FIXTURES.md golden_spatial_join style)."""
 
 import numpy as np
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
 
@@ -205,7 +206,7 @@ def polys_wkb_df(spark):
 
 @pytest.mark.parametrize("how", ["inner", "left", "left_semi", "right"])
 def test_spatial_join_df_matches_index_path(pts, polys_wkb_df, how):
-    """spatial_join_df (distributed cover + cogrouped refine, no
+    """spatial_join_df (distributed polygon pass + edge refine, no
     driver collect) == spatial_join (driver PolygonIndex) for every
     join mode, including the antimeridian polygon."""
     idx = sj.PolygonIndex.from_fixture(fixtures.POLYGONS, res=None)
@@ -238,11 +239,14 @@ def test_spatial_join_df_temp_id(pts, polys_wkb_df):
     assert out.count() >= pts.count()  # fan-out >= 1 row per point
 
 
-def test_spatial_join_df_salt_invariance(pts, polys_wkb_df):
-    """The salted cogroup is a pure parallelism knob — results are
-    identical at salt=1 and salt=16."""
-    a = sj.spatial_join_df(pts, polys_wkb_df, pt_id_col="url", salt=1)
-    b = sj.spatial_join_df(pts, polys_wkb_df, pt_id_col="url", salt=16)
+def test_spatial_join_df_gate_invariance(pts, polys_wkb_df, monkeypatch):
+    """The broadcast gates only pick a join strategy: with both the
+    cover and the edge table over the gate (shuffled hash joins) the
+    pairs are identical."""
+    a = sj.spatial_join_df(pts, polys_wkb_df, pt_id_col="url")
+    monkeypatch.setattr(sj, "_BROADCAST_MAX_ROWS", 0)
+    b = sj.spatial_join_df(pts, polys_wkb_df, pt_id_col="url")
+    assert "ShuffledHashJoin" in b._jdf.queryExecution().executedPlan().toString()
     assert sorted(map(tuple, a.select("url", "poly_id").collect())) == \
         sorted(map(tuple, b.select("url", "poly_id").collect()))
 
@@ -272,40 +276,46 @@ def test_poly_cover_df_default_is_small(spark, polys_wkb_df):
     assert small <= big / 3
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_spatial_join_df_plan_no_driver_collect(pts, polys_wkb_df):
-    """Structural: the large-layer plan contains the cogrouped Arrow
-    refine (FlatMapCoGroupsInPandas) and the polygon side is a real
-    scan feeding mapInPandas — no LocalTableScan of collected rows."""
-    out = sj.spatial_join_df(pts, polys_wkb_df, pt_id_col="url")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan
-    assert "CartesianProduct" not in plan
+    """Structural: the large-layer plan refines with a band join and a
+    count, with no Python node at all (the polygon pass ran once, into
+    its checkpoint), and the polygon side is the checkpointed pass —
+    no LocalTableScan of collected rows, no cartesian product."""
+    plan = _plan(sj.spatial_join_df(pts, polys_wkb_df, pt_id_col="url"))
+    for node in ("EvalPython", "FlatMapCoGroups", "InPandas", "MapInArrow",
+                 "LocalTableScan", "CartesianProduct"):
+        assert node not in plan, node
+    assert "Scan ExistingRDD" in plan and "partial_count" in plan
+    # the pass itself is the one Python node of the layer's plan
+    cover_plan = _plan(sj.poly_cover_df(polys_wkb_df))
+    assert cover_plan.count("MapInArrow") == 1 and "Python" not in cover_plan
 
 
-def test_codegen_refine_equals_arrow_refine(pts, oracle_pairs):
-    """The pure-codegen CASE refine and the Arrow pandas refine
+def test_codegen_refine_equals_edge_refine(pts, oracle_pairs):
+    """The pure-codegen CASE refine and the banded edge refine
     evaluate the identical IEEE crossing formula — same pairs out."""
     idx = sj.PolygonIndex.from_fixture(fixtures.POLYGONS)
     cg = {(r.url, r.poly_id)
           for r in sj.spatial_join(pts, idx, refine="codegen")
           .select("url", "poly_id").collect()}
-    ar = {(r.url, r.poly_id)
-          for r in sj.spatial_join(pts, idx, refine="arrow")
+    ed = {(r.url, r.poly_id)
+          for r in sj.spatial_join(pts, idx, refine="edges")
           .select("url", "poly_id").collect()}
-    assert cg == ar == oracle_pairs
+    assert cg == ed == oracle_pairs
 
 
 def test_codegen_refine_plan_has_no_python(pts):
-    """auto mode picks codegen for a dimension-sized layer: no
-    ArrowEvalPython / BatchEvalPython anywhere in the plan — the
-    whole filter-refine pipeline stays JVM-side."""
+    """No refine puts Python in the plan: auto picks the codegen CASE
+    for a dimension-sized layer, and the forced edge refine is a band
+    join plus a count — no ArrowEvalPython / BatchEvalPython."""
     idx = sj.PolygonIndex.from_fixture(fixtures.POLYGONS)
-    plan = sj.spatial_join(pts, idx)._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
-    # and the arrow path still exists when forced
-    plan_arrow = sj.spatial_join(pts, idx, refine="arrow") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan_arrow
+    assert "EvalPython" not in _plan(sj.spatial_join(pts, idx))
+    plan_edges = _plan(sj.spatial_join(pts, idx, refine="edges"))
+    assert "EvalPython" not in plan_edges and "partial_count" in plan_edges
 
 
 def test_codegen_refine_random_concave_polygons(spark):
@@ -343,25 +353,248 @@ def test_codegen_refine_random_concave_polygons(spark):
 
 def test_auto_refine_dispatch_by_edge_count(pts):
     """auto picks the codegen CASE under codegen_max_edges and the
-    Arrow UDF above it (a giant CASE would leave JIT'd codegen)."""
+    edge refine above it (a giant CASE would leave JIT'd codegen)."""
     idx = sj.PolygonIndex.from_fixture(fixtures.POLYGONS)
     n_edges = idx.total_edges()
-    plan_small = sj.spatial_join(pts, idx, codegen_max_edges=n_edges) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan_small
-    plan_big = sj.spatial_join(pts, idx, codegen_max_edges=n_edges - 1) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan_big
+    plan_small = _plan(sj.spatial_join(pts, idx, codegen_max_edges=n_edges))
+    assert "EvalPython" not in plan_small and "partial_count" not in plan_small
+    plan_big = _plan(sj.spatial_join(pts, idx, codegen_max_edges=n_edges - 1))
+    assert "EvalPython" not in plan_big and "partial_count" in plan_big
 
 
 def test_spatial_join_df_int_poly_id(spark, pts, polys_wkb_df, oracle_pairs):
-    """INT (not BIGINT) poly_id column: the refine bucket hash must
-    cast to BIGINT before hashing (xxhash64 is type-sensitive —
-    hashing an INT raw would bucket the polygon side differently from
-    the BIGINT cover side and silently return an empty join)."""
+    """INT (not BIGINT) poly_id column: the polygon pass casts the id
+    to BIGINT, so the cover, the edges and the candidates share one
+    key type and the pairs match the oracle."""
     polys_int = polys_wkb_df.withColumn(
         "poly_id", F.col("poly_id").cast("int"))
     got = {(r.url, r.poly_id)
            for r in sj.spatial_join_df(pts, polys_int, pt_id_col="url")
            .select("url", "poly_id").collect()}
     assert got == oracle_pairs
+
+
+# ------------------------------------------- polygon pass + edge refine
+
+def _star(rng, cx, cy, k, r0, r1):
+    ang = np.sort(rng.uniform(0, 2 * np.pi, k))
+    rad = rng.uniform(r0, r1, k)
+    ring = np.stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)], 1)
+    return np.vstack([ring, ring[:1]])
+
+
+def _scalar_pass(pid, geom, max_cells):
+    """Independent per-polygon reference for the polygon pass: the
+    scalar cover (quadcell.cover_bbox) and a loop over the edges."""
+    import math
+
+    from rsgislib_spark.cells import quadcell
+    from rsgislib_spark.geometry import wkb
+
+    rings = predicates.unwrap_antimeridian(wkb.wkb_to_rings(geom))
+    xmin, ymin, xmax, ymax = predicates.ring_bbox(rings)
+    res = quadcell.adaptive_cover_res(xmin, ymin, xmax, ymax,
+                                      max_cells=max_cells)
+    cells = quadcell.cover_bbox(xmin, ymin, xmax - 360.0 if xmax > 180.0
+                                else xmax, ymax, res)
+    edges = [(a[0], a[1], b[0], b[1]) for r in rings
+             for a, b in zip(r[:-1].tolist(), r[1:].tolist()) if a[1] != b[1]]
+    nb = max(1, math.ceil(len(edges) / sj.BAND_EDGES))
+
+    def band(v):
+        if nb == 1:
+            return 0
+        return min(max(math.floor((v - ymin) * float(nb) / (ymax - ymin)), 0),
+                   nb - 1)
+
+    cover = {(pid, c, xmin, ymin, xmax, ymax, res, nb) for c in cells.tolist()}
+    banded = {(pid, b, x1, y1, x2, y2) for x1, y1, x2, y2 in edges
+              for b in range(band(min(y1, y2)), band(max(y1, y2)) + 1)}
+    return cover, banded
+
+
+def test_polygon_pass_matches_scalar(spark):
+    """The vectorized pass (bulk WKB decode of simple polygons, scalar
+    decode of the rest) and the driver index emit exactly the scalar
+    cover and banded edges: holes, a multipolygon, an antimeridian
+    ring, horizontal and vertical edges, a zero-height ring, and stars
+    with many bands."""
+    from rsgislib_spark.geometry import wkb
+
+    rng = np.random.default_rng(3)
+    layer = [
+        [[_star(rng, 10, 10, 40, 0.5, 3.0)]],
+        [[[(0, 0), (4, 0), (4, 4), (0, 4)], [(1, 1), (2, 1), (2, 2), (1, 2)]]],
+        [[[(20, 20), (21, 20), (21, 21)]], [[(30, 30), (31, 30), (31, 32)]]],
+        [[[(170, 0), (-170, 0), (-170, 5), (170, 5)]]],
+        [[[(0, 0), (1, 0), (2, 0)]]],
+        [[[(5, 5), (5, 6), (6, 6), (6, 5)]]],
+        [[_star(rng, -50, 40, 300, 0.01, 0.2)]],
+    ]
+    geoms = [wkb.polygon_to_wkb(p[0]) if len(p) == 1 else
+             wkb.multipolygon_to_wkb(p) for p in layer]
+    want_cover, want_edges = set(), set()
+    for pid, g in enumerate(geoms):
+        c, e = _scalar_pass(pid, g, 8)
+        want_cover |= c
+        want_edges |= e
+    df = spark.createDataFrame([(i, bytearray(g)) for i, g in enumerate(geoms)],
+                               "poly_id INT, geometry BINARY")
+    rows = sj._polygon_pass(df, None, 8, "poly_id", "geometry").collect()
+    got_cover = {(r.poly_id, r.cell, r.xmin, r.ymin, r.xmax, r.ymax, r.res, r.nb)
+                 for r in rows if r.cell is not None}
+    # every (edge, band) pair is one tested row per slab it may cross
+    # (slab -1: every slab); parity rows (x1 = _SURE) stand for edges
+    # surely right of a slab
+    got_edges = {(r.poly_id, r.band, r.x1, r.y1, r.x2, r.y2)
+                 for r in rows if r.band is not None and r.x1 != sj._SURE}
+    assert len(rows) == len(got_cover) + sum(r.band is not None for r in rows)
+    assert got_cover == want_cover and got_edges == want_edges
+    assert max(b for _, b, *_ in got_edges) >= 10  # the stars are banded
+    assert max(r.ms for r in rows if r.cell is not None) > 1  # and slabbed
+
+    idx = sj.PolygonIndex.from_df(df, res=None)
+    idx = sj.PolygonIndex([dict(poly_id=p["poly_id"], rings=p["rings"])
+                           for p in idx.polys], res=None, max_cells=8)
+    assert _rows(idx._cover, "poly_id", "cell", "xmin", "ymin", "xmax", "ymax",
+                 "res", "nb") == want_cover
+    edges = idx._edges.filter(pc.not_equal(idx._edges["x1"], sj._SURE))
+    assert _rows(edges, "poly_id", "band", "x1", "y1", "x2", "y2") == want_edges
+
+
+def _rows(table, *cols) -> set:
+    return set(zip(*(table[c].to_pylist() for c in cols)))
+
+
+def _pairs_numpy(px, py, polys):
+    return {(i, p["poly_id"]) for p in polys
+            for i in np.flatnonzero(predicates.point_in_rings(px, py, p["rings"])).tolist()}
+
+
+def _pairs(df, pt_id="pt_id"):
+    return {(r[0], r[1]) for r in df.select(pt_id, "poly_id").collect()}
+
+
+def test_edge_refine_band_boundaries_and_vertices(spark):
+    """Points exactly on band and slab boundaries (and one ulp either
+    side) and exactly on vertices agree with point_in_rings — a
+    candidate's band and slab come from the formula that binned the
+    edges, so the half-open crossing rule holds at every boundary."""
+    from rsgislib_spark.geometry import wkb
+
+    rng = np.random.default_rng(5)
+    ring = _star(rng, 12.0, -7.0, 600, 0.3, 2.5)
+    polys = [dict(poly_id=1, rings=[ring])]
+    idx = sj.PolygonIndex(polys, res=None)
+    nb, ms = idx._cover["nb"][0].as_py(), idx._cover["ms"][0].as_py()
+    assert nb > 4 and ms > 1
+    (xmin, ymin), (xmax, ymax) = ring.min(0), ring.max(0)
+
+    def bounds(lo, hi, n):
+        v = lo + (hi - lo) * np.arange(n + 1) / n
+        return np.concatenate([v, np.nextafter(v, np.inf), np.nextafter(v, -np.inf)])
+
+    ys, xs = bounds(ymin, ymax, nb), bounds(xmin, xmax, ms)
+    gx, gy = np.meshgrid(xs, ys)
+    px = np.concatenate([gx.ravel(), ring[:, 0]])
+    py = np.concatenate([gy.ravel(), ring[:, 1]])
+    pts_df = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(px, py))],
+        "pt_id BIGINT, lon DOUBLE, lat DOUBLE")
+    want = _pairs_numpy(px, py, polys)
+    assert len(want) > 50
+    assert _pairs(sj.spatial_join(pts_df, idx, refine="edges")) == want
+    poly_df = spark.createDataFrame([(1, bytearray(wkb.polygon_to_wkb([ring])))],
+                                    "poly_id BIGINT, geometry BINARY")
+    assert _pairs(sj.spatial_join_df(pts_df, poly_df, pt_id_col="pt_id")) == want
+
+
+def test_edge_refine_antimeridian_star(spark):
+    """A banded, slabbed star across the antimeridian: points on both
+    sides of 180 agree with the numpy ray cast at lon+360 (the wrap
+    rule) through both entry points."""
+    from rsgislib_spark.geometry import wkb
+
+    rng = np.random.default_rng(17)
+    ring = _star(rng, 180.0, 5.0, 400, 1.0, 8.0)  # unwrapped, x up to 188
+    polys = [dict(poly_id=3, rings=[ring])]
+    px = rng.uniform(-180.0, 180.0, 6000)
+    px = np.where(px < 0, -180.0 + (px + 180.0) / 18.0, 170.0 + px / 18.0)
+    py = rng.uniform(-4.0, 14.0, 6000)
+    want = _pairs_numpy(np.where(px < 0, px + 360.0, px), py, polys)
+    assert {px[i] < 0 for i, _ in want} == {True, False}
+    pts_df = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(px, py))],
+        "pt_id BIGINT, lon DOUBLE, lat DOUBLE")
+    idx = sj.PolygonIndex(polys, res=None)
+    assert idx._cover["ms"][0].as_py() > 1
+    assert _pairs(sj.spatial_join(pts_df, idx, refine="edges")) == want
+    wrapped = np.where(ring[:, 0] > 180.0, ring[:, 0] - 360.0, ring[:, 0])
+    poly_df = spark.createDataFrame(
+        [(3, bytearray(wkb.polygon_to_wkb([np.stack([wrapped, ring[:, 1]], 1)])))],
+        "poly_id BIGINT, geometry BINARY")
+    assert _pairs(sj.spatial_join_df(pts_df, poly_df, pt_id_col="pt_id")) == want
+
+
+def test_huge_star_polygon_matches_numpy(spark):
+    """A 6000-vertex spiky star polygon (auto picks the edge refine;
+    long edges span many bands, so x-slabs and parity rows do most of
+    the work) agrees with the numpy ray cast through both entry
+    points."""
+    from rsgislib_spark.geometry import wkb
+
+    rng = np.random.default_rng(11)
+    ring = _star(rng, -30.0, 20.0, 6000, 1.0, 8.0)
+    polys = [dict(poly_id=7, rings=[ring])]
+    px = rng.uniform(-39.0, -21.0, 20000)
+    py = rng.uniform(11.0, 29.0, 20000)
+    pts_df = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(px, py))],
+        "pt_id BIGINT, lon DOUBLE, lat DOUBLE")
+    want = _pairs_numpy(px, py, polys)
+    assert len(want) > 1000
+    idx = sj.PolygonIndex(polys, res=None)
+    assert idx._cover["ms"][0].as_py() > 1
+    assert sj._SURE in idx._edges["x1"].to_pylist()  # parity rows
+    got = sj.spatial_join(pts_df, idx)
+    assert "partial_count" in _plan(got)
+    assert _pairs(got) == want
+    poly_df = spark.createDataFrame([(7, bytearray(wkb.polygon_to_wkb([ring])))],
+                                    "poly_id BIGINT, geometry BINARY")
+    assert _pairs(sj.spatial_join_df(pts_df, poly_df, pt_id_col="pt_id")) == want
+
+
+def test_spatial_join_df_leaves_no_cache(spark, polys_wkb_df):
+    """No CacheManager entry outlives spatial_join_df or its action:
+    the pass is materialized by a localCheckpoint, not a persist."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    pts_df = spark.range(500).selectExpr(
+        "id AS pt_id", "CAST(id AS DOUBLE) * 0.7 - 175 AS lon",
+        "CAST(id AS DOUBLE) * 0.3 - 75 AS lat")
+    out = sj.spatial_join_df(pts_df, polys_wkb_df, how="left")
+    assert cm.numCachedEntries() == before
+    out.count()
+    assert cm.numCachedEntries() == before
+
+
+def test_polygon_id_frames_keep_fingerprint(spark):
+    """how='right' and count_points_per_polygon build their polygon-id
+    frame from Arrow (a local relation identified by its rows), so a
+    rebuilt frame keeps its lineage fingerprint and can resume."""
+    from rsgislib_spark.plans import checkpoint
+
+    pts_df = spark.range(50).selectExpr(
+        "id AS pt_id", "CAST(id AS DOUBLE) - 25 AS lon", "CAST(id AS DOUBLE) AS lat")
+
+    def right():
+        return sj.spatial_join(pts_df, sj.PolygonIndex.from_fixture(
+            fixtures.POLYGONS), how="right", pt_id_col="pt_id")
+
+    def counts():
+        return sj.count_points_per_polygon(
+            pts_df, sj.PolygonIndex.from_fixture(fixtures.POLYGONS))
+
+    fp = checkpoint.lineage_fingerprint
+    assert fp(right()) == fp(right())
+    assert fp(counts()) == fp(counts())

@@ -1,11 +1,11 @@
-"""Same-window codegen-vs-arrow refine A/B for the headline pipeline.
+"""Same-window codegen-vs-edges refine A/B for the headline pipeline.
 
 Round-3 asked whether the headline should recover to <=1.5 s at
 local[32]; round-4 couldn't settle it because this VM's per-window
 CPU variance is 2-3x and the two candidate refine paths were never
 measured back-to-back. This tool runs the IDENTICAL headline job
 (generate pages -> geoparse -> cell assign -> spatial join -> count)
-alternating refine='codegen' / refine='arrow' within ONE Spark
+alternating refine='codegen' / refine='edges' within ONE Spark
 session and one time window, so host noise hits both arms equally.
 
 Writes BENCH/refine_ab.md and prints one JSON line.
@@ -58,14 +58,14 @@ def main() -> None:
     cores = os.environ.get("SPARK_GRAFT_CPUS",
                            str(len(os.sched_getaffinity(0))))
 
-    # warm both arms (codegen compile / python-worker pool spawn are
-    # one-time costs that must not land inside either timed series)
+    # warm both arms (codegen compile and the JIT are one-time costs
+    # that must not land inside either timed series)
     run_headline(spark, n_pages, "codegen")
-    run_headline(spark, n_pages, "arrow")
+    run_headline(spark, n_pages, "edges")
 
-    times: dict[str, list[float]] = {"codegen": [], "arrow": []}
+    times: dict[str, list[float]] = {"codegen": [], "edges": []}
     for _ in range(rounds):
-        for mode in ("codegen", "arrow"):
+        for mode in ("codegen", "edges"):
             times[mode].append(round(run_headline(spark, n_pages, mode), 3))
 
     med = {m: statistics.median(v) for m, v in times.items()}
@@ -74,7 +74,7 @@ def main() -> None:
     ratio = round(max(med.values()) / min(med.values()), 3)
 
     lines = [
-        "# Codegen vs Arrow refine — same-window A/B (headline pipeline)",
+        "# Codegen vs edge refine — same-window A/B (headline pipeline)",
         "",
         f"{n_pages:,} pages, local[{cores}], one Spark session, arms "
         f"interleaved per round so host noise hits both equally "
@@ -83,7 +83,7 @@ def main() -> None:
         "| arm | runs (sec) | median sec | pages/sec |",
         "|---|---|---|---|",
     ]
-    for m in ("codegen", "arrow"):
+    for m in ("codegen", "edges"):
         lines.append(f"| {m} | {', '.join(map(str, times[m]))} "
                      f"| {med[m]} | {tput[m]:,} |")
     lines += [
@@ -93,10 +93,11 @@ def main() -> None:
         "",
         "Interpretation: the headline layer is dimension-sized "
         "(8 polygons, bounded edges), so refine='auto' picks codegen "
-        "via the total_edges() threshold. The Arrow arm ships every "
-        "candidate row through python workers (Arrow serialization + "
-        "per-batch GIL) — it exists for LARGE ring sets where a "
-        "generated CASE would blow the JIT method limit.",
+        "via the total_edges() threshold. The edge arm joins every "
+        "candidate to its polygon's edges in its latitude band and "
+        "counts crossings (a join plus an aggregate, no Python) — it "
+        "exists for LARGE ring sets where a generated CASE would blow "
+        "the JIT method limit.",
     ]
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "refine_ab.md"), "w") as f:

@@ -23,9 +23,11 @@ CHECKS = {
         expect=["BroadcastHashJoin"],
         forbid=["SortMergeJoin", "BatchEvalPython", "ArrowEvalPython"],
     ),
-    "spatial join (arrow refine forced — the large-ring-set path)": dict(
-        expect=["BroadcastHashJoin", "ArrowEvalPython"],
-        forbid=["SortMergeJoin"],
+    "spatial join (edge refine forced — the large-ring-set path)": dict(
+        # candidates meet their polygon's edges in a broadcast band
+        # join and a crossing count decides — no Python per candidate
+        expect=["BroadcastHashJoin", "partial_count"],
+        forbid=["SortMergeJoin", "BatchEvalPython", "ArrowEvalPython"],
     ),
     "zonal stats": dict(
         expect=["HashAggregate", "partial_"],
@@ -66,13 +68,15 @@ CHECKS = {
         forbid=["hashpartitioning(url", "hashpartitioning(html",
                 "hashpartitioning(text", "Exchange SinglePartition"],
     ),
-    "spatial_join_df on a large polygon layer (cogrouped refine)": dict(
-        # rings travel with the candidate batch (FlatMapCoGroups);
-        # the polygon side must be a real scan feeding mapInPandas,
-        # never a LocalTableScan of driver-collected rows
-        expect=["FlatMapCoGroupsInPandas"],
+    "spatial_join_df on a large polygon layer (banded edge refine)": dict(
+        # the polygon pass ran once, into its checkpoint (Scan
+        # ExistingRDD), never a LocalTableScan of driver-collected
+        # rows; candidates meet their band's edges in a join and a
+        # crossing count decides — no Python node in the plan
+        expect=["Scan ExistingRDD", "partial_count"],
         forbid=["LocalTableScan", "CartesianProduct",
-                "BroadcastNestedLoopJoin"],
+                "BroadcastNestedLoopJoin", "FlatMapCoGroupsInPandas",
+                "ArrowEvalPython", "BatchEvalPython", "MapInArrow"],
     ),
     "lsh near-dup pairs (banded buckets → candidate equi-join → exact rescore)": dict(
         # signature dots above _CODEGEN_MAX_TERMS run in ONE Arrow
@@ -160,9 +164,9 @@ def main():
     def spatial():
         return sj.spatial_join(derived.points_df(spark, sf), idx, how="inner")
 
-    def spatial_arrow():
+    def spatial_edges():
         return sj.spatial_join(derived.points_df(spark, sf), idx,
-                               how="inner", refine="arrow")
+                               how="inner", refine="edges")
 
     def zonal_q():
         joined = sj.spatial_join(derived.points_df(spark, sf), idx, how="inner")
@@ -277,7 +281,7 @@ def main():
         a_cell = assigned.select("cell_r5").limit(1).collect()[0][0]
         return spark.read.parquet(p).where(f"cell_r5 = {a_cell}")
 
-    dfs = dict(zip(CHECKS, [headline, spatial, spatial_arrow, zonal_q,
+    dfs = dict(zip(CHECKS, [headline, spatial, spatial_edges, zonal_q,
                             minhash, unq_ids,
                             sj_left_pages, overlay_pairs, clump_edges,
                             knn_pages, sj_df_big,
@@ -290,8 +294,8 @@ def main():
            "",
            "Checklist per plan: column-pruned scans (ReadSchema), pushed",
            "filters, broadcast (not sort-merge) joins on the dimension side,",
-           "zero Python in the dimension-layer hot path (codegen CASE",
-           "refine; Arrow only for large ring sets), partial (map-side)",
+           "zero Python in the spatial-join hot path (codegen CASE refine,",
+           "or a banded edge join for large ring sets), partial (map-side)",
            "aggregation.",
            ""]
     ok = True
