@@ -5,14 +5,19 @@ re-planning + skew-join splitting for dense city cells), Arrow for
 every pandas-UDF boundary, a local master as wide as the CPUs this
 process may use (``SPARK_GRAFT_CPUS`` overrides it), and
 shuffle-partition defaults overridable for a real cluster via normal
-spark-submit --conf.
+spark-submit --conf. The driver JVM starts warm: it maps a class
+archive that an earlier launch on the host dumped (``class_archive``).
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+from contextlib import contextmanager, suppress
 from urllib.parse import unquote, urlparse
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULTS = {
@@ -38,6 +43,14 @@ DEFAULTS = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
+    # The JVM-wide cache of generated classes, keyed by their source.
+    # At Spark's 100 entries (split over the cache's segments, so it
+    # evicts even earlier) a perfbench reference_layers pass, 97
+    # classes cold, evicted its own classes, and every warm pass
+    # recompiled 21-48 of them: 0.25-0.63 s on a 4-core host. 1000
+    # holds every benchmarked pass with room to spare, at tens of KB
+    # per class.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -47,9 +60,221 @@ def get_spark(app: str = "rsgislib_spark", master: str | None = None,
                           str(len(os.sched_getaffinity(0))))
     builder = SparkSession.builder.appName(app).master(master or f"local[{cpus}]")
     merged = {**DEFAULTS, **conf}
+    # a running gateway JVM (an earlier session of this process, or a
+    # spark-submit driver) is reused as it is: its flags are set
+    fresh = (SparkContext._gateway is None
+             and "PYSPARK_GATEWAY_PORT" not in os.environ)
+    flags, conf_dir = class_archive(merged) if fresh else ("", None)
+    if flags:
+        # not extraJavaOptions: a caller's value for it replaces ours
+        key = "spark.driver.defaultJavaOptions"
+        merged[key] = f"{merged[key]} {flags}" if merged.get(key) else flags
     for k, v in merged.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    with _env("SPARK_CONF_DIR", conf_dir):
+        spark = builder.getOrCreate()
+    if "ArchiveClassesAtExit" in flags:
+        _watch_creator(SparkContext._gateway.proc.pid)
+    return spark
+
+
+# The class archive: JDK dynamic class-data sharing (AppCDS). The
+# first driver launched on a host records the classes it loaded and
+# dumps them when it exits (``-XX:ArchiveClassesAtExit``); later
+# launches map that file (``-XX:SharedArchiveFile``) instead of
+# loading and verifying the same classes from Spark's jars again.
+# the dump, and a mismatched archive, print warnings on stdout
+_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
+# HotSpot's dynamic-archive magic. The dump writes its header last, so
+# a dump cut short has none, and a JVM rejects such a file.
+_MAGIC = (0xF00BABA8).to_bytes(4, "little")
+# launch settings that put more than the conf dir and the jars on the
+# driver's class path. A dumping JVM dies on a non-empty directory
+# there, so any of them means a plain launch.
+_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
+                  "SPARK_PREPEND_CLASSES", "SPARK_TESTING",
+                  "SPARK_SQL_TESTING", "PYSPARK_SUBMIT_ARGS")
+
+
+def class_archive(conf: dict | None = None) -> tuple[str, str | None]:
+    """JVM flags that launch a driver with the host's class archive,
+    and the conf dir to launch it with, or ``("", None)`` for a plain
+    launch. ``get_spark`` applies both. A spark-submit driver starts
+    before any Python runs, so it takes them on its command line:
+    ``python -m rsgislib_spark.session`` prints them as shell lines.
+
+    The archive lives in ``${XDG_CACHE_HOME:-~/.cache}/rsgislib_spark``
+    (never under TMPDIR, which a job may delete), named by a key of the
+    Java home and release and the launch class path; archives of other
+    keys are removed when a new one is made. With no archive yet, the
+    flags make this launch dump one to a partial file named by its pid
+    when the JVM exits; a later call renames a complete dump into place.
+    While another live launch is dumping, or when anything fails (an
+    unwritable cache, a conf dir holding real files, a class path the
+    archive cannot cover), the launch is plain. A stale or mismatched
+    archive is skipped by the JVM itself, silently; a truncated one
+    (which would crash it) is caught by its size, recorded in its name.
+    """
+    conf = conf or {}
+    opts = " ".join(str(conf.get(f"spark.driver.{k}JavaOptions", ""))
+                    for k in ("default", "extra"))
+    if ("Share" in opts or "ArchiveClassesAtExit" in opts
+            or conf.get("spark.driver.extraClassPath")
+            or any(os.environ.get(v) for v in _CLASSPATH_ENV)):
+        return "", None
+    try:
+        return _class_archive()
+    except (OSError, ImportError):
+        return "", None
+
+
+def _class_archive() -> tuple[str, str | None]:
+    import fcntl
+
+    from pyspark.find_spark_home import _find_spark_home
+
+    spark_home = _find_spark_home()
+    conf_dir = (os.environ.get("SPARK_CONF_DIR")
+                or os.path.join(spark_home, "conf"))
+    if os.path.isdir(conf_dir) and any(
+            not f.endswith(".template") for f in os.listdir(conf_dir)):
+        return "", None
+    cache = _cache_dir()
+    if any(c.isspace() or c in "\"'\\" for c in cache):
+        return "", None  # the flags are split on whitespace
+    # the launch reads no conf file either way; an empty dir keeps the
+    # class path dumpable
+    empty = os.path.join(cache, "conf")
+    os.makedirs(empty, exist_ok=True)
+    if os.listdir(empty):
+        return "", None
+    key = _archive_key(spark_home, empty)
+    fd = os.open(cache, os.O_RDONLY)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        archive = _adopt(cache, key)
+        if archive:
+            # CRC-checked on load: a corrupt archive is skipped, not
+            # trusted (no launch cost measurable on a 4-core host)
+            return (f"-XX:SharedArchiveFile={archive} -XX:+VerifySharedSpaces"
+                    f" {_QUIET}", empty)
+        if _alive(_creator(cache, key)):
+            return "", None
+        for n in os.listdir(cache):
+            if n.endswith((".jsa", ".part", ".creator")):
+                os.remove(os.path.join(cache, n))
+        part = os.path.join(cache, f"{key}.{os.getpid()}.part")
+        _write(os.path.join(cache, f"{key}.creator"), str(os.getpid()))
+        return f"-XX:ArchiveClassesAtExit={part} {_QUIET}", empty
+    finally:
+        os.close(fd)
+
+
+def _cache_dir() -> str:
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    return os.path.join(base, "rsgislib_spark")
+
+
+def _archive_key(spark_home: str, conf_dir: str) -> str:
+    """Java home and release, Spark jar names, sizes and mtimes, and
+    the conf dir: what the JVM checks an archive against. A key that
+    misses a change costs no result: the JVM then skips the archive."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.realpath(os.path.join(java_home, "bin", "java")
+                            if java_home else shutil.which("java") or "java")
+    h = hashlib.sha256(f"{java}\0{conf_dir}\n".encode())
+    release = os.path.join(os.path.dirname(os.path.dirname(java)), "release")
+    if os.path.isfile(release):
+        with open(release, "rb") as f:
+            h.update(f.read())
+    jars = os.path.join(spark_home, "jars")
+    for n in sorted(os.listdir(jars)):
+        st = os.stat(os.path.join(jars, n))
+        h.update(f"{n}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    return h.hexdigest()[:16]
+
+
+def _adopt(cache: str, key: str) -> str | None:
+    """The key's archive, after renaming a complete dump into place;
+    None if there is none. An archive whose size is not the one in its
+    name is removed, and so is a complete dump that lost a race."""
+    archive = None
+    for n in sorted(os.listdir(cache)):
+        path = os.path.join(cache, n)
+        if n.startswith(f"{key}-") and n.endswith(".jsa"):
+            if n == f"{key}-{os.path.getsize(path)}.jsa":
+                archive = path
+            else:
+                os.remove(path)
+        elif n.startswith(f"{key}.") and n.endswith(".part"):
+            with open(path, "rb") as f:
+                if f.read(4) != _MAGIC:
+                    continue
+            if archive:
+                os.remove(path)
+                continue
+            archive = os.path.join(cache, f"{key}-{os.path.getsize(path)}.jsa")
+            os.replace(path, archive)
+            with suppress(FileNotFoundError):
+                os.remove(os.path.join(cache, f"{key}.creator"))
+    return archive
+
+
+def _creator(cache: str, key: str) -> int | None:
+    try:
+        with open(os.path.join(cache, f"{key}.creator")) as f:
+            return int(f.read())
+    except (OSError, ValueError):
+        return None
+
+
+def _alive(pid: int | None) -> bool:
+    if pid is None:
+        return False
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _watch_creator(jvm_pid: int) -> None:
+    """The JVM, not this process, writes the dump, and it may outlive
+    this process while it does: watch its pid from now on."""
+    try:
+        cache = _cache_dir()
+        for n in os.listdir(cache):
+            path = os.path.join(cache, n)
+            key = n.removesuffix(".creator")
+            if key != n and _creator(cache, key) == os.getpid():
+                _write(path, str(jvm_pid))
+    except OSError:
+        pass
+
+
+def _write(path: str, text: str) -> None:
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
+@contextmanager
+def _env(name: str, value: str | None):
+    """Set one environment variable for the block, then restore it."""
+    old = os.environ.get(name)
+    if value is not None:
+        os.environ[name] = value
+    try:
+        yield
+    finally:
+        if value is not None:
+            if old is None:
+                del os.environ[name]
+            else:
+                os.environ[name] = old
 
 
 def spread_scan(df, min_parts: int | None = None, by=None):
@@ -158,3 +383,14 @@ def _parse_bytes(v: str) -> int:
             s, mult = s[: -len(suf)], m
             break
     return int(float(s) * mult)
+
+
+if __name__ == "__main__":
+    # shell lines that start a spark-submit driver with the archive:
+    # eval "$(python -m rsgislib_spark.session)"
+    import shlex
+
+    flags, conf_dir = class_archive()
+    if conf_dir:
+        print(f"export SPARK_CONF_DIR={shlex.quote(conf_dir)}")
+    print(f"ARCHIVE_OPTS={shlex.quote(flags)}")

@@ -4,6 +4,11 @@
         --py-files /tmp/rsgislib_spark.zip \
         tools/submit_job.py --pages 100000 --out /tmp/tiles
 
+The session gets the engine's ``session.DEFAULTS`` except the master
+and the driver memory, which spark-submit sets; a ``--conf`` value
+wins over a default. README shows how to start the driver JVM with the
+class archive of ``session.class_archive``.
+
 Generates (or reads) the pages table, geoparses, assigns quad r5-r9 +
 S2 cells, spatial-joins the polygon layer, and writes cell-partitioned
 tile assignments through the resumable checkpoint layer. Prints one
@@ -26,13 +31,24 @@ def main() -> None:
     ap.add_argument("--partition-res", type=int, default=5)
     args = ap.parse_args()
 
+    from pyspark import SparkConf, SparkContext
     from pyspark.sql import SparkSession
-
-    spark = SparkSession.builder.appName("rsgislib-spark-tile-assign").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     # imports resolve from --py-files on executors
     from rsgislib_spark.data import fixtures, pages
+    from rsgislib_spark.session import DEFAULTS
+
+    # attach to the JVM spark-submit started, so SparkConf() reads its
+    # --conf values
+    SparkContext._ensure_initialized()
+    conf = SparkConf()
+    for k, v in DEFAULTS.items():
+        if k != "spark.driver.memory" and not conf.contains(k):
+            conf.set(k, v)
+    spark = (SparkSession.builder.appName("rsgislib-spark-tile-assign")
+             .config(conf=conf).getOrCreate())
+    spark.sparkContext.setLogLevel("WARN")
+
     from rsgislib_spark.functions.geoparse import geoparse
     from rsgislib_spark.operators import spatial_join as sj
     from rsgislib_spark.operators import tiling
