@@ -162,15 +162,15 @@ def q_spatial_join_within_sql() -> str:
 
 
 def q_spatial_join_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same join with the banded edge refine FORCED (the path auto
-    mode takes for ring sets too large for a codegen CASE) — both
-    refine implementations stay driver-verified against the one
+    """Same join with the banded edge refine FORCED (the path
+    spatial_join takes for ring sets too large for a codegen CASE) —
+    both refine implementations stay driver-verified against the one
     oracle; they evaluate the identical IEEE crossing formula. The
     registry key keeps its old name (this entry once forced an Arrow
     pandas refine)."""
     pts = _points(spark, sf_dir)
-    return sj.spatial_join(pts, _poly_index(), how="inner",
-                           refine="edges").select("pt_id", "poly_id")
+    return sj._edge_join(pts, _poly_index(), how="inner").select(
+        "pt_id", "poly_id")
 
 
 def q_spatial_join_arrow_sql() -> str:

@@ -63,7 +63,7 @@ def poly_is_unwrapped(poly: dict) -> bool:
 
 def poly_inside_sql(poly: dict, x: str, y: str) -> str:
     """Oracle-side boolean: point inside this fixture polygon — the
-    same crossing formula the engine's pandas-UDF refine runs."""
+    same crossing formula the engine's spatial-join refine runs."""
     rings = poly_rings(poly)
     if poly_is_unwrapped(poly):
         x = (f"(CASE WHEN {x} < CAST(0 AS DOUBLE)"

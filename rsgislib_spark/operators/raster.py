@@ -8,7 +8,8 @@ geotransform. Operators:
 - rasterize_polygons: burn polygons into the grid under GDAL's
   default pixel-CENTER rule (reference: rasterise_vec_lyr,
   python/rsgislib/vectorutils/createrasters.py:14-133; burn rule
-  :108-114 — gdal.RasterizeLayer burns pixels whose center is inside)
+  :108-114 — gdal.RasterizeLayer burns pixels whose center is inside),
+  as a spatial join of the pixel centers: one point-in-polygon core
 - extract_point_values: point -> pixel lookup via floor arithmetic
   (reference: ext_point_band_values,
   python/rsgislib/zonalstats/__init__.py:1328,1396-1594 —
@@ -30,7 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..geometry import predicates
+from .spatial_join import PolygonIndex, spatial_join
 
 
 def pixel_center_exprs(origin_x: float, origin_y: float, res: float,
@@ -58,32 +59,23 @@ def point_to_pixel_exprs(origin_x: float, origin_y: float, res: float,
 
 
 def rasterize_polygons(grid: DataFrame, polys: list, origin_x: float,
-                       origin_y: float, res: float,
-                       burn_attr: str = "poly_id") -> DataFrame:
+                       origin_y: float, res: float) -> DataFrame:
     """Burn polygons into the grid: output (x, y, burn) where burn is
     the id of a polygon whose interior contains the pixel CENTER
     (GDAL default rule), highest poly_id wins overlaps (GDAL burns in
     feature order; we make the tie deterministic).
 
-    polys: list of dicts with poly_id + rings (as PolygonIndex).
-    Pixel centers are tested with the vectorized ray-cast inside an
-    Arrow-batched mapInPandas — the per-tile rasterization of the
-    north star.
+    polys: list of dicts with poly_id + rings (as PolygonIndex). The
+    distinct pixel centers (``pixel_center_exprs``, the oracle's SQL)
+    go through spatial_join, keyed by pixel so the edge refine counts
+    each pixel's crossings once whatever the band count.
     """
-    def _burn(batches):
-        for pdf in batches:
-            lon = origin_x + (pdf["x"].to_numpy(dtype=np.float64) + 0.5) * res
-            lat = origin_y - (pdf["y"].to_numpy(dtype=np.float64) + 0.5) * res
-            burn = np.full(len(pdf), -1, dtype=np.int64)
-            for p in sorted(polys, key=lambda q: q["poly_id"]):
-                rings = [np.asarray(r, dtype=np.float64) for r in p["rings"]]
-                inside = predicates.point_in_rings(lon, lat, rings)
-                burn[inside] = p["poly_id"]
-            out = pd.DataFrame({"x": pdf["x"], "y": pdf["y"], "burn": burn})
-            yield out[out["burn"] >= 0]
-
-    return grid.select("x", "y").distinct().mapInPandas(
-        _burn, schema="x BIGINT, y BIGINT, burn BIGINT")
+    lon, lat = pixel_center_exprs(origin_x, origin_y, res)
+    pix = grid.select("x", "y").distinct().selectExpr(
+        "x", "y", "struct(x, y) AS _px", f"{lon} AS _lon", f"{lat} AS _lat")
+    hits = spatial_join(pix, PolygonIndex(polys, res=None), lon="_lon",
+                        lat="_lat", pt_id_col="_px")
+    return hits.groupBy("x", "y").agg(F.max("poly_id").alias("burn"))
 
 
 def extract_point_values(points: DataFrame, grid: DataFrame,

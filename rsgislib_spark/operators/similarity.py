@@ -8,7 +8,7 @@ probe only matching (or adjacent) cells — the standard
 inverted-file ANN layout re-expressed as a Spark equi-join.
 
 Dot products run in two tiers (cf. spatial_join's refine dispatch,
-codegen CASE below codegen_max_edges):
+codegen CASE up to _CODEGEN_MAX_EDGES edges):
 
 1. Column-vs-column and SMALL fixed-matrix dots are UNROLLED
    fixed-dim arithmetic (``v[0]*c0 + v[1]*c1 + ...``) — pure
@@ -39,7 +39,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 # Above this many total terms (k rows x dim) a single unrolled scalar
 # expression stops compiling acceptably (Janino superlinear in nesting
 # depth; 64 KB method limit) -> switch to the Arrow batch fold. Mirrors
-# spatial_join.codegen_max_edges = 512.
+# spatial_join._CODEGEN_MAX_EDGES = 512.
 _CODEGEN_MAX_TERMS = 512
 
 # Above this many total terms the per-dimension ordered fold inside the

@@ -28,8 +28,8 @@ a JVM join, and the even-odd rule is a count. A polygon gets
 ``ceil(non-horizontal edges / BAND_EDGES)`` bands; edges that span a
 band are further split into x-slabs, so a candidate meets a few dozen
 edges however large or spiky its polygon. Dimension-sized driver
-indexes (``codegen_max_edges``) refine with a codegen CASE over
-literal rings instead, in one WholeStageCodegen span.
+indexes (up to ``_CODEGEN_MAX_EDGES`` edges) refine with a codegen
+CASE over literal rings instead, in one WholeStageCodegen span.
 
 Both refines evaluate the IEEE crossing formula of
 predicates.point_in_rings / raycast_sql: bit-exact against the numpy
@@ -78,6 +78,7 @@ _SURE = 1e300
 # hash instead of broadcast (~48 B/row -> ~190 MB of broadcast at the
 # cap, inside the "few hundred MB" comfort zone of guide 3.1).
 _BROADCAST_MAX_ROWS = 4_000_000
+_CODEGEN_MAX_EDGES = 512  # larger driver indexes take the edge refine
 
 
 # ------------------------------------------------------ polygon pass
@@ -392,13 +393,13 @@ def _tag(points: DataFrame, pt_id_col: str | None, needed: bool):
     return tagged.localCheckpoint(), "__sj_pt_id", ["__sj_pt_id"]
 
 
-def _gate(df: DataFrame, rows: int, max_rows: int) -> DataFrame:
-    """Broadcast a polygon-side table up to ``max_rows``, else a
-    shuffled hash join (its per-partition build side is rows/N;
+def _gate(df: DataFrame, rows: int) -> DataFrame:
+    """Broadcast a polygon-side table up to ``_BROADCAST_MAX_ROWS``,
+    else a shuffled hash join (its per-partition build side is rows/N;
     measured 1.8x faster than sort-merge on the cover shape). Counts,
     not Catalyst's estimates: a point side estimated from its
     column-pruned source would otherwise be the one broadcast."""
-    return F.broadcast(df) if rows <= max_rows else df.hint("shuffle_hash")
+    return F.broadcast(df) if rows <= _BROADCAST_MAX_ROWS else df.hint("shuffle_hash")
 
 
 def _candidates(pts: DataFrame, cover: DataFrame, res_set: list,
@@ -472,10 +473,7 @@ def _attach(points: DataFrame, how: str, pt_id: str | None, temp: list,
 
 def spatial_join(points: DataFrame, index: PolygonIndex, how: str = "inner",
                  lon: str = "lon", lat: str = "lat",
-                 broadcast_max_cover: int = 4_000_000,
-                 pt_id_col: str | None = None,
-                 refine: str = "auto",
-                 codegen_max_edges: int = 512) -> DataFrame:
+                 pt_id_col: str | None = None) -> DataFrame:
     """Join points to the polygons containing them.
 
     how='inner' → matched (point, poly) pairs (a point in k polygons
@@ -486,30 +484,44 @@ def spatial_join(points: DataFrame, index: PolygonIndex, how: str = "inner",
     (spatial_select_gp semantics, vectorutils/__init__.py:1585:
     tmp unique id + drop_duplicates).
 
-    refine: 'codegen' (a CASE over the literal rings), 'edges' (the
-    edge join) or 'auto' — codegen up to ``codegen_max_edges`` total
-    edges. Both evaluate the identical IEEE crossing formula.
+    The refine follows the index: a codegen CASE over the literal
+    rings up to ``_CODEGEN_MAX_EDGES`` total edges, the edge join
+    above. Both evaluate the identical IEEE crossing formula.
 
     pt_id_col: pass the layer's natural unique key (url, pt_id) — the
     robust zero-cost path. Without one, the hows that join back (and
     the edge refine, which counts per point) tag the points with a
     materialized temp id (see ``_tag``).
     """
-    if how not in _HOWS or refine not in ("auto", "codegen", "edges"):
-        raise ValueError(f"how must be one of {_HOWS} and refine one of "
-                         f"auto/codegen/edges, got {how!r}, {refine!r}")
+    if how not in _HOWS:
+        raise ValueError(f"how must be one of {_HOWS}, got {how!r}")
+    join = _codegen_join if index.total_edges() <= _CODEGEN_MAX_EDGES else _edge_join
+    return join(points, index, how, lon, lat, pt_id_col)
+
+
+def _codegen_join(points: DataFrame, index: PolygonIndex, how: str = "inner",
+                  lon: str = "lon", lat: str = "lat", pt_id_col: str | None = None):
+    """spatial_join refined by ``PolygonIndex.refine_expr``: candidates
+    keep their payload, so only the hows that join back need an id."""
+    points, pt_id, temp = _tag(points, pt_id_col, how != "inner")
     spark = points.sparkSession
-    use_codegen = refine == "codegen" or (
-        refine == "auto" and index.total_edges() <= codegen_max_edges)
-    points, pt_id, temp = _tag(points, pt_id_col, how != "inner" or not use_codegen)
-    cover = _gate(index.cover_df(spark), index._cover.num_rows, broadcast_max_cover)
+    cover = _gate(index.cover_df(spark), index._cover.num_rows)
+    matched = (_candidates(points, cover, index.res_set, lon, lat)
+               .where(index.refine_expr(lon, lat)).drop(*_COVER.names[1:]))
     ids = index.ids_df(spark) if how == "right" else None
-    if use_codegen:
-        matched = (_candidates(points, cover, index.res_set, lon, lat)
-                   .where(index.refine_expr(lon, lat)).drop(*_COVER.names[1:]))
-        return _attach(points, how, pt_id, temp, ids, matched=matched)
+    return _attach(points, how, pt_id, temp, ids, matched=matched)
+
+
+def _edge_join(points: DataFrame, index: PolygonIndex, how: str = "inner",
+               lon: str = "lon", lat: str = "lat", pt_id_col: str | None = None):
+    """spatial_join refined by the edge join (``_edge_pairs``): slim
+    (pt_id, lon, lat) candidates, matches joined back on the id."""
+    points, pt_id, temp = _tag(points, pt_id_col, True)
+    spark = points.sparkSession
+    cover = _gate(index.cover_df(spark), index._cover.num_rows)
     cand = _candidates(points.select(pt_id, lon, lat), cover, index.res_set, lon, lat)
-    edges = _gate(index.edges_df(spark), index._edges.num_rows, broadcast_max_cover)
+    edges = _gate(index.edges_df(spark), index._edges.num_rows)
+    ids = index.ids_df(spark) if how == "right" else None
     return _attach(points, how, pt_id, temp, ids,
                    pairs=_edge_pairs(cand, edges, pt_id, lon, lat))
 
@@ -573,14 +585,14 @@ def spatial_join_df(points: DataFrame, polys: DataFrame,
     layer = _polygon_pass(polys, res, max_cells, id_col, geom_col).localCheckpoint()
     rows = {r["res"]: r["count"] for r in layer.groupBy("res").count().collect()}
     n_edges = rows.pop(None, 0)  # edge rows carry no res
-    cover = _gate(_part(layer, _COVER), sum(rows.values()), _BROADCAST_MAX_ROWS)
+    cover = _gate(_part(layer, _COVER), sum(rows.values()))
     # spread the slim point side: the cell-assign/explode stage feeds
     # the candidate joins, and a few-row-group source would run them
     # in 1-2 tasks. Hash-spread on the id key: no sort inside the scan
     # task, and the per-point count needs no further shuffle
     slim = spread_scan(points.select(pt_id, lon, lat), by=pt_id)
     pairs = _edge_pairs(_candidates(slim, cover, sorted(rows), lon, lat),
-                        _gate(_part(layer, _EDGES), n_edges, _BROADCAST_MAX_ROWS),
+                        _gate(_part(layer, _EDGES), n_edges),
                         pt_id, lon, lat)
     if not with_payload:
         return pairs

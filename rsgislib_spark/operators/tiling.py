@@ -73,14 +73,12 @@ def salt_hot_cells(df: DataFrame, cell_col: str = "cell",
     groupBy count over ``df`` — which RE-EXECUTES df's upstream
     pipeline when df isn't cached; at scale pass the known list
     instead (catalog column stats, the previous run's tile manifest,
-    or a cheap sampled count), measured 2x on the write-back bench
-    (BENCH/skew_bench.md). NB for the plain cell-keyed WRITE-BACK
+    or a cheap sampled count). NB for the plain cell-keyed WRITE-BACK
     exchange specifically, prefer df.hint('rebalance', cell_col):
     AQE splits oversized REBALANCE partitions natively (a
-    partitionBy(cell) write tolerates one cell across several files)
-    and wins both absolute time and N->4N scaling on that bench; the
-    salt is for shapes where the key must stay exact (equi-JOIN fan
-    out, strict one-task-per-tile kernels).
+    partitionBy(cell) write tolerates one cell across several files);
+    the salt is for shapes where the key must stay exact (equi-JOIN
+    fan out, strict one-task-per-tile kernels).
     """
     if hot is None:
         hot = hot_cells(df, cell_col, threshold_rows)

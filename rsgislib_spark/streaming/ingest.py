@@ -53,20 +53,18 @@ def run_available_now(stream_df: DataFrame, out_path: str,
     q.awaitTermination()
 
 
-def stream_spatial_join(pages: DataFrame, index,
-                        refine: str = "auto") -> DataFrame:
+def stream_spatial_join(pages: DataFrame, index) -> DataFrame:
     """Streaming geoparse → cell assign → spatial join.
 
     The engine's live-crawl twin of the batch flagship: every stage is
     a narrow Column expression or a broadcast hash join against the
     polygon cover, so the stream needs no watermark and runs in plain
     append mode — Structured Streaming executes the identical
-    codegen-refine plan the batch path uses (spatial_join.py
-    refine="auto"/"codegen"). A 1000-executor cluster runs this on a
-    live WARC feed with the same zero-shuffle hot path the scaling
-    bench measures. The edge refine (above codegen_max_edges) counts
-    crossings per point, an aggregation append mode rejects without a
-    watermark: keep streamed layers under the codegen limit.
+    codegen-refine plan the batch path uses. The edge refine, which
+    spatial_join takes for indexes above
+    ``spatial_join._CODEGEN_MAX_EDGES`` edges, counts crossings per
+    point, an aggregation append mode rejects without a watermark:
+    keep streamed layers under that limit.
 
     Inner-join semantics only: the other hows rejoin matches to the
     input — a stream-stream join Spark rejects without
@@ -76,5 +74,4 @@ def stream_spatial_join(pages: DataFrame, index,
     from ..operators import spatial_join as sj
 
     pts = geoparse(pages).where("lon IS NOT NULL")
-    return sj.spatial_join(pts, index, how="inner", refine=refine,
-                           pt_id_col="url")
+    return sj.spatial_join(pts, index, how="inner", pt_id_col="url")

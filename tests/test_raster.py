@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from rsgislib_spark.data import fixtures
 from rsgislib_spark.geometry import predicates
-from rsgislib_spark.operators import raster
+from rsgislib_spark.operators import raster, spatial_join as sj
 
 OX, OY, RES = fixtures.GRID_ORIGIN_X, fixtures.GRID_ORIGIN_Y, fixtures.GRID_RES
 
@@ -45,6 +45,64 @@ def test_rasterize_pixel_center_rule(spark, grid):
             for x in np.nonzero(inside)[0]:
                 assert (int(x), y) in got
                 assert got[(int(x), y)] >= p["poly_id"]  # higher id may win
+
+
+def _burn_zones():
+    """A banded, slabbed star, a square with a hole that overlaps it
+    and a triangle over both — inside the fixture grid."""
+    rng = np.random.default_rng(3)
+    ang = np.sort(rng.uniform(0, 2 * np.pi, 300))
+    rad = rng.uniform(0.01, 0.05, 300)
+    star = np.stack([-0.94 + rad * np.cos(ang), 51.94 + rad * np.sin(ang)], 1)
+    square = [(-0.99, 51.89), (-0.91, 51.89), (-0.91, 51.97), (-0.99, 51.97),
+              (-0.99, 51.89)]
+    hole = [(-0.97, 51.91), (-0.93, 51.91), (-0.93, 51.95), (-0.97, 51.95),
+            (-0.97, 51.91)]
+    tri = [(-0.96, 51.88), (-0.89, 51.93), (-0.95, 51.99), (-0.96, 51.88)]
+    return [dict(poly_id=4, rings=[np.vstack([star, star[:1]])]),
+            dict(poly_id=2, rings=[square, hole]),
+            dict(poly_id=7, rings=[tri])]
+
+
+@pytest.mark.parametrize("path", ["codegen", "edges"])
+def test_rasterize_two_bands_both_refines(spark, monkeypatch, path):
+    """The burn is a spatial join of the pixel centres: on either
+    refine, a two-band grid burns each pixel once with the highest id
+    whose rings (holes included) hold its centre, as numpy
+    point_in_rings says; the plan has no Python node, and building
+    the frame runs no Spark job."""
+    zones = _burn_zones()
+    star = sj.PolygonIndex(zones[:1], res=None)._cover
+    assert star["nb"][0].as_py() > 1 and star["ms"][0].as_py() > 1
+    monkeypatch.setattr(sj, "_CODEGEN_MAX_EDGES",
+                        10 ** 6 if path == "codegen" else 0)
+    grid2 = fixtures.grid_df(spark, bands=(1, 2))
+    sc = spark.sparkContext
+    group = f"rasterize_build_{path}"
+    sc.setJobGroup(group, "rasterize_polygons build")
+    try:
+        burn = raster.rasterize_polygons(grid2, zones, OX, OY, RES)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    plan = burn._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, node
+    assert ("partial_count" in plan) == (path == "edges")
+
+    xs, ys = np.meshgrid(np.arange(fixtures.GRID_W), np.arange(fixtures.GRID_H))
+    lon, lat = fixtures.pixel_center_lonlat(xs.ravel(), ys.ravel())
+    want = np.full(lon.shape, -1)
+    for p in sorted(zones, key=lambda q: q["poly_id"]):
+        rings = [np.asarray(r, dtype=np.float64) for r in p["rings"]]
+        want[predicates.point_in_rings(lon, lat, rings)] = p["poly_id"]
+    hit = np.flatnonzero(want >= 0)
+    assert set(want[hit]) == {2, 4, 7}
+    rows = burn.collect()
+    assert len(rows) == len({(r.x, r.y) for r in rows})
+    assert {(r.x, r.y): r.burn for r in rows} == {
+        (int(xs.ravel()[i]), int(ys.ravel()[i])): int(want[i]) for i in hit}
 
 
 def test_point_extract_sentinels(spark, grid):

@@ -18,8 +18,8 @@ def pts(spark):
     return df
 
 
-def test_shuffle_join_path_matches_broadcast(spark, pts):
-    """broadcast_max_cover=0 forces the shuffle hash join (the large-
+def test_shuffle_join_path_matches_broadcast(spark, pts, monkeypatch):
+    """_BROADCAST_MAX_ROWS=0 forces the shuffle hash join (the large-
     polygon-set path). Same results, different physical plan."""
     idx = sj.PolygonIndex.from_fixture(fixtures.POLYGONS)
     b = {(r.url, r.poly_id) for r in
@@ -32,7 +32,8 @@ def test_shuffle_join_path_matches_broadcast(spark, pts):
     try:
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        shuffled = sj.spatial_join(pts, idx, how="inner", broadcast_max_cover=0)
+        monkeypatch.setattr(sj, "_BROADCAST_MAX_ROWS", 0)
+        shuffled = sj.spatial_join(pts, idx, how="inner")
         s = {(r.url, r.poly_id)
              for r in shuffled.select("url", "poly_id").collect()}
         assert s == b

@@ -300,21 +300,21 @@ def test_codegen_refine_equals_edge_refine(pts, oracle_pairs):
     evaluate the identical IEEE crossing formula — same pairs out."""
     idx = sj.PolygonIndex.from_fixture(fixtures.POLYGONS)
     cg = {(r.url, r.poly_id)
-          for r in sj.spatial_join(pts, idx, refine="codegen")
+          for r in sj._codegen_join(pts, idx)
           .select("url", "poly_id").collect()}
     ed = {(r.url, r.poly_id)
-          for r in sj.spatial_join(pts, idx, refine="edges")
+          for r in sj._edge_join(pts, idx)
           .select("url", "poly_id").collect()}
     assert cg == ed == oracle_pairs
 
 
 def test_codegen_refine_plan_has_no_python(pts):
-    """No refine puts Python in the plan: auto picks the codegen CASE
+    """No refine puts Python in the plan: spatial_join picks the codegen CASE
     for a dimension-sized layer, and the forced edge refine is a band
     join plus a count — no ArrowEvalPython / BatchEvalPython."""
     idx = sj.PolygonIndex.from_fixture(fixtures.POLYGONS)
     assert "EvalPython" not in _plan(sj.spatial_join(pts, idx))
-    plan_edges = _plan(sj.spatial_join(pts, idx, refine="edges"))
+    plan_edges = _plan(sj._edge_join(pts, idx))
     assert "EvalPython" not in plan_edges and "partial_count" in plan_edges
 
 
@@ -341,7 +341,7 @@ def test_codegen_refine_random_concave_polygons(spark):
         "pt_id BIGINT, lon DOUBLE, lat DOUBLE")
 
     got = {(r.pt_id, r.poly_id)
-           for r in sj.spatial_join(pts_df, idx, refine="codegen")
+           for r in sj._codegen_join(pts_df, idx)
            .select("pt_id", "poly_id").collect()}
     want = set()
     for p in polys:
@@ -351,14 +351,16 @@ def test_codegen_refine_random_concave_polygons(spark):
     assert got == want and len(want) >= 5  # sparse layer: ~10 expected hits
 
 
-def test_auto_refine_dispatch_by_edge_count(pts):
-    """auto picks the codegen CASE under codegen_max_edges and the
-    edge refine above it (a giant CASE would leave JIT'd codegen)."""
+def test_auto_refine_dispatch_by_edge_count(pts, monkeypatch):
+    """spatial_join picks the codegen CASE up to _CODEGEN_MAX_EDGES and
+    the edge refine above it (a giant CASE would leave JIT'd codegen)."""
     idx = sj.PolygonIndex.from_fixture(fixtures.POLYGONS)
     n_edges = idx.total_edges()
-    plan_small = _plan(sj.spatial_join(pts, idx, codegen_max_edges=n_edges))
+    monkeypatch.setattr(sj, "_CODEGEN_MAX_EDGES", n_edges)
+    plan_small = _plan(sj.spatial_join(pts, idx))
     assert "EvalPython" not in plan_small and "partial_count" not in plan_small
-    plan_big = _plan(sj.spatial_join(pts, idx, codegen_max_edges=n_edges - 1))
+    monkeypatch.setattr(sj, "_CODEGEN_MAX_EDGES", n_edges - 1)
+    plan_big = _plan(sj.spatial_join(pts, idx))
     assert "EvalPython" not in plan_big and "partial_count" in plan_big
 
 
@@ -503,7 +505,7 @@ def test_edge_refine_band_boundaries_and_vertices(spark):
         "pt_id BIGINT, lon DOUBLE, lat DOUBLE")
     want = _pairs_numpy(px, py, polys)
     assert len(want) > 50
-    assert _pairs(sj.spatial_join(pts_df, idx, refine="edges")) == want
+    assert _pairs(sj._edge_join(pts_df, idx)) == want
     poly_df = spark.createDataFrame([(1, bytearray(wkb.polygon_to_wkb([ring])))],
                                     "poly_id BIGINT, geometry BINARY")
     assert _pairs(sj.spatial_join_df(pts_df, poly_df, pt_id_col="pt_id")) == want
@@ -528,7 +530,7 @@ def test_edge_refine_antimeridian_star(spark):
         "pt_id BIGINT, lon DOUBLE, lat DOUBLE")
     idx = sj.PolygonIndex(polys, res=None)
     assert idx._cover["ms"][0].as_py() > 1
-    assert _pairs(sj.spatial_join(pts_df, idx, refine="edges")) == want
+    assert _pairs(sj._edge_join(pts_df, idx)) == want
     wrapped = np.where(ring[:, 0] > 180.0, ring[:, 0] - 360.0, ring[:, 0])
     poly_df = spark.createDataFrame(
         [(3, bytearray(wkb.polygon_to_wkb([np.stack([wrapped, ring[:, 1]], 1)])))],

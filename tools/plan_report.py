@@ -134,6 +134,12 @@ CHECKS = {
         expect=["PartitionFilters: [isnotnull(cell_r5"],
         forbid=[],
     ),
+    "rasterize: no Python node (pixel centres through the spatial join)": dict(
+        # the burn is the spatial join's point-in-polygon core over the
+        # distinct pixel centres — no per-pixel Python
+        expect=["BroadcastHashJoin"],
+        forbid=["MapInPandas", "ArrowEvalPython", "BatchEvalPython"],
+    ),
 }
 
 
@@ -165,8 +171,7 @@ def main():
         return sj.spatial_join(derived.points_df(spark, sf), idx, how="inner")
 
     def spatial_edges():
-        return sj.spatial_join(derived.points_df(spark, sf), idx,
-                               how="inner", refine="edges")
+        return sj._edge_join(derived.points_df(spark, sf), idx, how="inner")
 
     def zonal_q():
         joined = sj.spatial_join(derived.points_df(spark, sf), idx, how="inner")
@@ -281,6 +286,13 @@ def main():
         a_cell = assigned.select("cell_r5").limit(1).collect()[0][0]
         return spark.read.parquet(p).where(f"cell_r5 = {a_cell}")
 
+    def rasterize():
+        from rsgislib_spark.operators import raster
+
+        return raster.rasterize_polygons(
+            fixtures.grid_df(spark, bands=(1, 2)), fixtures.GRID_POLYGONS,
+            fixtures.GRID_ORIGIN_X, fixtures.GRID_ORIGIN_Y, fixtures.GRID_RES)
+
     dfs = dict(zip(CHECKS, [headline, spatial, spatial_edges, zonal_q,
                             minhash, unq_ids,
                             sj_left_pages, overlay_pairs, clump_edges,
@@ -288,7 +300,7 @@ def main():
                             lsh_pairs, ivf,
                             decontaminate, repetition,
                             span_dd, url_rollup, pii,
-                            pushdown, partition_prune]))
+                            pushdown, partition_prune, rasterize]))
 
     out = ["# PLANS — physical-plan evidence (generated by tools/plan_report.py)",
            "",
