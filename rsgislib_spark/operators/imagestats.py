@@ -32,26 +32,31 @@ def correlation(pairs: DataFrame, a: str = "va", b: str = "vb") -> DataFrame:
     return pairs.agg(r.alias("corr"))
 
 
+def _bucket(c: str, n_bins: int, lo: float, width: float):
+    return F.least(
+        F.greatest(F.floor((F.col(c) - lo) / width).cast("long"), F.lit(0)),
+        F.lit(n_bins - 1))
+
+
 def mutual_information(pairs: DataFrame, n_bins: int, lo: float, hi: float,
                        a: str = "va", b: str = "vb",
                        round_to: int = 6) -> DataFrame:
     """MI over an n_bins x n_bins joint histogram (nats). Rounded:
-    LN differs by ulps across engines."""
+    LN differs by ulps across engines. The total and both marginals
+    are window sums over the joint histogram (<= n_bins² rows), so
+    the input is read once and building the frame runs no job."""
     width = (hi - lo) / n_bins
-
-    def bucket(c):
-        return F.least(
-            F.greatest(F.floor((F.col(c) - lo) / width).cast("long"), F.lit(0)),
-            F.lit(n_bins - 1))
-
-    bb = pairs.select(bucket(a).alias("ba"), bucket(b).alias("bb"))
-    n_total = bb.count()
-    joint = bb.groupBy("ba", "bb").agg(F.count("*").alias("nab"))
-    ma = bb.groupBy("ba").agg(F.count("*").alias("na"))
-    mb = bb.groupBy("bb").agg(F.count("*").alias("nb"))
-    j = joint.join(ma, "ba").join(mb, "bb")
-    term = (F.col("nab") / n_total) * F.log(
-        (F.col("nab").cast("double") * n_total)
+    joint = pairs.groupBy(
+        _bucket(a, n_bins, lo, width).alias("ba"),
+        _bucket(b, n_bins, lo, width).alias("bb"),
+    ).agg(F.count("*").alias("nab"))
+    nab = F.col("nab")
+    n_total = F.sum(nab).over(Window.partitionBy())
+    na = F.sum(nab).over(Window.partitionBy("ba"))
+    nb = F.sum(nab).over(Window.partitionBy("bb"))
+    j = joint.select(nab, n_total.alias("nt"), na.alias("na"), nb.alias("nb"))
+    term = (nab / F.col("nt")) * F.log(
+        (nab.cast("double") * F.col("nt"))
         / (F.col("na").cast("double") * F.col("nb").cast("double")))
     return j.agg(F.round(F.sum(term), round_to).alias("mi"))
 
@@ -59,22 +64,19 @@ def mutual_information(pairs: DataFrame, n_bins: int, lo: float, hi: float,
 def emd_1d(pairs: DataFrame, n_bins: int, lo: float, hi: float,
            a: str = "va", b: str = "vb", round_to: int = 6) -> DataFrame:
     """1-D earth mover's distance between the two value histograms:
-    sum |CDF_a - CDF_b| * binwidth (public closed form)."""
+    sum |CDF_a - CDF_b| * binwidth (public closed form). Each pair
+    becomes its a-bucket and its b-bucket, one groupBy(bucket) counts
+    both histograms, and the total is a window sum over them: one
+    input pass, no job while building the frame."""
     width = (hi - lo) / n_bins
-
-    def hist(c, name):
-        return (
-            pairs.select(
-                F.least(
-                    F.greatest(F.floor((F.col(c) - lo) / width).cast("long"),
-                               F.lit(0)),
-                    F.lit(n_bins - 1)).alias("bucket"))
-            .groupBy("bucket").agg(F.count("*").alias(name))
-        )
-
-    n_total = pairs.count()
-    h = hist(a, "na").join(hist(b, "nb"), "bucket", "full").fillna(0)
+    h = pairs.select(F.inline(F.array(
+        F.struct(_bucket(a, n_bins, lo, width).alias("bucket"),
+                 F.lit(1).alias("ia"), F.lit(0).alias("ib")),
+        F.struct(_bucket(b, n_bins, lo, width).alias("bucket"),
+                 F.lit(0).alias("ia"), F.lit(1).alias("ib")),
+    ))).groupBy("bucket").agg(F.sum("ia").alias("na"), F.sum("ib").alias("nb"))
     w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
+    n_total = F.sum("na").over(Window.partitionBy())
     cdf = h.select(
         "bucket",
         (F.sum("na").over(w) / n_total).alias("ca"),

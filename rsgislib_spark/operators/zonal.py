@@ -4,8 +4,9 @@ Replicates ``calc_zonal_band_stats``
 (python/rsgislib/zonalstats/__init__.py:166-520) semantics exactly
 (SURVEY.md §2.4 "semantic traps"):
 
-- values masked by no-data and [min_thres, max_thres) BEFORE
-  aggregation (:433-445);
+- values masked BEFORE aggregation (:433-445): NULL and no-data
+  dropped (NULL whether or not ``no_data_val`` is set), only
+  min_thres <= v <= max_thres kept (both bounds inclusive);
 - stddev is numpy ``.std()`` = POPULATION stddev (:458);
 - median is exact, not approximate (:473, numpy.ma.median);
 - mode is the SMALLEST modal value on ties (:467,
@@ -13,15 +14,22 @@ Replicates ``calc_zonal_band_stats``
 - empty groups get ``out_no_data_val`` sentinels, not dropped
   (:475-497) — realized as a left join from the zone list + coalesce.
 
+One input pass: the masked rows become a (zone, value, count)
+histogram and one groupBy(zone) over it yields every statistic —
+the exact median as ``percentile(value, 0.5, count)``, the mode as
+``min_by`` over (-count, value), the moments as count-weighted sums.
+
 For bit-reproducibility against the DuckDB oracle, variance is
 written as the explicit two-moment formula over integer-valued
 doubles (sums exact < 2^53 → identical IEEE results regardless of
-summation order); see data/derived.py.
+summation order); see data/derived.py. Under the same condition
+Σ v·n equals Σ v exactly; for non-integer values the weighted sums
+can differ from a raw-row sum in the last ulps.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 ZONAL_STATS = ["min", "max", "mean", "stddev", "sum", "count", "median", "mode"]
 
@@ -30,9 +38,9 @@ def masked(values: DataFrame, value_col: str = "value",
            no_data_val: float | None = None,
            min_thres: float | None = None,
            max_thres: float | None = None) -> DataFrame:
-    """The pixel mask of zonalstats/__init__.py:433-445: drop no-data,
-    drop < min_thres, drop > max_thres."""
-    out = values
+    """The pixel mask of zonalstats/__init__.py:433-445: drop NULL and
+    no-data, drop < min_thres, drop > max_thres."""
+    out = values.where(F.col(value_col).isNotNull())
     if no_data_val is not None:
         out = out.where(F.col(value_col) != no_data_val)
     if min_thres is not None:
@@ -56,40 +64,21 @@ def zonal_stats(joined: DataFrame, zone_col: str = "poly_id",
     Returns one row per zone in ``zones`` (or per observed zone) with
     columns min/max/mean/stddev/sum/count/median/mode (+sentinels).
     """
-    vals = masked(joined, value_col, no_data_val, min_thres, max_thres)
-
-    aggs = vals.groupBy(zone_col).agg(
-        F.min(value_col).alias("min"),
-        F.max(value_col).alias("max"),
-        # explicit two-moment formulas — bit-identical to the oracle
-        # (and to numpy's .std() up to summation order; exact on
-        # integer-valued doubles)
-        (F.sum(value_col) / F.count(value_col)).alias("mean"),
-        F.sqrt(
-            F.sum(F.col(value_col) * F.col(value_col)) / F.count(value_col)
-            - (F.sum(value_col) / F.count(value_col))
-            * (F.sum(value_col) / F.count(value_col))
-        ).alias("stddev"),
-        F.sum(value_col).alias("sum"),
-        F.count(value_col).cast("double").alias("count"),
-        F.expr(f"CAST(percentile({value_col}, 0.5) AS DOUBLE)").alias("median"),
+    v, n = F.col(value_col), F.col("_n")
+    hist = masked(joined, value_col, no_data_val, min_thres, max_thres) \
+        .groupBy(zone_col, value_col).agg(F.count("*").alias("_n"))
+    s, cnt = F.sum(v * n), F.sum(n)
+    aggs = hist.groupBy(zone_col).agg(
+        F.min(v).alias("min"),
+        F.max(v).alias("max"),
+        (s / cnt).alias("mean"),
+        F.sqrt(F.sum(v * v * n) / cnt - (s / cnt) * (s / cnt)).alias("stddev"),
+        s.alias("sum"),
+        cnt.cast("double").alias("count"),
+        F.expr(f"CAST(percentile({value_col}, 0.5, _n) AS DOUBLE)").alias("median"),
+        # smallest-tie mode: argmin over (-count, value)
+        F.min_by(v, F.struct((-n).alias("a"), v.alias("b"))).alias("mode"),
     )
-
-    # smallest-tie mode: count per (zone, value), then argmin over
-    # (-count, value) via min_by on a struct — both stages have
-    # map-side partial aggregation (no window, no full shuffle of raw
-    # rows beyond the groupBy)
-    mode_df = (
-        vals.groupBy(zone_col, value_col).agg(F.count("*").alias("_n"))
-        .groupBy(zone_col)
-        .agg(
-            F.min_by(
-                F.col(value_col), F.struct((-F.col("_n")).alias("a"),
-                                           F.col(value_col).alias("b"))
-            ).alias("mode")
-        )
-    )
-    aggs = aggs.join(mode_df, zone_col)
 
     if zones is not None:
         sentinel = F.lit(float(out_no_data_val))

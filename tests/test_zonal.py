@@ -17,6 +17,10 @@ def joined(spark):
         (2, 10.0), (2, 20.0), (2, 30.0), (2, 40.0),
         (3, 1.0), (3, 2000.0),  # 2000 above max_thres
         (4, -99.0),             # only no-data → sentinel zone
+        # non-integer values: the count-weighted histogram sums round
+        # differently from raw-row sums, so compared with a tolerance
+        (6, 0.1), (6, 0.7), (6, 0.7), (6, 2.35), (6, -1.9), (6, 0.1),
+        (6, 0.1),
     ]
     return spark.createDataFrame(rows, "poly_id BIGINT, meas DOUBLE")
 
@@ -43,7 +47,8 @@ def numpy_zonal(rows, no_data=-99.0, max_thres=1000.0):
 
 
 def test_zonal_matches_numpy_oracle(spark, joined):
-    zones = spark.createDataFrame([(i,) for i in [1, 2, 3, 4, 5]], "poly_id BIGINT")
+    zones = spark.createDataFrame([(i,) for i in [1, 2, 3, 4, 5, 6]],
+                                  "poly_id BIGINT")
     got = {
         r.poly_id: r.asDict()
         for r in zonal.zonal_stats(
@@ -53,13 +58,54 @@ def test_zonal_matches_numpy_oracle(spark, joined):
     }
     rows = [(r.poly_id, r.meas) for r in joined.collect()]
     want = numpy_zonal(rows)
-    for z in [1, 2, 3]:
+    for z in [1, 2, 3, 6]:
         for k, v in want[z].items():
             assert got[z][k] == pytest.approx(v, abs=1e-9), (z, k)
     # zones 4 (all masked) and 5 (absent) → sentinels everywhere
     for z in [4, 5]:
         for k in zonal.ZONAL_STATS:
             assert got[z][k] == -9999.0, (z, k)
+
+
+@pytest.mark.parametrize("no_data_val", [None, -1.0])
+def test_null_values_masked_like_no_data(spark, no_data_val):
+    """A NULL value is dropped like no-data whether or not no_data_val
+    is set: it never wins the mode, never counts, and a zone of only
+    NULLs gets the sentinel in every column (:475-497)."""
+    rows = [(1, 1.0), (1, None), (2, 2.0), (2, None), (2, None), (3, None)]
+    joined = spark.createDataFrame(rows, "poly_id BIGINT, meas DOUBLE")
+    zones = spark.createDataFrame([(1,), (2,), (3,)], "poly_id BIGINT")
+    got = {r.poly_id: r.asDict() for r in zonal.zonal_stats(
+        joined, value_col="meas", zones=zones, no_data_val=no_data_val
+    ).collect()}
+    for z, v in [(1, 1.0), (2, 2.0)]:
+        for k in ["min", "max", "mean", "sum", "median", "mode"]:
+            assert got[z][k] == v, (z, k)
+        assert got[z]["count"] == 1.0 and got[z]["stddev"] == 0.0, z
+    for k in zonal.ZONAL_STATS:
+        assert got[3][k] == -9999.0, k
+
+
+def test_zonal_plan_one_scan_no_join_no_build_job(spark, tmp_path):
+    """On a file input the executed plan reads it once and holds no
+    join (one histogram, one aggregate), and building the frame runs
+    no Spark job."""
+    path = str(tmp_path / "joined.parquet")
+    spark.createDataFrame([(z, float(v)) for z in range(4) for v in range(9)],
+                          "poly_id BIGINT, meas DOUBLE").write.parquet(path)
+    joined = spark.read.parquet(path)
+    sc = spark.sparkContext
+    sc.setJobGroup("zonal_build", "zonal_stats build")
+    try:
+        out = zonal.zonal_stats(joined, value_col="meas")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("zonal_build")) == []
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "Join" not in plan, plan
+    assert {r.poly_id: r.mode for r in out.collect()} == {z: 0.0 for z in range(4)}
 
 
 def test_mode_smallest_tie(spark, joined):

@@ -30,8 +30,10 @@ CHECKS = {
         forbid=["SortMergeJoin", "BatchEvalPython", "ArrowEvalPython"],
     ),
     "zonal stats": dict(
+        # one histogram, one aggregate over it: the input is read once
+        # and no join puts separate aggregates back together
         expect=["HashAggregate", "partial_"],
-        forbid=[],
+        forbid=["SortMergeJoin", "ShuffledHashJoin"],
     ),
     "minhash signatures": dict(
         expect=["HashAggregate", "partial_min"],
