@@ -237,10 +237,13 @@ def cover_bbox(lon_min: float, lat_min: float, lon_max: float,
     return pack(res, gx.ravel(), gy.ravel())
 
 
+COVER_RES = range(5, 14)  # adaptive_cover_res picks from these
+
+
 def adaptive_cover_res(lon_min: float, lat_min: float, lon_max: float,
-                       lat_max: float, lo: int = 5, hi: int = 13,
-                       max_cells: int = 256) -> int:
-    """Finest res whose bbox cover stays under ``max_cells``.
+                       lat_max: float, max_cells: int = 256) -> int:
+    """Finest res of ``COVER_RES`` whose bbox cover stays under
+    ``max_cells`` (the coarsest when none does).
 
     This is the engine's analog of the reference choosing a tile size
     (create_tiles width/height, python/src/imageutils.cpp:2061): small
@@ -249,8 +252,8 @@ def adaptive_cover_res(lon_min: float, lat_min: float, lon_max: float,
     """
     w = np.mod(np.subtract(lon_max, lon_min), 360.0)
     w, h = np.where(w == 0.0, 360.0, w), np.maximum(np.subtract(lat_max, lat_min), 1e-9)
-    out = np.full(np.shape(w), lo)  # the finest res that fits wins
-    for res in range(lo + 1, hi + 1):
+    out = np.full(np.shape(w), COVER_RES[0])  # the finest res that fits wins
+    for res in COVER_RES[1:]:
         n = 1 << res
         out = np.where((w / (360.0 / n) + 1) * (h / (180.0 / n) + 1) <= max_cells, res, out)
     return int(out) if out.ndim == 0 else out

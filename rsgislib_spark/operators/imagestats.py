@@ -64,10 +64,12 @@ def mutual_information(pairs: DataFrame, n_bins: int, lo: float, hi: float,
 def emd_1d(pairs: DataFrame, n_bins: int, lo: float, hi: float,
            a: str = "va", b: str = "vb", round_to: int = 6) -> DataFrame:
     """1-D earth mover's distance between the two value histograms:
-    sum |CDF_a - CDF_b| * binwidth (public closed form). Each pair
-    becomes its a-bucket and its b-bucket, one groupBy(bucket) counts
-    both histograms, and the total is a window sum over them: one
-    input pass, no job while building the frame."""
+    sum |CDF_a - CDF_b| * binwidth over all n_bins (public closed form).
+    Each pair becomes its a-bucket and its b-bucket, one groupBy(bucket)
+    counts both histograms, and the total is a window sum over them:
+    one input pass, no job while building the frame. The CDFs hold
+    over buckets empty in both histograms, so each present bucket
+    weighs for the buckets up to the next present one."""
     width = (hi - lo) / n_bins
     h = pairs.select(F.inline(F.array(
         F.struct(_bucket(a, n_bins, lo, width).alias("bucket"),
@@ -75,16 +77,17 @@ def emd_1d(pairs: DataFrame, n_bins: int, lo: float, hi: float,
         F.struct(_bucket(b, n_bins, lo, width).alias("bucket"),
                  F.lit(0).alias("ia"), F.lit(1).alias("ib")),
     ))).groupBy("bucket").agg(F.sum("ia").alias("na"), F.sum("ib").alias("nb"))
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
+    w = Window.orderBy("bucket")
+    upto = w.rowsBetween(Window.unboundedPreceding, 0)
     n_total = F.sum("na").over(Window.partitionBy())
     cdf = h.select(
-        "bucket",
-        (F.sum("na").over(w) / n_total).alias("ca"),
-        (F.sum("nb").over(w) / n_total).alias("cb"),
+        (F.lead("bucket", 1, n_bins).over(w) - F.col("bucket")).alias("gap"),
+        (F.sum("na").over(upto) / n_total).alias("ca"),
+        (F.sum("nb").over(upto) / n_total).alias("cb"),
     )
     return cdf.agg(
-        F.round(F.sum(F.abs(F.col("ca") - F.col("cb")) * width), round_to)
-        .alias("emd"))
+        F.round(F.sum(F.abs(F.col("ca") - F.col("cb")) * F.col("gap") * width),
+                round_to).alias("emd"))
 
 
 def window_correlation(pairs: DataFrame, win: int = 32,

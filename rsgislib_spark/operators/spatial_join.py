@@ -33,10 +33,12 @@ CASE over literal rings instead, in one WholeStageCodegen span.
 
 Both refines evaluate the IEEE crossing formula of
 predicates.point_in_rings / raycast_sql: bit-exact against the numpy
-and DuckDB oracles. Scale: the cover and the edges are broadcast
-while their row counts stay under a gate (no shuffle of the point
-side); larger layers take shuffled hash joins. Dense cells (cities)
-are the skew risk — see tiling.salt_hot_cells and AQE in session.py.
+and DuckDB oracles. Scale: no join carries a hint; Spark broadcasts a
+side under ``spark.sql.autoBroadcastJoinThreshold`` by its planning
+estimate, and AQE re-plans a shuffled join by the real size of its
+materialized stage, so a large layer takes a shuffled join. Dense
+cells (cities) are the skew risk — see tiling.salt_hot_cells and AQE
+in session.py.
 """
 
 from __future__ import annotations
@@ -74,10 +76,6 @@ _CROSS_SQL = ("((y1 > _y) <> (y2 > _y))"
 # candidate of its (band, slab) counts it (finite: the formula is exact)
 _SURE = 1e300
 
-# covers and edge tables above this many rows are joined by shuffled
-# hash instead of broadcast (~48 B/row -> ~190 MB of broadcast at the
-# cap, inside the "few hundred MB" comfort zone of guide 3.1).
-_BROADCAST_MAX_ROWS = 4_000_000
 _CODEGEN_MAX_EDGES = 512  # larger driver indexes take the edge refine
 
 
@@ -393,21 +391,13 @@ def _tag(points: DataFrame, pt_id_col: str | None, needed: bool):
     return tagged.localCheckpoint(), "__sj_pt_id", ["__sj_pt_id"]
 
 
-def _gate(df: DataFrame, rows: int) -> DataFrame:
-    """Broadcast a polygon-side table up to ``_BROADCAST_MAX_ROWS``,
-    else a shuffled hash join (its per-partition build side is rows/N;
-    measured 1.8x faster than sort-merge on the cover shape). Counts,
-    not Catalyst's estimates: a point side estimated from its
-    column-pruned source would otherwise be the one broadcast."""
-    return F.broadcast(df) if rows <= _BROADCAST_MAX_ROWS else df.hint("shuffle_hash")
-
-
-def _candidates(pts: DataFrame, cover: DataFrame, res_set: list,
+def _candidates(pts: DataFrame, cover: DataFrame, res_set: list | range,
                 lon: str, lat: str) -> DataFrame:
-    """Points ⋈ cover on one probe cell per resolution in use (cell
-    ids encode the res, so one equi-join key serves every
-    granularity; the explode fans out the PROBE side only), then the
-    codegen bbox prefilter."""
+    """Points ⋈ cover on one probe cell per resolution in ``res_set``
+    (the index's resolutions in use, or every resolution the cover
+    may use; cell ids encode the res, so one equi-join key serves
+    every granularity; the explode fans out the PROBE side only),
+    then the codegen bbox prefilter."""
     if len(res_set) == 1:
         cell = quadcell.cell_col(lon, lat, res_set[0])
     else:
@@ -505,8 +495,7 @@ def _codegen_join(points: DataFrame, index: PolygonIndex, how: str = "inner",
     keep their payload, so only the hows that join back need an id."""
     points, pt_id, temp = _tag(points, pt_id_col, how != "inner")
     spark = points.sparkSession
-    cover = _gate(index.cover_df(spark), index._cover.num_rows)
-    matched = (_candidates(points, cover, index.res_set, lon, lat)
+    matched = (_candidates(points, index.cover_df(spark), index.res_set, lon, lat)
                .where(index.refine_expr(lon, lat)).drop(*_COVER.names[1:]))
     ids = index.ids_df(spark) if how == "right" else None
     return _attach(points, how, pt_id, temp, ids, matched=matched)
@@ -518,12 +507,11 @@ def _edge_join(points: DataFrame, index: PolygonIndex, how: str = "inner",
     (pt_id, lon, lat) candidates, matches joined back on the id."""
     points, pt_id, temp = _tag(points, pt_id_col, True)
     spark = points.sparkSession
-    cover = _gate(index.cover_df(spark), index._cover.num_rows)
-    cand = _candidates(points.select(pt_id, lon, lat), cover, index.res_set, lon, lat)
-    edges = _gate(index.edges_df(spark), index._edges.num_rows)
+    cand = _candidates(points.select(pt_id, lon, lat), index.cover_df(spark),
+                       index.res_set, lon, lat)
     ids = index.ids_df(spark) if how == "right" else None
-    return _attach(points, how, pt_id, temp, ids,
-                   pairs=_edge_pairs(cand, edges, pt_id, lon, lat))
+    return _attach(points, how, pt_id, temp, ids, pairs=_edge_pairs(
+        cand, index.edges_df(spark), pt_id, lon, lat))
 
 
 def poly_cover_df(polys: DataFrame, res: int | None = None,
@@ -557,11 +545,13 @@ def spatial_join_df(points: DataFrame, polys: DataFrame,
 
     No driver collect anywhere:
     1. the polygon pass (one mapInArrow) emits the cover and the edge
-       table, materialized once by an eager localCheckpoint — no
-       CacheManager entry is left behind; one aggregate over it gives
-       the res probe set and the row counts of the broadcast gates;
+       table into a lazy localCheckpoint: it runs once, inside the
+       caller's first action, and both branches read its blocks;
+       building the frame runs no job and leaves no CacheManager entry;
     2. candidates = points ⋈ cover on the cell key + codegen bbox
-       prefilter (the exact filter spatial_join uses);
+       prefilter (the exact filter spatial_join uses); points probe
+       ``[res]``, or every resolution of ``quadcell.COVER_RES`` when
+       the cover picks one per polygon;
     3. the edge refine joins each candidate to its polygon's edges in
        its band and slab and keeps odd crossing counts — no Python
        sees a candidate;
@@ -582,18 +572,18 @@ def spatial_join_df(points: DataFrame, polys: DataFrame,
     from ..session import spread_scan
 
     points, pt_id, temp = _tag(points, pt_id_col, True)
-    layer = _polygon_pass(polys, res, max_cells, id_col, geom_col).localCheckpoint()
-    rows = {r["res"]: r["count"] for r in layer.groupBy("res").count().collect()}
-    n_edges = rows.pop(None, 0)  # edge rows carry no res
-    cover = _gate(_part(layer, _COVER), sum(rows.values()))
+    # lazy, not a plain plan: each branch's filter and projection are
+    # pushed below any shared exchange, so without the checkpoint the
+    # pass would run once per branch
+    layer = _polygon_pass(polys, res, max_cells, id_col, geom_col).localCheckpoint(eager=False)
     # spread the slim point side: the cell-assign/explode stage feeds
     # the candidate joins, and a few-row-group source would run them
     # in 1-2 tasks. Hash-spread on the id key: no sort inside the scan
     # task, and the per-point count needs no further shuffle
     slim = spread_scan(points.select(pt_id, lon, lat), by=pt_id)
-    pairs = _edge_pairs(_candidates(slim, cover, sorted(rows), lon, lat),
-                        _gate(_part(layer, _EDGES), n_edges),
-                        pt_id, lon, lat)
+    res_set = quadcell.COVER_RES if res is None else [res]
+    pairs = _edge_pairs(_candidates(slim, _part(layer, _COVER), res_set, lon, lat),
+                        _part(layer, _EDGES), pt_id, lon, lat)
     if not with_payload:
         return pairs
     ids = polys.select(F.col(id_col).alias("poly_id")) if how == "right" else None

@@ -122,7 +122,7 @@ def test_adaptive_cover_res_bounds():
     r_small = quadcell.adaptive_cover_res(0, 0, 0.1, 0.1)
     r_big = quadcell.adaptive_cover_res(-180, -90, 180, 90)
     assert r_small > r_big
-    assert 5 <= r_big <= 13 and 5 <= r_small <= 13
+    assert r_big in quadcell.COVER_RES and r_small in quadcell.COVER_RES
 
 
 def test_hex_assignment_is_nearest_center():

@@ -6,8 +6,9 @@ post-gate drift."""
 import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
+sys.path.insert(0, REPO)
 
 import query_fingerprints as qf  # noqa: E402
 
@@ -48,6 +49,6 @@ def test_update_refuses_out_of_window_change(monkeypatch, tmp_path):
     monkeypatch.setattr(qf, "HASHES_PATH", str(tmp_path / "qh.json"))
     import shutil
 
-    shutil.copy(os.path.join("/root/repo", "QUERY_HASHES.json"),
+    shutil.copy(os.path.join(REPO, "QUERY_HASHES.json"),
                 qf.HASHES_PATH)
     assert qf.update(99) == 1

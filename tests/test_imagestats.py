@@ -69,3 +69,27 @@ def test_emd_1d_matches_numpy_without_build_jobs(spark, pairs, bands):
     ca, cb = np.cumsum(ha) / ha.sum(), np.cumsum(hb) / hb.sum()
     want = float(np.abs(ca - cb).sum() * (HI - LO) / N_BINS)
     assert df.collect()[0]["emd"] == pytest.approx(want, abs=2e-6)
+
+
+def test_emd_1d_counts_buckets_empty_in_both(spark):
+    """An interior bucket empty in both histograms still carries the
+    CDF gap: 4 pairs (0.5, 2.5) over 3 unit bins move all mass 2 bins."""
+    pairs = spark.createDataFrame([(0.5, 2.5)] * 4, "va DOUBLE, vb DOUBLE")
+    assert imagestats.emd_1d(pairs, 3, 0.0, 3.0).collect()[0]["emd"] == 2.0
+
+
+def test_emd_1d_matches_numpy_with_empty_interior_bucket(spark):
+    """Values on a grid that leaves interior buckets empty in both
+    bands (and one empty in only one) match the closed form over all
+    bins."""
+    rng = np.random.default_rng(11)
+    a = rng.choice([0.5, 1.5, 6.5, 7.5], size=200)
+    b = rng.choice([1.5, 4.5, 7.5], size=200)
+    pairs = spark.createDataFrame([(float(x), float(y)) for x, y in zip(a, b)],
+                                  "va DOUBLE, vb DOUBLE")
+    ha = np.bincount(np.floor(a).astype(int), minlength=8)
+    hb = np.bincount(np.floor(b).astype(int), minlength=8)
+    assert ((ha == 0) & (hb == 0))[2:4].all()
+    want = float(np.abs(np.cumsum(ha) - np.cumsum(hb)).sum() / 200)
+    got = imagestats.emd_1d(pairs, 8, 0.0, 8.0).collect()[0]["emd"]
+    assert got == pytest.approx(want, abs=2e-6)

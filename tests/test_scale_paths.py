@@ -18,30 +18,21 @@ def pts(spark):
     return df
 
 
-def test_shuffle_join_path_matches_broadcast(spark, pts, monkeypatch):
-    """_BROADCAST_MAX_ROWS=0 forces the shuffle hash join (the large-
+def test_shuffle_join_path_matches_broadcast(spark, pts, no_broadcast):
+    """Both broadcast thresholds at -1 force shuffled joins (the large-
     polygon-set path). Same results, different physical plan."""
     idx = sj.PolygonIndex.from_fixture(fixtures.POLYGONS)
     b = {(r.url, r.poly_id) for r in
          sj.spatial_join(pts, idx, how="inner").select("url", "poly_id").collect()}
-    # disable auto-broadcast so Catalyst/AQE can't rescue the tiny
-    # fixture — this is what the plan looks like with a huge cover
-    conf = spark.conf
-    old = conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    old_aqe = conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", old)
-    try:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        monkeypatch.setattr(sj, "_BROADCAST_MAX_ROWS", 0)
+    # with auto-broadcast off neither Catalyst nor AQE broadcasts the
+    # tiny fixture — this is what the plan looks like with a huge cover
+    with no_broadcast():
         shuffled = sj.spatial_join(pts, idx, how="inner")
         s = {(r.url, r.poly_id)
              for r in shuffled.select("url", "poly_id").collect()}
         assert s == b
         plan = shuffled._jdf.queryExecution().executedPlan().toString()
         assert "ShuffledHashJoin" in plan or "SortMergeJoin" in plan
-    finally:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
 
 
 def test_zonal_via_rasterize_matches_point_join(spark):

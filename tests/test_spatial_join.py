@@ -239,16 +239,85 @@ def test_spatial_join_df_temp_id(pts, polys_wkb_df):
     assert out.count() >= pts.count()  # fan-out >= 1 row per point
 
 
-def test_spatial_join_df_gate_invariance(pts, polys_wkb_df, monkeypatch):
-    """The broadcast gates only pick a join strategy: with both the
-    cover and the edge table over the gate (shuffled hash joins) the
+def test_spatial_join_df_gate_invariance(pts, polys_wkb_df, no_broadcast):
+    """Spark's broadcast thresholds only pick a join strategy: with both
+    at -1 the cover and the edge table are joined by shuffle and the
     pairs are identical."""
-    a = sj.spatial_join_df(pts, polys_wkb_df, pt_id_col="url")
-    monkeypatch.setattr(sj, "_BROADCAST_MAX_ROWS", 0)
-    b = sj.spatial_join_df(pts, polys_wkb_df, pt_id_col="url")
-    assert "ShuffledHashJoin" in b._jdf.queryExecution().executedPlan().toString()
-    assert sorted(map(tuple, a.select("url", "poly_id").collect())) == \
-        sorted(map(tuple, b.select("url", "poly_id").collect()))
+    a = sorted(map(tuple, sj.spatial_join_df(pts, polys_wkb_df, pt_id_col="url")
+                   .select("url", "poly_id").collect()))
+    with no_broadcast():
+        b = sj.spatial_join_df(pts, polys_wkb_df, pt_id_col="url")
+        plan = _plan(b)
+        assert "ShuffledHashJoin" in plan or "SortMergeJoin" in plan
+        assert a == sorted(map(tuple, b.select("url", "poly_id").collect()))
+
+
+def _no_build_jobs(spark, group, build):
+    """Run ``build`` in a job group and assert it started no Spark job."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "spatial join build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], group
+
+
+def test_join_builds_start_no_job(spark, pts, polys_wkb_df, monkeypatch):
+    """With a natural key, building a join frame runs no Spark job:
+    spatial_join_df for every how (the polygon pass is checkpointed
+    lazily and the probe set is static), and spatial_join on both
+    refine paths."""
+    for how in sj._HOWS:
+        _no_build_jobs(spark, f"sjoin_df_build_{how}", lambda: sj.spatial_join_df(
+            pts, polys_wkb_df, how=how, pt_id_col="url"))
+    idx = sj.PolygonIndex.from_fixture(fixtures.POLYGONS)
+    for limit in (10 ** 6, 0):  # codegen CASE, edge join
+        monkeypatch.setattr(sj, "_CODEGEN_MAX_EDGES", limit)
+        for how in sj._HOWS:
+            _no_build_jobs(spark, f"sjoin_build_{limit}_{how}", lambda: sj.spatial_join(
+                pts, idx, how=how, pt_id_col="url"))
+
+
+def test_spatial_join_df_one_pass_per_action(spark, pts, polys_wkb_df, monkeypatch):
+    """The polygon pass runs once per polygon, inside the first action,
+    and both the cover and the edge branch read its checkpoint."""
+    acc = spark.sparkContext.accumulator(0)
+    pass_batch = sj._pass_batch
+
+    def counted(batch, res, max_cells):
+        acc.add(batch.num_rows)
+        return pass_batch(batch, res, max_cells)
+
+    monkeypatch.setattr(sj, "_pass_batch", counted)
+    out = sj.spatial_join_df(pts, polys_wkb_df, how="left", pt_id_col="url")
+    assert acc.value == 0
+    out.count()
+    assert acc.value == len(fixtures.POLYGONS)
+
+
+def test_huge_point_side_is_never_broadcast(spark, polys_wkb_df, tmp_path):
+    """Plan only: a point frame Catalyst sizes as huge is never under a
+    BroadcastExchange; the polygon side, read from a file Catalyst can
+    size, is the one broadcast."""
+    polys_wkb_df.write.parquet(str(tmp_path / "polys"))
+    polys = spark.read.parquet(str(tmp_path / "polys"))
+    huge = spark.range(10 ** 10).selectExpr(
+        "id AS pt_id", "CAST(id % 360 AS DOUBLE) - 180 AS lon",
+        "CAST(id % 180 AS DOUBLE) - 90 AS lat")
+    for how in sj._HOWS:
+        lines = _plan(sj.spatial_join_df(huge, polys, how=how,
+                                         pt_id_col="pt_id")).splitlines()
+        assert any("BroadcastExchange" in ln for ln in lines), how
+        depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+        for i, ln in enumerate(lines):
+            if "BroadcastExchange" not in ln:
+                continue
+            j = i + 1
+            while j < len(lines) and depth[j] > depth[i]:
+                assert "Range" not in lines[j], (how, lines[j])
+                j += 1
 
 
 def test_poly_cover_df_matches_index_cover(spark, polys_wkb_df):

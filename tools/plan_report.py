@@ -9,7 +9,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 CHECKS = {
     "headline pipeline (read → geoparse → cells → spatial join → count)": dict(
@@ -328,7 +329,7 @@ def main():
             lines.append(f"- {'✅ absent' if not bad else '❌ PRESENT'} forbid `{f_}`")
         lines += ["", "```", plan_short, "```", ""]
         out += lines
-    with open(os.path.join("/root/repo", "PLANS.md"), "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     # fingerprint drift rule: a gated query changed outside the
     # driver window fails the plan report (round-5 process fix)
