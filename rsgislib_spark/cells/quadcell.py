@@ -48,9 +48,9 @@ MAX_RES = 27
 
 # The formula, written once. {lon}/{lat} are SQL sub-expressions.
 # Op order matters: both engines must evaluate the identical tree.
-_X_SQL = ("CAST(FLOOR(({lon} + CAST(180 AS DOUBLE)) * CAST({n!r} AS DOUBLE)"
+_X_SQL = ("CAST(FLOOR(({lon} + CAST(180 AS DOUBLE)) * CAST({n} AS DOUBLE)"
           " / CAST(360 AS DOUBLE)) AS BIGINT)")
-_Y_SQL = ("CAST(FLOOR(({lat} + CAST(90 AS DOUBLE)) * CAST({n!r} AS DOUBLE)"
+_Y_SQL = ("CAST(FLOOR(({lat} + CAST(90 AS DOUBLE)) * CAST({n} AS DOUBLE)"
           " / CAST(180 AS DOUBLE)) AS BIGINT)")
 _CELL_SQL = ("(CAST({res} AS BIGINT) * 72057594037927936 + " + _X_SQL
              + " * 268435456 + " + _Y_SQL + ")")
@@ -72,6 +72,13 @@ def cell_col(lon: str, lat: str, res: int) -> Column:
     Cached: expression parsing is driver-side serial work, and the
     same (lon, lat, res) column is requested on every query."""
     return F.expr(cell_sql(lon, lat, res))
+
+
+def cell_col_at(lon: str, lat: str, res: str) -> Column:
+    """cell_col at the res held in an int column: 2^res as a double is
+    exact, so it gives the ids cell_col gives at that res."""
+    n = f"CAST(shiftleft(CAST(1 AS BIGINT), {res}) AS DOUBLE)"
+    return F.expr(_CELL_SQL.format(lon=lon, lat=lat, res=res, n=n))
 
 
 def cell_xy_cols(lon: str, lat: str, res: int) -> tuple[Column, Column]:

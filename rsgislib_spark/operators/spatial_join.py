@@ -391,20 +391,23 @@ def _tag(points: DataFrame, pt_id_col: str | None, needed: bool):
     return tagged.localCheckpoint(), "__sj_pt_id", ["__sj_pt_id"]
 
 
-def _candidates(pts: DataFrame, cover: DataFrame, res_set: list | range,
+def _candidates(pts: DataFrame, cover: DataFrame, res_set: list | None,
                 lon: str, lat: str) -> DataFrame:
-    """Points ⋈ cover on one probe cell per resolution in ``res_set``
-    (the index's resolutions in use, or every resolution the cover
-    may use; cell ids encode the res, so one equi-join key serves
-    every granularity; the explode fans out the PROBE side only),
-    then the codegen bbox prefilter."""
-    if len(res_set) == 1:
+    """Points ⋈ cover on one probe cell per resolution in use (cell
+    ids encode the res, so one equi-join key serves every granularity;
+    the explode fans out the PROBE side only), then the codegen bbox
+    prefilter. ``res_set`` None takes them from the cover inside the
+    action, by a scalar subquery (no join)."""
+    if res_set is None:
+        pts = pts.withColumn("_res", F.explode(cover.agg(F.collect_set("res")).scalar()))
+        cell = quadcell.cell_col_at(lon, lat, "_res")
+    elif len(res_set) == 1:
         cell = quadcell.cell_col(lon, lat, res_set[0])
     else:
         cell = F.explode(F.array(*[quadcell.cell_col(lon, lat, r) for r in res_set]))
     x, y = F.col(lon), F.col(lat)
     in_y = (y >= F.col("ymin")) & (y <= F.col("ymax"))
-    return pts.withColumn("cell", cell).join(cover, "cell").where(
+    return pts.withColumn("cell", cell).drop("_res").join(cover, "cell").where(
         (x >= F.col("xmin")) & (x <= F.col("xmax")) & in_y
         # antimeridian bbox: xmax>180 means the wrapped-west part is
         # also in range; re-check lon+360
@@ -545,13 +548,13 @@ def spatial_join_df(points: DataFrame, polys: DataFrame,
 
     No driver collect anywhere:
     1. the polygon pass (one mapInArrow) emits the cover and the edge
-       table into a lazy localCheckpoint: it runs once, inside the
-       caller's first action, and both branches read its blocks;
-       building the frame runs no job and leaves no CacheManager entry;
+       table into a lazy localCheckpoint (no CacheManager entry): it
+       runs once, inside the caller's first action, and both branches
+       read its blocks. Building runs no job unless the polygon plan
+       holds an exchange (a repartition), whose stage it then runs;
     2. candidates = points ⋈ cover on the cell key + codegen bbox
-       prefilter (the exact filter spatial_join uses); points probe
-       ``[res]``, or every resolution of ``quadcell.COVER_RES`` when
-       the cover picks one per polygon;
+       prefilter (the exact filter spatial_join uses), probing
+       ``[res]`` or the resolutions the cover uses (``_candidates``);
     3. the edge refine joins each candidate to its polygon's edges in
        its band and slab and keeps odd crossing counts — no Python
        sees a candidate;
@@ -563,6 +566,12 @@ def spatial_join_df(points: DataFrame, polys: DataFrame,
     project exactly those columns, the payload join is a
     row-preserving identity (every matched id comes from points and
     the join key is unique there) and pure cost.
+
+    A polygon frame Spark cannot size (an RDD, a Python-list
+    createDataFrame) is never broadcast at planning time, so its edge
+    join is a sort-merge join; AQE keeps it when most partitions of
+    the polygon stage are empty (a small layer). Read such a layer
+    from a file, or persist and count it, to size it.
     """
     if how not in _HOWS:
         raise ValueError(f"how must be one of {_HOWS}, got {how!r}")
@@ -581,7 +590,7 @@ def spatial_join_df(points: DataFrame, polys: DataFrame,
     # in 1-2 tasks. Hash-spread on the id key: no sort inside the scan
     # task, and the per-point count needs no further shuffle
     slim = spread_scan(points.select(pt_id, lon, lat), by=pt_id)
-    res_set = quadcell.COVER_RES if res is None else [res]
+    res_set = None if res is None else [res]
     pairs = _edge_pairs(_candidates(slim, _part(layer, _COVER), res_set, lon, lat),
                         _part(layer, _EDGES), pt_id, lon, lat)
     if not with_payload:

@@ -1,5 +1,5 @@
 """Cell-index unit tests (numpy + duckdb; Spark only for the
-kring_col parity test)."""
+kring_col and cell_col_at parity tests)."""
 
 import duckdb
 import numpy as np
@@ -75,6 +75,19 @@ def test_kring_col_matches_numpy(spark, res):
             quadcell.kring_col("cell", k, res).alias("ring")).collect()]
         want = quadcell.kring_np(cells, k)
         assert got == [[int(c) for c in row if c >= 0] for row in want], k
+
+
+def test_cell_col_at_matches_numpy(spark):
+    """A res read from a column gives the cell ids of cell_np at that
+    res, bit for bit, over every resolution a cover may use."""
+    res = np.repeat(np.array(quadcell.COVER_RES), len(LON))
+    lon, lat = np.tile(LON, len(quadcell.COVER_RES)), np.tile(LAT, len(quadcell.COVER_RES))
+    df = spark.createDataFrame(list(zip(lon.tolist(), lat.tolist(), res.tolist())),
+                               "lon DOUBLE, lat DOUBLE, res INT")
+    got = np.array([r.cell for r in df.select(
+        quadcell.cell_col_at("lon", "lat", "res").alias("cell")).collect()])
+    want = np.concatenate([quadcell.cell_np(LON, LAT, r) for r in quadcell.COVER_RES])
+    assert np.array_equal(got, want)
 
 
 def test_cover_bbox_covers_points():

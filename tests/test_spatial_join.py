@@ -1,6 +1,8 @@
 """Spatial join end-to-end vs a driver-side python oracle, on the
 pages fixture (FIXTURES.md golden_spatial_join style)."""
 
+import re
+
 import numpy as np
 import pyarrow.compute as pc
 import pytest
@@ -252,8 +254,8 @@ def test_spatial_join_df_gate_invariance(pts, polys_wkb_df, no_broadcast):
         assert a == sorted(map(tuple, b.select("url", "poly_id").collect()))
 
 
-def _no_build_jobs(spark, group, build):
-    """Run ``build`` in a job group and assert it started no Spark job."""
+def _build_jobs(spark, group, build) -> list:
+    """Run ``build`` in a job group; the ids of the Spark jobs it started."""
     sc = spark.sparkContext
     sc.setJobGroup(group, "spatial join build")
     try:
@@ -261,23 +263,30 @@ def _no_build_jobs(spark, group, build):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], group
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_join_builds_start_no_job(spark, pts, polys_wkb_df, monkeypatch):
     """With a natural key, building a join frame runs no Spark job:
     spatial_join_df for every how (the polygon pass is checkpointed
-    lazily and the probe set is static), and spatial_join on both
-    refine paths."""
+    lazily and the probe resolutions are read inside the action), and
+    spatial_join on both refine paths. A polygon frame whose plan holds
+    an exchange is the exception: the lazy checkpoint takes its RDD
+    from the adaptive plan, which runs that shuffle stage."""
     for how in sj._HOWS:
-        _no_build_jobs(spark, f"sjoin_df_build_{how}", lambda: sj.spatial_join_df(
-            pts, polys_wkb_df, how=how, pt_id_col="url"))
+        group = f"sjoin_df_build_{how}"
+        assert _build_jobs(spark, group, lambda: sj.spatial_join_df(
+            pts, polys_wkb_df, how=how, pt_id_col="url")) == [], group
+    group = "sjoin_df_build_repartitioned"
+    assert len(_build_jobs(spark, group, lambda: sj.spatial_join_df(
+        pts, polys_wkb_df.repartition(3), pt_id_col="url"))) == 1
     idx = sj.PolygonIndex.from_fixture(fixtures.POLYGONS)
     for limit in (10 ** 6, 0):  # codegen CASE, edge join
         monkeypatch.setattr(sj, "_CODEGEN_MAX_EDGES", limit)
         for how in sj._HOWS:
-            _no_build_jobs(spark, f"sjoin_build_{limit}_{how}", lambda: sj.spatial_join(
-                pts, idx, how=how, pt_id_col="url"))
+            group = f"sjoin_build_{limit}_{how}"
+            assert _build_jobs(spark, group, lambda: sj.spatial_join(
+                pts, idx, how=how, pt_id_col="url")) == [], group
 
 
 def test_spatial_join_df_one_pass_per_action(spark, pts, polys_wkb_df, monkeypatch):
@@ -318,6 +327,32 @@ def test_huge_point_side_is_never_broadcast(spark, polys_wkb_df, tmp_path):
             while j < len(lines) and depth[j] > depth[i]:
                 assert "Range" not in lines[j], (how, lines[j])
                 j += 1
+
+
+def test_spatial_join_df_unsized_polygons_plan(spark, pts, polys_wkb_df):
+    """A polygon frame Catalyst cannot size (this RDD-backed list) is
+    never broadcast at planning time: the edge join is planned as a
+    sort-merge join. AQE broadcasts its polygon side by the size of the
+    materialized stage unless most of that stage's partitions are
+    empty: 8 polygons over 8 shuffle partitions are broadcast, over 32
+    (the session default) they are not. The point side, which Catalyst
+    can size, is the broadcast side of the cover join."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    for parts, smj_after in (("8", 0), ("32", 1)):
+        spark.conf.set(key, parts)
+        try:
+            out = sj.spatial_join_df(pts, polys_wkb_df, pt_id_col="url",
+                                     with_payload=False)
+            out.collect()
+        finally:
+            spark.conf.set(key, old)
+        # the outer adaptive plan's two halves (a cached input nests its own)
+        final, initial = re.split(r"(?m)^\+- == Initial Plan ==", _plan(out))
+        assert initial.count("SortMergeJoin") == 1, initial
+        assert final.count("SortMergeJoin") == smj_after, final
+        cover_join = [ln for ln in final.splitlines() if "BroadcastHashJoin [cell" in ln]
+        assert len(cover_join) == 1 and "BuildLeft" in cover_join[0], final
 
 
 def test_poly_cover_df_matches_index_cover(spark, polys_wkb_df):
