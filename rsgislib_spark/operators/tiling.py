@@ -1,5 +1,6 @@
 """Tiling / partitioning: tile assignment, skew salting, halo
-duplication, partitioned writes.
+duplication. Tiles are written by ``sources/catalog.write_partitioned``
+(resumable: ``plans/checkpoint.checkpointed_write``).
 
 The reference's unit of distribution is the tile file
 (create_tiles, python/src/imageutils.cpp:2061;
@@ -126,21 +127,3 @@ def halo_explode(df: DataFrame, cell_col: str, res: int, k: int = 1) -> DataFram
         df.withColumn("home_cell", F.col(cell_col))
         .withColumn("tile_cell", F.explode(quadcell.kring_col(cell_col, k, res)))
     )
-
-
-def write_tiles(df: DataFrame, path: str, cell_col: str = "cell_r5",
-                mode: str = "overwrite") -> None:
-    """Write cell-partitioned output — the tile-assignment sink
-    (split_by_attribute -> per-value files,
-    vectorutils/__init__.py:2584; Iceberg identity-partition layout).
-
-    ``path`` may be a filesystem path (parquet, dynamic partition
-    overwrite) or — with the Iceberg runtime on the classpath — a
-    ``catalog.db.table`` identifier (atomic overwritePartitions); see
-    sources/catalog.py. Either way re-runs are idempotent per tile —
-    the resume story (plans/checkpoint.py) rides on this."""
-    from ..sources import catalog
-
-    catalog.write_partitioned(
-        df, path, cell_col,
-        mode="overwrite-partitions" if mode == "overwrite" else mode)

@@ -16,9 +16,9 @@ analyzed plan's text with its exprIds renumbered (so a plan rebuilt
 from scratch by a restarted job, in the same driver or a new one,
 hashes the same) plus the identity of every leaf the text does not
 print: the status (path, length, modification time) of every input
-file, the rows of a local relation, and a per-object identity for
-leaves it cannot describe (a rebuilt frame of that kind recomputes
-rather than risk skipping stale tiles).
+file as the relation listed it, the rows of a local relation, and a
+per-object identity for leaves it cannot describe (a rebuilt frame of
+that kind recomputes rather than risk skipping stale tiles).
 
 A resume of an unchanged plan over unchanged inputs is a driver-only
 no-op: when every tile the manifest records under the fingerprint is
@@ -26,6 +26,12 @@ still there, and their number equals the tile-set size the writing
 run recorded, no Spark job runs. Otherwise the missing tiles are found
 with a broadcast anti-join and only they are recomputed; the rest of
 the output is kept by dynamic partition overwrite (idempotent).
+
+The write is the only materialization: an Observation on the written
+frame reports the tiles it wrote, with the write's own job, and each
+tile's row count is the sum of the parquet footers in its directory,
+which dynamic partition overwrite replaced whole. The manifest counts
+are the written rows by construction; nothing is cached or counted.
 
 Manifests are plain JSON-lines next to the output (an Iceberg
 deployment would put this in snapshot metadata; the JSONL keeps the
@@ -42,7 +48,7 @@ import re
 import shutil
 import time
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..sources import catalog
 
@@ -59,7 +65,8 @@ def lineage_fingerprint(df: DataFrame, extra: str = "") -> str:
     each leaf adds its identity (subquery leaves included):
 
     - file relation: every input file's path, length and modification
-      time, read through the Hadoop FileSystem (remote stores work);
+      time, from the relation's own file listing (no request per
+      file; remote stores work);
     - ``LocalRelation``: its rows;
     - ``LogicalRDD``: the RDD id; any other leaf kind: its exprId-
       bearing text. Both are per object, so a rebuilt frame of such a
@@ -81,7 +88,7 @@ def lineage_fingerprint(df: DataFrame, extra: str = "") -> str:
     for plan in [analyzed] + [subs.apply(i) for i in range(subs.size())]:
         leaves = plan.collectLeaves()
         for i in range(leaves.size()):
-            h.update(_leaf_identity(spark, leaves.apply(i)).encode() + b"\0")
+            h.update(_leaf_identity(leaves.apply(i)).encode() + b"\0")
     return h.hexdigest()[:16]
 
 
@@ -114,7 +121,7 @@ def _plan_text(spark, plan) -> str:
         lambda m: f"#{ids.setdefault(m.group(1), len(ids))}", text)
 
 
-def _leaf_identity(spark, leaf) -> str:
+def _leaf_identity(leaf) -> str:
     kind = leaf.nodeName()
     if kind in ("Range", "OneRowRelation"):
         return kind
@@ -124,14 +131,12 @@ def _leaf_identity(spark, leaf) -> str:
         return f"rdd:{leaf.rdd().id()}"
     if (kind == "LogicalRelation" and leaf.relation().getClass()
             .getSimpleName() == "HadoopFsRelation"):
-        conf = spark._jsparkSession.sessionState().newHadoopConf()
-        Path = spark._jvm.org.apache.hadoop.fs.Path
-        files = []
-        for f in sorted(leaf.relation().location().inputFiles()):
-            p = Path(f)
-            st = p.getFileSystem(conf).getFileStatus(p)
-            files.append(f"{f}|{st.getLen()}|{st.getModificationTime()}")
-        return "\n".join(files)
+        # the relation's own listing: no file-system request per file
+        files = leaf.relation().location().allFiles()
+        return "\n".join(sorted(
+            f"{st.getPath().toString()}|{st.getLen()}|"
+            f"{st.getModificationTime()}"
+            for st in (files.apply(i) for i in range(files.size()))))
     return leaf.toString()
 
 
@@ -162,7 +167,8 @@ def checkpointed_write(df: DataFrame, path: str, cell_col: str,
        (idempotent on retry), one file per tile, spread over
        ``defaultParallelism`` tasks;
     4. rewrite the manifest with a row per written tile (tile, rows,
-       lineage, run_tiles, ts).
+       lineage, run_tiles, ts); ``rows`` is read from the parquet
+       footers of the tile's files, so it counts what was written.
 
     prune_stale=True additionally deletes on-disk partitions that the
     MANIFEST records under a different lineage and this plan no longer
@@ -239,7 +245,7 @@ def checkpointed_write(df: DataFrame, path: str, cell_col: str,
 def _write_missing(df: DataFrame, path: str, cell_col: str,
                    done: set) -> dict:
     """Write the tiles of ``df`` not in ``done``; return their row
-    counts, tile -> rows."""
+    counts, tile -> rows, read from the files the write produced."""
     spark = df.sparkSession
     todo = df
     if done:
@@ -248,20 +254,23 @@ def _write_missing(df: DataFrame, path: str, cell_col: str,
         todo = df.join(F.broadcast(done_df), cell_col, "left_anti")
 
     # hash-partition on the tile so every core writes and each tile is
-    # ONE file; persist so the manifest counts and the write are ONE
-    # materialization — a non-deterministic input can't make them
-    # disagree (the counts ARE the written rows)
+    # ONE file; the observation reports the written tiles from the
+    # write's own job
+    seen = Observation()
     todo = todo.repartition(
-        spark.sparkContext.defaultParallelism, cell_col).persist()
-    try:
-        counts = {
-            int(r[0]): int(r[1])
-            for r in todo.groupBy(cell_col).agg(F.count("*").alias("n"))
-            .collect()
-        }
-        if counts:
-            catalog.write_partitioned(todo, path, cell_col,
-                                      mode="overwrite-partitions")
-    finally:
-        todo.unpersist()
-    return counts
+        spark.sparkContext.defaultParallelism, cell_col
+    ).observe(seen, F.collect_set(cell_col).alias("tiles"))
+    catalog.write_partitioned(todo, path, cell_col,
+                              mode="overwrite-partitions")
+    # dynamic partition overwrite replaced each written tile's
+    # directory whole: its files hold exactly this run's rows
+    return {int(t): _footer_rows(os.path.join(path, f"{cell_col}={t}"))
+            for t in seen.get["tiles"]}
+
+
+def _footer_rows(tile_dir: str) -> int:
+    """Rows in the parquet files of ``tile_dir``, from their footers."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(os.path.join(tile_dir, f)).num_rows
+               for f in os.listdir(tile_dir) if f.endswith(".parquet"))

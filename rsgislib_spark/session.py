@@ -277,7 +277,7 @@ def _env(name: str, value: str | None):
                 os.environ[name] = old
 
 
-def spread_scan(df, min_parts: int | None = None, by=None):
+def spread_scan(df, by=None):
     """Raise a DataFrame's partition count to the cluster's default
     parallelism when the source delivers fewer splits.
 
@@ -327,7 +327,7 @@ def spread_scan(df, min_parts: int | None = None, by=None):
     since planning fall back to the RDD probe."""
     spark = df.sparkSession
     sc = spark.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = sc.defaultParallelism
     min_bytes = 2 << 20
     try:
         files = df.inputFiles()

@@ -350,6 +350,42 @@ def test_fresh_write_one_file_per_tile(spark, assigned, tmp_path):
         assert len(files) == 1, d
 
 
+def test_fresh_write_runs_only_the_write(spark, pages_src, tmp_path):
+    """A fresh call runs no more jobs than writing the same frame,
+    repartitioned by tile, straight through the catalog; it persists
+    nothing, and its manifest counts are the rows in each tile."""
+    from rsgislib_spark.sources import catalog
+
+    df = _tiles_from(spark, pages_src)
+    plain = df.repartition(spark.sparkContext.defaultParallelism, "cell_r5")
+    _, write_jobs = _jobs_during(spark, lambda: catalog.write_partitioned(
+        plain, str(tmp_path / "plain"), "cell_r5",
+        mode="overwrite-partitions"))
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs())
+    path = str(tmp_path / "tiles")
+    r, jobs = _jobs_during(spark, lambda: checkpoint.checkpointed_write(
+        df, path, "cell_r5"))
+    assert r["written"] > 0
+    assert jobs <= write_jobs
+    assert set(spark.sparkContext._jsc.getPersistentRDDs()) == persisted
+    per_tile = {t: n for t, n in spark.read.parquet(path)
+                .groupBy("cell_r5").count().collect()}
+    assert {t: e["rows"] for t, e in checkpoint.read_manifest(path).items()} \
+        == per_tile
+
+
+@pytest.mark.parametrize("where", ["false", "lon > 1000"])
+def test_empty_frame_writes_no_tile(spark, pages_src, tmp_path, where):
+    """An empty tile frame, empty by plan or only at run time, writes no
+    tile directory and records no manifest entry."""
+    path = str(tmp_path / "tiles")
+    r = checkpoint.checkpointed_write(
+        _tiles_from(spark, pages_src).where(where), path, "cell_r5")
+    assert (r["written"], r["rows"]) == (0, 0)
+    assert not [d for d in os.listdir(path) if d.startswith("cell_r5=")]
+    assert checkpoint.read_manifest(path) == {}
+
+
 def test_checkpointed_write_rejects_table_identifier(spark, assigned,
                                                      tmp_path, monkeypatch):
     """The manifest is a file next to the tiles, so a catalog table is

@@ -281,11 +281,14 @@ def main():
 
     def partition_prune():
         from rsgislib_spark.operators import tiling
+        from rsgislib_spark.sources import catalog
 
         p = "/tmp/plan_tiles.parquet"
         assigned = tiling.assign_tiles(
             geoparse(spark.read.parquet(tmp)).where("lon IS NOT NULL"))
-        tiling.write_tiles(assigned.select("url", "lon", "lat", "cell_r5"), p)
+        catalog.write_partitioned(
+            assigned.select("url", "lon", "lat", "cell_r5"), p, "cell_r5",
+            mode="overwrite-partitions")
         a_cell = assigned.select("cell_r5").limit(1).collect()[0][0]
         return spark.read.parquet(p).where(f"cell_r5 = {a_cell}")
 
