@@ -3,10 +3,11 @@
 Single place where the 100 TB posture is configured: AQE (runtime
 re-planning + skew-join splitting for dense city cells), Arrow for
 every pandas-UDF boundary, a local master as wide as the CPUs this
-process may use (``SPARK_GRAFT_CPUS`` overrides it), and
-shuffle-partition defaults overridable for a real cluster via normal
-spark-submit --conf. The driver JVM starts warm: it maps a class
-archive that an earlier launch on the host dumped (``class_archive``).
+process may use (``SPARK_GRAFT_CPUS`` overrides it) whose partition
+listing runs no wider than that master, and shuffle-partition
+defaults overridable for a real cluster via normal spark-submit
+--conf. The driver JVM starts warm: it maps a class archive that an
+earlier launch on the host dumped (``class_archive``).
 """
 
 from __future__ import annotations
@@ -75,7 +76,29 @@ def get_spark(app: str = "rsgislib_spark", master: str | None = None,
         spark = builder.getOrCreate()
     if "ArchiveClassesAtExit" in flags:
         _watch_creator(SparkContext._gateway.proc.pid)
+    _cap_listing(spark)
     return spark
+
+
+# Past 32 paths (spark.sql.sources.parallelPartitionDiscovery.threshold)
+# Spark lists a directory's subdirectories in a job with one task per
+# subdirectory, capped only by this setting (10000 by default). A
+# readback of 105 tiles ran a 105-task listing job on 4 cores, every
+# task shipping the Hadoop configuration: about half the readback.
+# One task per core keeps as many directories in flight as that job
+# could run at once, and pays the per-task cost once per core. A value
+# the caller or spark-submit set is kept; a non-local master keeps
+# Spark's.
+_LISTING = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+
+
+def _cap_listing(spark) -> None:
+    """Cap the partition-discovery job at ``defaultParallelism`` on a
+    local master whose session sets no value of its own."""
+    sc = spark.sparkContext
+    local = sc.master == "local" or sc.master.startswith("local[")
+    if local and spark.conf.get(_LISTING, None) is None:
+        spark.conf.set(_LISTING, str(sc.defaultParallelism))
 
 
 # The class archive: JDK dynamic class-data sharing (AppCDS). The

@@ -126,7 +126,11 @@ def write_partitioned(df: DataFrame, target: str, cell_col: str,
 
 
 def read_partitioned(spark, target: str) -> DataFrame:
-    """Read back either backend through one call."""
+    """Read back either backend through one call.
+
+    Past 32 tile directories Spark lists a parquet target in a job of
+    its own; on a ``get_spark`` local master that job runs at most one
+    task per core, not one per tile directory."""
     if is_table_identifier(target):
         return spark.table(target)
     return spark.read.parquet(target)

@@ -190,8 +190,8 @@ def _tiles_from(spark, src):
 _groups = itertools.count()
 
 
-def _jobs_during(spark, fn):
-    """(fn(), number of Spark jobs fn ran)."""
+def _job_ids_during(spark, fn):
+    """(fn(), ids of the Spark jobs fn ran)."""
     sc = spark.sparkContext
     group = f"checkpoint_call_{next(_groups)}"
     sc.setJobGroup(group, "checkpointed_write call")
@@ -200,7 +200,13 @@ def _jobs_during(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _jobs_during(spark, fn):
+    """(fn(), number of Spark jobs fn ran)."""
+    out, ids = _job_ids_during(spark, fn)
+    return out, len(ids)
 
 
 def test_resume_rebuilt_plan_skips_with_zero_jobs(spark, pages_src, tmp_path):
@@ -404,6 +410,25 @@ def test_checkpointed_write_rejects_table_identifier(spark, assigned,
 
 
 # ------------------------------------------------------ catalog backend
+
+def test_readback_lists_tiles_one_task_per_core(spark, tmp_path):
+    """Past 32 tile directories Spark lists them in a job of its own;
+    the session caps that job, and every stage of the read, at one
+    task per core (one task per directory, 40 here, uncapped)."""
+    from rsgislib_spark.sources import catalog
+
+    path = str(tmp_path / "tiles")
+    df = spark.range(400).select((F.col("id") % 40).alias("cell"), "id")
+    catalog.write_partitioned(df.repartition("cell"), path, "cell")
+    counts, jobs = _job_ids_during(spark, lambda: dict(
+        catalog.read_partitioned(spark, path).groupBy("cell").count()
+        .collect()))
+    assert counts == {c: 10 for c in range(40)}
+    tracker = spark.sparkContext.statusTracker()
+    tasks = [tracker.getStageInfo(s).numTasks
+             for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    assert tasks and max(tasks) <= spark.sparkContext.defaultParallelism
+
 
 def test_catalog_dispatch_parquet_roundtrip(spark, assigned, tmp_path):
     """Path target → parquet backend; dynamic overwrite keeps re-runs

@@ -1,4 +1,5 @@
-"""Session start-up: the codegen cache holds a whole pass, and the
+"""Session start-up: the codegen cache holds a whole pass, a local
+session lists partition directories in one task per core, and the
 class archive of ``session.class_archive`` is made once, mapped by
 later launches, and never fails a launch or changes a result.
 
@@ -11,6 +12,7 @@ import os
 import shutil
 import subprocess
 import sys
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -256,3 +258,50 @@ def test_second_run_compiles_no_class(spark, tmp_path):
         assert metric.getCount() - before == 0
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def test_local_session_caps_listing(spark):
+    assert spark.conf.get(session._LISTING) == \
+        str(spark.sparkContext.defaultParallelism)
+
+
+def test_caller_listing_value_is_kept(spark):
+    """A value passed to ``get_spark`` survives the cap, also when the
+    call reuses the running session."""
+    # the call re-applies DEFAULTS (shuffle.partitions 32, not the
+    # test session's 8) along with the caller's value
+    keys = [k for k in (*session.DEFAULTS, session._LISTING)
+            if spark.conf.isModifiable(k)]
+    old = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        s = session.get_spark("pytest", master=spark.sparkContext.master,
+                              **{session._LISTING: "3"})
+        assert s.conf.get(session._LISTING) == "3"
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+class _Conf(dict):
+    set = dict.__setitem__
+
+
+@pytest.mark.parametrize("master, conf, capped", [
+    ("local", {}, "64"),
+    ("local[*]", {}, "64"),
+    ("local[4,2]", {}, "64"),
+    ("local[*]", {session._LISTING: "7"}, "7"),
+    ("yarn", {}, None),
+    ("spark://host:7077", {}, None),
+    ("local-cluster[2,1,1024]", {}, None),
+])
+def test_listing_cap_decision(master, conf, capped):
+    """Only a local master with no value of its own is capped, at its
+    ``defaultParallelism``; a cluster keeps Spark's value."""
+    spark = SimpleNamespace(conf=_Conf(conf), sparkContext=SimpleNamespace(
+        master=master, defaultParallelism=64))
+    session._cap_listing(spark)
+    assert spark.conf.get(session._LISTING) == capped
