@@ -140,10 +140,6 @@ def parent_sql(cell: str, child_res: int, parent_res: int) -> str:
     return _PARENT_SQL.format(cell=cell, pres=parent_res, f=f)
 
 
-def parent_col(cell: str, child_res: int, parent_res: int) -> Column:
-    return F.expr(parent_sql(cell, child_res, parent_res))
-
-
 def parent_np(cell: np.ndarray, parent_res: int) -> np.ndarray:
     res = cell // RES_SHIFT
     cx, cy = cell_xy(cell)
@@ -163,11 +159,6 @@ def cell_bounds_np(cell: np.ndarray):
     lon0 = cx * w - 180.0
     lat0 = cy * h - 90.0
     return lon0, lat0, lon0 + w, lat0 + h
-
-
-def cell_size_deg(res: int) -> float:
-    """Cell width in degrees of longitude at ``res``."""
-    return 360.0 / (1 << res)
 
 
 # ---------------------------------------------------------------- k-ring

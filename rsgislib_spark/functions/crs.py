@@ -4,17 +4,14 @@ reprojection; reproj_point tools/geometrytools.py:584).
 
 No pyproj in the sandbox; the engine's stance (SURVEY §2.9) is
 canonicalize-to-EPSG:4326-at-ingest, and provide the spherical
-Web-Mercator (EPSG:3857) and equirectangular forward/inverse
-transforms — public textbook formulas — as shared SQL templates
-(bit-identical Spark/DuckDB) plus numpy mirrors. Ellipsoidal
-UTM/TM transforms would slot in as vectorized pandas UDFs the same
-way pyproj would.
+Web-Mercator (EPSG:3857) and ellipsoidal UTM forward transforms —
+public textbook formulas — as shared SQL templates (bit-identical
+Spark/DuckDB) plus numpy mirrors and inverses.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, functions as F
 
 R_MAJOR = 6378137.0  # WGS84 semi-major axis (public constant)
 
@@ -22,25 +19,11 @@ R_MAJOR = 6378137.0  # WGS84 semi-major axis (public constant)
 MERC_X_SQL = "(CAST({r!r} AS DOUBLE) * RADIANS({lon}))"
 MERC_Y_SQL = ("(CAST({r!r} AS DOUBLE) * LN(TAN(CAST(0.7853981633974483 AS DOUBLE)"
               " + RADIANS({lat}) / CAST(2 AS DOUBLE))))")
-# inverse
-INV_LON_SQL = "(DEGREES({x} / CAST({r!r} AS DOUBLE)))"
-INV_LAT_SQL = ("(DEGREES(CAST(2 AS DOUBLE) * ATAN(EXP({y} / CAST({r!r} AS DOUBLE)))"
-               " - CAST(1.5707963267948966 AS DOUBLE)))")
 
 
 def mercator_sql(lon: str, lat: str) -> tuple:
     return (MERC_X_SQL.format(lon=lon, r=R_MAJOR),
             MERC_Y_SQL.format(lat=lat, r=R_MAJOR))
-
-
-def mercator_cols(lon: str, lat: str) -> tuple:
-    x, y = mercator_sql(lon, lat)
-    return F.expr(x), F.expr(y)
-
-
-def inv_mercator_sql(x: str, y: str) -> tuple:
-    return (INV_LON_SQL.format(x=x, r=R_MAJOR),
-            INV_LAT_SQL.format(y=y, r=R_MAJOR))
 
 
 def mercator_np(lon: np.ndarray, lat: np.ndarray) -> tuple:
@@ -186,10 +169,3 @@ def utm_inverse_np(easting: np.ndarray, northing: np.ndarray,
         + (5.0 - 2.0 * c1 + 28.0 * t1 - 3.0 * c1 * c1 + 8.0 * UTM_EP2
            + 24.0 * t1 * t1) * d**5 / 120.0) / cosp
     return np.degrees(lon), np.degrees(lat)
-
-
-def equirect_np(lon: np.ndarray, lat: np.ndarray, lat0: float = 0.0) -> tuple:
-    """Plate-carrée with standard parallel lat0 — the quick local
-    planar frame for small-area measures."""
-    k = np.cos(np.radians(lat0))
-    return R_MAJOR * np.radians(lon) * k, R_MAJOR * np.radians(lat)

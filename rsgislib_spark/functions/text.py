@@ -132,13 +132,6 @@ def bpe_token_count_sql(text: str, engine: str) -> str:
     raise ValueError(f"engine must be spark/duckdb, got {engine!r}")
 
 
-def token_count(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.when(F.length(c) == 0, F.lit(0)).otherwise(
-        F.length(c) - F.length(F.replace(c, F.lit(" "), F.lit(""))) + 1
-    )
-
-
 def fingerprint(text: Column | str) -> Column:
     """Order-invariant document fingerprint: md5 of the sorted
     distinct token multiset — catches shuffled-token duplicates that

@@ -89,14 +89,18 @@ def _cover_side(df: DataFrame, id_col: str, geom_col: str, res: int,
 
 def candidate_pairs(a: DataFrame, b: DataFrame, res: int = 6,
                     id_a: str = "a_id", geom_a: str = "geometry",
-                    id_b: str = "b_id", geom_b: str = "geometry",
-                    broadcast_b: bool = True) -> DataFrame:
+                    id_b: str = "b_id", geom_b: str = "geometry"
+                    ) -> DataFrame:
     """Distinct (a_id, b_id, a_geom, b_geom) whose cell covers touch
-    and whose bboxes overlap — the filter stage of every overlay."""
+    and whose bboxes overlap — the filter stage of every overlay.
+
+    The covers are taken from the raw planar bbox, not from the
+    spatial join's polygon pass: that pass unwraps rings wider than
+    180°, which would move a wide planar polygon's cover off its
+    geometry. The b cover is always broadcast: a mapInPandas output
+    has no size estimate for Spark to plan by."""
     ac = _cover_side(a, id_a, geom_a, res, "a")
-    bc = _cover_side(b, id_b, geom_b, res, "b")
-    if broadcast_b:
-        bc = F.broadcast(bc)
+    bc = F.broadcast(_cover_side(b, id_b, geom_b, res, "b"))
     pairs = (
         ac.join(bc, "cell")
         .where(

@@ -14,10 +14,11 @@ geotransform. Operators:
   (reference: ext_point_band_values,
   python/rsgislib/zonalstats/__init__.py:1328,1396-1594 —
   floor((pt-origin)/res), out-of-image/no-data => sentinel)
-- focal_filter: k x k focal aggregates via halo'd tiles in
-  mapInPandas (reference: imagefilter/__init__.py:38-571 ~25 filters
-  over C++ apply_filters; the tile+overlap trick is the reference's
-  own: python/src/imageutils.cpp:2061 overlap param)
+- focal_filter, focal_conv, focal_argmin, lee_filter,
+  kuwahara_filter: k x k focal operators in applyInPandas over one
+  halo-tile core, ``_halo_tiles`` (reference: imagefilter/__init__.py:
+  38-951 ~25 filters over C++ apply_filters; the tile+overlap trick is
+  the reference's own: python/src/imageutils.cpp:2061 overlap param)
 - mosaic: overlapping tiles merged by first/min/max/last (reference:
   create_img_mosaic, python/src/imageutils.cpp:2095 skip_val/overlap
   behaviour)
@@ -99,8 +100,43 @@ def extract_point_values(points: DataFrame, grid: DataFrame,
     )
 
 
-FOCAL_STATS = {"mean", "min", "max", "median", "stddev", "sum", "range",
-               "total", "coeff_of_var", "var", "norm_var", "mode"}
+def _nanmode(w: np.ndarray) -> np.ndarray:
+    """Row-wise mode of (n, m) windows, smallest value on ties: sort
+    each window (NaN sorts last), run-length the equal runs, take the
+    value of the longest run (first longest = smallest value since
+    rows are sorted)."""
+    ws = np.sort(w, axis=1)
+    n, m = ws.shape
+    newrun = np.ones((n, m), dtype=bool)
+    newrun[:, 1:] = ws[:, 1:] != ws[:, :-1]
+    run_id = np.cumsum(newrun, axis=1) - 1
+    counts = np.zeros((n, m), dtype=np.int64)
+    np.add.at(counts, (np.arange(n)[:, None], run_id), ~np.isnan(ws))
+    best_run = np.argmax(counts, axis=1)  # first max
+    # column index where run best_run starts
+    first_col = np.full((n, m), m - 1, dtype=np.int64)
+    cols = np.broadcast_to(np.arange(m), (n, m))
+    np.minimum.at(first_col, (np.arange(n)[:, None], run_id),
+                  np.where(newrun, cols, m - 1))
+    return ws[np.arange(n), first_col[np.arange(n), best_run]]
+
+
+# focal_filter's reductions over (n, k*k) NaN-padded windows
+_FOCAL_REDUCERS = {
+    "mean": lambda w: np.nanmean(w, axis=1),
+    "min": lambda w: np.nanmin(w, axis=1),
+    "max": lambda w: np.nanmax(w, axis=1),
+    "median": lambda w: np.nanmedian(w, axis=1),
+    "stddev": lambda w: np.nanstd(w, axis=1),
+    "sum": lambda w: np.nansum(w, axis=1),
+    "total": lambda w: np.nansum(w, axis=1),
+    "range": lambda w: np.nanmax(w, axis=1) - np.nanmin(w, axis=1),
+    "coeff_of_var": lambda w: np.nanstd(w, axis=1) / np.nanmean(w, axis=1),
+    "var": lambda w: np.nanvar(w, axis=1),
+    "norm_var": lambda w: np.nanvar(w, axis=1) / np.nanmean(w, axis=1),
+    "mode": _nanmode,
+}
+FOCAL_STATS = set(_FOCAL_REDUCERS)
 
 
 def _halo_tile_explode(grid: DataFrame, tile: int, h: int) -> DataFrame:
@@ -129,96 +165,70 @@ def _halo_tile_explode(grid: DataFrame, tile: int, h: int) -> DataFrame:
     return grid.withColumn("_tile", F.explode(F.array_compact(F.array(*cand))))
 
 
+_PD_TYPES = {"BIGINT": "int64", "DOUBLE": "float64"}
+
+
+def _halo_tiles(grid: DataFrame, tile: int, h: int, fill: float,
+                out: dict, kernel) -> DataFrame:
+    """The halo-tile core of the focal operators. Pixels are tiled
+    (tile x tile); each tile is shipped to one pandas UDF WITH ITS
+    HALO of h duplicated border pixels — the reference's tile+overlap
+    trick (imageutils.cpp:2061) — so every tile computes
+    independently, no shuffle beyond the groupBy(tile).
+
+    Per tile the pixels land in a dense window, padded by h and with
+    ``fill`` where no pixel is (NaN for the nan-reductions: edge
+    windows then truncate like the per-pixel clip of a windowed SQL
+    self-join). ``kernel(P, r, c, hx, hy)`` gets that padded window
+    P, the home pixels' window rows r and columns c (the (2h+1)-square
+    window of a home pixel is P[r:r+2h+1, c:c+2h+1]) and their global
+    x, y, and returns {column: values} for the ``out`` columns
+    ({name: "BIGINT" | "DOUBLE"}), after x, y."""
+    exploded = _halo_tile_explode(grid, tile, h)
+    schema = ", ".join(f"{c} {t}" for c, t in
+                       {"x": "BIGINT", "y": "BIGINT", **out}.items())
+    empty = {c: pd.array([], dtype=_PD_TYPES[t]) for c, t in out.items()}
+
+    def _tile(key, pdf):
+        xs = pdf["x"].to_numpy()
+        ys = pdf["y"].to_numpy()
+        tx, ty = (int(t) for t in key[0].split("_"))
+        home = ((xs >= tx * tile) & (xs < (tx + 1) * tile)
+                & (ys >= ty * tile) & (ys < (ty + 1) * tile))
+        hx, hy = xs[home], ys[home]
+        if len(hx) == 0:  # halo-only group at the raster edge
+            return pd.DataFrame({"x": hx, "y": hy, **empty})
+        wx0, wy0 = xs.min(), ys.min()
+        P = np.full((ys.max() - wy0 + 1 + 2 * h, xs.max() - wx0 + 1 + 2 * h),
+                    fill)
+        P[ys - wy0 + h, xs - wx0 + h] = pdf["value"].to_numpy(dtype=np.float64)
+        with np.errstate(all="ignore"):
+            cols = kernel(P, hy - wy0, hx - wx0, hx, hy)
+        return pd.DataFrame({"x": hx, "y": hy, **cols})
+
+    return exploded.groupBy("_tile").applyInPandas(_tile, schema=schema)
+
+
+def _windows(P: np.ndarray, r, c, k: int) -> np.ndarray:
+    """(n, k*k) windows of P with top-left corners (r, c)."""
+    wins = np.lib.stride_tricks.sliding_window_view(P, (k, k))
+    return wins[r, c].reshape(len(r), -1)
+
+
 def focal_filter(grid: DataFrame, stat: str = "mean", k: int = 3,
                  tile: int = 64, width: int | None = None,
                  height: int | None = None) -> DataFrame:
     """k x k focal aggregate per pixel (apply_*_filter semantics,
     imagefilter/__init__.py:38-571). Edge pixels aggregate over the
     available neighbourhood (scipy 'nearest'-free truncation — matches
-    a plain windowed SQL self-join oracle).
-
-    Distribution: pixels are tiled (tile x tile); each tile is shipped
-    to a pandas UDF WITH ITS HALO of floor(k/2) duplicated border rows
-    — the reference's tile+overlap trick (imageutils.cpp:2061) — so
-    every tile computes independently, no shuffle beyond the initial
-    groupBy(tile).
-    """
+    a plain windowed SQL self-join oracle). One vectorized
+    nan-reduction per tile on the halo-tile core (``_halo_tiles``)."""
     if stat not in FOCAL_STATS:
         raise ValueError(f"stat must be one of {sorted(FOCAL_STATS)}")
-    h = k // 2
-    exploded = _halo_tile_explode(grid, tile, h)
-    stat_name = stat
-
-    def _focal(key, pdf):
-        """One vectorized nan-reduction over a sliding_window_view per
-        tile — NaN-pad by the halo so edge windows truncate exactly
-        like the per-pixel clip would (no per-pixel Python: the r1
-        version looped interpreted Python over every pixel, O(tile²k²)
-        Python ops)."""
-        xs = pdf["x"].to_numpy()
-        ys = pdf["y"].to_numpy()
-        vs = pdf["value"].to_numpy(dtype=np.float64)
-        tx, ty = (int(t) for t in key[0].split("_"))
-        x0, x1 = tx * tile, (tx + 1) * tile
-        y0, y1 = ty * tile, (ty + 1) * tile
-        # dense window incl. halo
-        wx0, wy0 = xs.min(), ys.min()
-        W = np.full((ys.max() - wy0 + 1, xs.max() - wx0 + 1), np.nan)
-        W[ys - wy0, xs - wx0] = vs
-        home = (xs >= x0) & (xs < x1) & (ys >= y0) & (ys < y1)
-        hx, hy = xs[home], ys[home]
-        if len(hx) == 0:  # halo-only group at the raster edge
-            return pd.DataFrame({"x": pd.array([], dtype="int64"),
-                                 "y": pd.array([], dtype="int64"),
-                                 "focal": pd.array([], dtype="float64")})
-        P = np.pad(W, h, constant_values=np.nan)
-        wins = np.lib.stride_tricks.sliding_window_view(P, (k, k))
-        w = wins[hy - wy0, hx - wx0].reshape(len(hx), -1)
-        with np.errstate(all="ignore"):
-            if stat_name == "mean":
-                out = np.nanmean(w, axis=1)
-            elif stat_name == "min":
-                out = np.nanmin(w, axis=1)
-            elif stat_name == "max":
-                out = np.nanmax(w, axis=1)
-            elif stat_name == "median":
-                out = np.nanmedian(w, axis=1)
-            elif stat_name == "stddev":
-                out = np.nanstd(w, axis=1)
-            elif stat_name in ("sum", "total"):
-                out = np.nansum(w, axis=1)
-            elif stat_name == "range":
-                out = np.nanmax(w, axis=1) - np.nanmin(w, axis=1)
-            elif stat_name == "coeff_of_var":
-                out = np.nanstd(w, axis=1) / np.nanmean(w, axis=1)
-            elif stat_name == "var":
-                out = np.nanvar(w, axis=1)
-            elif stat_name == "norm_var":
-                out = np.nanvar(w, axis=1) / np.nanmean(w, axis=1)
-            elif stat_name == "mode":
-                # vectorized windowed mode, smallest value on ties:
-                # sort each window (NaN sorts last), run-length the
-                # equal runs, take the value of the longest run (first
-                # longest = smallest value since rows are sorted)
-                ws = np.sort(w, axis=1)
-                n, m = ws.shape
-                newrun = np.ones((n, m), dtype=bool)
-                newrun[:, 1:] = ws[:, 1:] != ws[:, :-1]
-                run_id = np.cumsum(newrun, axis=1) - 1
-                counts = np.zeros((n, m), dtype=np.int64)
-                np.add.at(counts, (np.arange(n)[:, None], run_id),
-                          ~np.isnan(ws))
-                best_run = np.argmax(counts, axis=1)  # first max
-                # column index where run best_run starts
-                first_col = np.full((n, m), m - 1, dtype=np.int64)
-                cols = np.broadcast_to(np.arange(m), (n, m))
-                np.minimum.at(first_col, (np.arange(n)[:, None], run_id),
-                              np.where(newrun, cols, m - 1))
-                out = ws[np.arange(n), first_col[np.arange(n), best_run]]
-        return pd.DataFrame({"x": hx, "y": hy, "focal": out})
-
-    return exploded.groupBy("_tile").applyInPandas(
-        _focal, schema="x BIGINT, y BIGINT, focal DOUBLE")
+    reduce = _FOCAL_REDUCERS[stat]
+    return _halo_tiles(
+        grid, tile, k // 2, np.nan, {"focal": "DOUBLE"},
+        lambda P, r, c, hx, hy: {"focal": reduce(_windows(P, r, c, k))})
 
 
 # Named kernels of the reference's linear filters
@@ -241,8 +251,8 @@ KERNELS: dict = {
 def focal_conv(grid: DataFrame, kernel, divisor: float | None = None,
                tile: int = 64) -> DataFrame:
     """k x k linear convolution (apply_sobel_filter / _gaussian_ /
-    _laplacian_ etc., imagefilter/__init__.py:602-951) on the halo'd
-    tile machinery. Missing / off-raster pixels contribute 0 (the
+    _laplacian_ etc., imagefilter/__init__.py:602-951) on the halo-tile
+    core. Missing / off-raster pixels contribute 0 (the
     join-omits-rows semantics of the SQL oracle). kernel: a name from
     KERNELS or a (k,k) array; divisor divides the stencil sum."""
     if isinstance(kernel, str):
@@ -254,33 +264,11 @@ def focal_conv(grid: DataFrame, kernel, divisor: float | None = None,
     k = kern.shape[0]
     if kern.shape != (k, k) or k % 2 != 1:
         raise ValueError("kernel must be square with odd size")
-    h = k // 2
-    exploded = _halo_tile_explode(grid, tile, h)
-
-    def _conv(key, pdf):
-        xs = pdf["x"].to_numpy()
-        ys = pdf["y"].to_numpy()
-        vs = pdf["value"].to_numpy(dtype=np.float64)
-        tx, ty = (int(t) for t in key[0].split("_"))
-        x0, x1 = tx * tile, (tx + 1) * tile
-        y0, y1 = ty * tile, (ty + 1) * tile
-        wx0, wy0 = xs.min(), ys.min()
-        W = np.zeros((ys.max() - wy0 + 1, xs.max() - wx0 + 1))
-        W[ys - wy0, xs - wx0] = vs
-        home = (xs >= x0) & (xs < x1) & (ys >= y0) & (ys < y1)
-        hx, hy = xs[home], ys[home]
-        if len(hx) == 0:
-            return pd.DataFrame({"x": pd.array([], dtype="int64"),
-                                 "y": pd.array([], dtype="int64"),
-                                 "conv": pd.array([], dtype="float64")})
-        P = np.pad(W, h, constant_values=0.0)
-        wins = np.lib.stride_tricks.sliding_window_view(P, (k, k))
-        sel = wins[hy - wy0, hx - wx0]
-        out = np.einsum("nij,ij->n", sel, kern) / div
-        return pd.DataFrame({"x": hx, "y": hy, "conv": out})
-
-    return exploded.groupBy("_tile").applyInPandas(
-        _conv, schema="x BIGINT, y BIGINT, conv DOUBLE")
+    stencil = kern.ravel()
+    return _halo_tiles(
+        grid, tile, k // 2, 0.0, {"conv": "DOUBLE"},
+        lambda P, r, c, hx, hy: {
+            "conv": np.einsum("nj,j->n", _windows(P, r, c, k), stencil) / div})
 
 
 def focal_argmin(grid: DataFrame, k: int = 3, tile: int = 64) -> DataFrame:
@@ -288,71 +276,16 @@ def focal_argmin(grid: DataFrame, k: int = 3, tile: int = 64) -> DataFrame:
     per pixel, the VALUE and COORDINATES of the minimum pixel in its
     k x k window (lowest flat index breaks ties, deterministic)."""
     h = k // 2
-    exploded = _halo_tile_explode(grid, tile, h)
 
-    def _amin(key, pdf):
-        xs = pdf["x"].to_numpy()
-        ys = pdf["y"].to_numpy()
-        vs = pdf["value"].to_numpy(dtype=np.float64)
-        tx, ty = (int(t) for t in key[0].split("_"))
-        x0, x1 = tx * tile, (tx + 1) * tile
-        y0, y1 = ty * tile, (ty + 1) * tile
-        wx0, wy0 = xs.min(), ys.min()
-        W = np.full((ys.max() - wy0 + 1, xs.max() - wx0 + 1), np.nan)
-        W[ys - wy0, xs - wx0] = vs
-        home = (xs >= x0) & (xs < x1) & (ys >= y0) & (ys < y1)
-        hx, hy = xs[home], ys[home]
-        if len(hx) == 0:
-            return pd.DataFrame({"x": pd.array([], dtype="int64"),
-                                 "y": pd.array([], dtype="int64"),
-                                 "min_x": pd.array([], dtype="int64"),
-                                 "min_y": pd.array([], dtype="int64"),
-                                 "min_val": pd.array([], dtype="float64")})
-        P = np.pad(W, h, constant_values=np.nan)
-        wins = np.lib.stride_tricks.sliding_window_view(P, (k, k))
-        w = wins[hy - wy0, hx - wx0].reshape(len(hx), -1)
-        with np.errstate(all="ignore"):
-            flat = np.nanargmin(w, axis=1)  # first (lowest index) tie
-            mval = w[np.arange(len(hx)), flat]
+    def _amin(P, r, c, hx, hy):
+        w = _windows(P, r, c, k)
+        flat = np.nanargmin(w, axis=1)  # first (lowest index) tie
         # window-local (row, col) -> global pixel coords
-        mrow, mcol = flat // k, flat % k
-        return pd.DataFrame({
-            "x": hx, "y": hy,
-            "min_x": hx + mcol - h, "min_y": hy + mrow - h,
-            "min_val": mval,
-        })
+        return {"min_x": hx + flat % k - h, "min_y": hy + flat // k - h,
+                "min_val": w[np.arange(len(hx)), flat]}
 
-    return exploded.groupBy("_tile").applyInPandas(
-        _amin, schema=("x BIGINT, y BIGINT, min_x BIGINT, min_y BIGINT, "
-                       "min_val DOUBLE"))
-
-
-def _window_mean_var(key, pdf, tile: int, k: int):
-    """Shared per-tile window mean/variance arrays for the adaptive
-    filters; returns (hx, hy, center, mean, var) over home pixels.
-    Windows truncate at raster edges (NaN-pad + nan-reductions)."""
-    h = k // 2
-    xs = pdf["x"].to_numpy()
-    ys = pdf["y"].to_numpy()
-    vs = pdf["value"].to_numpy(dtype=np.float64)
-    tx, ty = (int(t) for t in key[0].split("_"))
-    x0, x1 = tx * tile, (tx + 1) * tile
-    y0, y1 = ty * tile, (ty + 1) * tile
-    wx0, wy0 = xs.min(), ys.min()
-    W = np.full((ys.max() - wy0 + 1, xs.max() - wx0 + 1), np.nan)
-    W[ys - wy0, xs - wx0] = vs
-    home = (xs >= x0) & (xs < x1) & (ys >= y0) & (ys < y1)
-    hx, hy = xs[home], ys[home]
-    if len(hx) == 0:
-        return hx, hy, None, None, None
-    P = np.pad(W, h, constant_values=np.nan)
-    wins = np.lib.stride_tricks.sliding_window_view(P, (k, k))
-    sel = wins[hy - wy0, hx - wx0].reshape(len(hx), -1)
-    with np.errstate(all="ignore"):
-        m = np.nanmean(sel, axis=1)
-        v = np.nanvar(sel, axis=1)
-    center = W[hy - wy0, hx - wx0]
-    return hx, hy, center, m, v
+    return _halo_tiles(grid, tile, h, np.nan, {
+        "min_x": "BIGINT", "min_y": "BIGINT", "min_val": "DOUBLE"}, _amin)
 
 
 def lee_filter(grid: DataFrame, k: int = 3, noise_var: float = 1.0,
@@ -360,17 +293,14 @@ def lee_filter(grid: DataFrame, k: int = 3, noise_var: float = 1.0,
     """Lee adaptive speckle filter (apply_lee_filter,
     imagefilter/__init__.py:915): out = m + v/(v+noise) * (x - m) with
     window mean m / variance v."""
-    def _lee(key, pdf):
-        hx, hy, x, m, v = _window_mean_var(key, pdf, tile, k)
-        if len(hx) == 0:
-            return pd.DataFrame({"x": pd.array([], dtype="int64"),
-                                 "y": pd.array([], dtype="int64"),
-                                 "lee": pd.array([], dtype="float64")})
-        w = v / (v + noise_var)
-        return pd.DataFrame({"x": hx, "y": hy, "lee": m + w * (x - m)})
+    h = k // 2
 
-    return _halo_tile_explode(grid, tile, k // 2).groupBy("_tile") \
-        .applyInPandas(_lee, schema="x BIGINT, y BIGINT, lee DOUBLE")
+    def _lee(P, r, c, hx, hy):
+        w = _windows(P, r, c, k)
+        m, v = np.nanmean(w, axis=1), np.nanvar(w, axis=1)
+        return {"lee": m + v / (v + noise_var) * (P[r + h, c + h] - m)}
+
+    return _halo_tiles(grid, tile, h, np.nan, {"lee": "DOUBLE"}, _lee)
 
 
 def kuwahara_filter(grid: DataFrame, k: int = 5, tile: int = 64) -> DataFrame:
@@ -381,43 +311,17 @@ def kuwahara_filter(grid: DataFrame, k: int = 5, tile: int = 64) -> DataFrame:
     if k % 2 != 1:
         raise ValueError("k must be odd")
     h = k // 2
-    q = h + 1  # quadrant side
 
-    def _kuw(key, pdf):
-        xs = pdf["x"].to_numpy()
-        ys = pdf["y"].to_numpy()
-        vs = pdf["value"].to_numpy(dtype=np.float64)
-        tx, ty = (int(t) for t in key[0].split("_"))
-        x0, x1 = tx * tile, (tx + 1) * tile
-        y0, y1 = ty * tile, (ty + 1) * tile
-        wx0, wy0 = xs.min(), ys.min()
-        W = np.full((ys.max() - wy0 + 1, xs.max() - wx0 + 1), np.nan)
-        W[ys - wy0, xs - wx0] = vs
-        home = (xs >= x0) & (xs < x1) & (ys >= y0) & (ys < y1)
-        hx, hy = xs[home], ys[home]
-        if len(hx) == 0:
-            return pd.DataFrame({"x": pd.array([], dtype="int64"),
-                                 "y": pd.array([], dtype="int64"),
-                                 "kuwahara": pd.array([], dtype="float64")})
-        P = np.pad(W, h, constant_values=np.nan)
-        wins = np.lib.stride_tricks.sliding_window_view(P, (q, q))
-        # quadrant top-left offsets relative to the padded array for a
-        # home pixel at (r, c) in W: NW=(r,c), NE=(r,c+h), SW=(r+h,c),
-        # SE=(r+h,c+h) — each quadrant includes the center row/col
-        r, c = hy - wy0, hx - wx0
-        means = np.empty((4, len(hx)))
-        varis = np.empty((4, len(hx)))
-        with np.errstate(all="ignore"):
-            for i, (dr, dc) in enumerate(((0, 0), (0, h), (h, 0), (h, h))):
-                sel = wins[r + dr, c + dc].reshape(len(hx), -1)
-                means[i] = np.nanmean(sel, axis=1)
-                varis[i] = np.nanvar(sel, axis=1)
-        best = np.argmin(varis, axis=0)  # first minimum = NW-NE-SW-SE
-        out = means[best, np.arange(len(hx))]
-        return pd.DataFrame({"x": hx, "y": hy, "kuwahara": out})
+    def _kuw(P, r, c, hx, hy):
+        # quadrant top-left corners in P: NW=(r,c), NE=(r,c+h),
+        # SW=(r+h,c), SE=(r+h,c+h) — each includes the center row/col
+        quads = [_windows(P, r + dr, c + dc, h + 1)
+                 for dr, dc in ((0, 0), (0, h), (h, 0), (h, h))]
+        means = np.stack([np.nanmean(q, axis=1) for q in quads])
+        best = np.argmin([np.nanvar(q, axis=1) for q in quads], axis=0)
+        return {"kuwahara": means[best, np.arange(len(hx))]}  # first min
 
-    return _halo_tile_explode(grid, tile, h).groupBy("_tile") \
-        .applyInPandas(_kuw, schema="x BIGINT, y BIGINT, kuwahara DOUBLE")
+    return _halo_tiles(grid, tile, h, np.nan, {"kuwahara": "DOUBLE"}, _kuw)
 
 
 def distance_to_value(grid: DataFrame, target_value: float, band: int = 1,

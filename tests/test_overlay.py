@@ -166,6 +166,22 @@ def test_spark_intersection_and_difference(spark):
     assert diff == {1: 75.0, 2: 91.0, 3: 100.0}
 
 
+def test_spark_overlay_wide_planar_polygon(spark):
+    """A polygon wider than 180° that does not cross the antimeridian
+    is planar input like any other: its cover and bbox must contain
+    it, so clippers anywhere under it are paired with it."""
+    from rsgislib_spark.operators import overlay as ovl
+
+    a = _layer(spark, [(1, -100, 0, 100, 10)])
+    b = _layer(spark, [(7, -50, 2, -40, 12), (8, 0, 0, 10, 10)]) \
+        .withColumnRenamed("a_id", "b_id")
+    inter = {(r.a_id, r.b_id): r.area
+             for r in ovl.intersection(a, b, res=6).collect()}
+    assert inter == {(1, 7): 80.0, (1, 8): 100.0}
+    diff = {r.a_id: r.area for r in ovl.difference(a, b, res=6).collect()}
+    assert diff == {1: 2000.0 - 180.0}
+
+
 def test_spark_union_and_identity_areas(spark):
     from rsgislib_spark.operators import overlay as ovl
 

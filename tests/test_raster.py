@@ -183,12 +183,29 @@ def test_focal_conv_sobel_matches_numpy(spark, grid, value_mat):
         assert got[(x, y)] == pytest.approx(want, abs=1e-9), (x, y)
 
 
-def test_focal_conv_gaussian_tiling_invariance(spark, grid):
-    a = {(r.x, r.y): r.conv for r in
-         raster.focal_conv(grid, "gaussian3", tile=64).collect()}
-    b = {(r.x, r.y): r.conv for r in
-         raster.focal_conv(grid, "gaussian3", tile=37).collect()}
-    assert a == b  # exact: integer sums / 2^4
+_FOCAL_OPS = {
+    **{f"focal_filter-{s}": lambda g, t, s=s: raster.focal_filter(
+        g, s, k=3, tile=t) for s in sorted(raster.FOCAL_STATS)},
+    "focal_conv": lambda g, t: raster.focal_conv(g, "gaussian3", tile=t),
+    "focal_argmin": lambda g, t: raster.focal_argmin(g, k=3, tile=t),
+    "lee_filter": lambda g, t: raster.lee_filter(g, k=3, tile=t),
+    "kuwahara_filter": lambda g, t: raster.kuwahara_filter(g, k=5, tile=t),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_FOCAL_OPS))
+def test_focal_tiling_invariance(spark, grid, op):
+    """The halo makes every focal output independent of the tiling:
+    an odd tile (37) gives exactly the tile=64 values, NaN for NaN."""
+    def run(tile):
+        rows = _FOCAL_OPS[op](grid, tile).collect()
+        return {(r.x, r.y): tuple(r)[2:] for r in rows}, len(rows)
+
+    (a, n_a), (b, n_b) = run(64), run(37)
+    assert n_a == n_b == len(a) == 128 * 128
+    assert a.keys() == b.keys()
+    for key, va in a.items():
+        np.testing.assert_array_equal(va, b[key], err_msg=str(key))
 
 
 def test_lee_filter_matches_numpy(spark, grid, value_mat):
