@@ -3,9 +3,10 @@
 
 Covers clip_vec_lyr / clip_and_merge_with_roi semantics
 (python/rsgislib/vectorgeoms/__init__.py:2531,2566) for the common
-rectangular-ROI case, and subset-to-bbox overlays. General
-polygon×polygon overlay (vec_lyr_intersection_gp etc., GEOS) is
-deferred — no GEOS in the sandbox (SURVEY §7 hard parts).
+rectangular-ROI case, and subset-to-bbox overlays. The general
+polygon×polygon overlay (vec_lyr_intersection_gp etc., GEOS in the
+reference) is the scanline boolean in geometry/overlay.py; the layer
+operators in operators/overlay.py use that one, not this clipper.
 """
 
 from __future__ import annotations

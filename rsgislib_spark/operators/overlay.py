@@ -15,10 +15,12 @@ Spark plan over WKB geometry columns:
 Scale notes:
 - candidate pairs come from the same quadcell equi-join the spatial
   join uses — never a cross join; the bbox prefilter runs JVM-side.
-- intersection / sym_difference are per-PAIR: a pure mapInPandas over
-  the deduped pair rows (embarrassingly parallel).
-- difference needs a's full clipper set: one groupBy(a_id) whose
-  groups are "polygons overlapping one polygon" — bounded fan-in.
+- one core, ``_overlay``, builds the pair set ONCE per call and
+  returns the union of the parts an operator names: a∩b (a per-pair
+  mapInPandas, embarrassingly parallel), a−B and b−A (a groupBy on
+  that side's id — bounded fan-in — plus its untouched polygons).
+  difference is a−B, sym_difference a−B + b−A, identity a∩b + a−B,
+  union all three.
 - Pieces output is a trapezoid partition (exact area), returned as
   MultiPolygon WKB for downstream ops; the reference returns dissolved
   GEOS geometries — a documented representation divergence (areas and
@@ -31,7 +33,8 @@ Scale notes:
 
 from __future__ import annotations
 
-import numpy as np
+import functools
+
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
@@ -39,9 +42,9 @@ from ..cells import quadcell
 from ..geometry import overlay as geom_overlay
 from ..geometry import predicates, wkb
 
+COLS = ["a_id", "b_id", "area", "n_pieces", "pieces"]
 PAIR_SCHEMA = ("a_id BIGINT, b_id BIGINT, area DOUBLE, n_pieces INT, "
                "pieces BINARY")
-DIFF_SCHEMA = "a_id BIGINT, area DOUBLE, n_pieces INT, pieces BINARY"
 
 
 def _pieces_wkb(pieces: list) -> bytes | None:
@@ -97,12 +100,14 @@ def candidate_pairs(a: DataFrame, b: DataFrame, res: int = 6,
     The covers are taken from the raw planar bbox, not from the
     spatial join's polygon pass: that pass unwraps rings wider than
     180°, which would move a wide planar polygon's cover off its
-    geometry. The b cover is always broadcast: a mapInPandas output
-    has no size estimate for Spark to plan by."""
-    ac = _cover_side(a, id_a, geom_a, res, "a")
-    bc = F.broadcast(_cover_side(b, id_b, geom_b, res, "b"))
-    pairs = (
-        ac.join(bc, "cell")
+    geometry. Each cover is a lazy localCheckpoint: its Python pass
+    runs once per action, whatever reads the pairs, with no job while
+    building on exchange-free inputs. The b cover is always broadcast:
+    a mapInPandas output has no size estimate for Spark to plan by."""
+    ac = _cover_side(a, id_a, geom_a, res, "a").localCheckpoint(eager=False)
+    bc = _cover_side(b, id_b, geom_b, res, "b").localCheckpoint(eager=False)
+    return (
+        ac.join(F.broadcast(bc), "cell")
         .where(
             (F.col("a_xmin") <= F.col("b_xmax"))
             & (F.col("a_xmax") >= F.col("b_xmin"))
@@ -113,10 +118,10 @@ def candidate_pairs(a: DataFrame, b: DataFrame, res: int = 6,
         .agg(F.first("a_geom").alias("a_geom"),
              F.first("b_geom").alias("b_geom"))
     )
-    return pairs
 
 
-def _pair_op(pairs: DataFrame, op: str, keep_empty: bool) -> DataFrame:
+def _pair_op(pairs: DataFrame) -> DataFrame:
+    """a∩b: one row per candidate pair whose intersection has area."""
     def gen(batches):
         for pdf in batches:
             rows = []
@@ -124,103 +129,110 @@ def _pair_op(pairs: DataFrame, op: str, keep_empty: bool) -> DataFrame:
                                         pdf["a_geom"], pdf["b_geom"]):
                 pieces, area = geom_overlay.boolean_pieces(
                     [wkb.wkb_to_rings(bytes(ga))],
-                    [wkb.wkb_to_rings(bytes(gb))], op)
-                if area == 0.0 and not keep_empty:
+                    [wkb.wkb_to_rings(bytes(gb))], "intersection")
+                if area == 0.0:
                     continue
                 rows.append((aid, bid, area, len(pieces),
                              _pieces_wkb(pieces)))
-            yield pd.DataFrame(
-                rows, columns=["a_id", "b_id", "area", "n_pieces",
-                               "pieces"])
+            yield pd.DataFrame(rows, columns=COLS)
 
     return pairs.mapInPandas(gen, schema=PAIR_SCHEMA)
 
 
-def intersection(a: DataFrame, b: DataFrame, res: int = 6,
-                 **kw) -> DataFrame:
-    """vec_lyr_intersection_gp: one row per overlapping (a, b) pair
-    with the intersection pieces + exact area."""
-    return _pair_op(candidate_pairs(a, b, res, **kw), "intersection",
-                    keep_empty=False)
+def _remainder(layer: DataFrame, pairs: DataFrame, side: str,
+               id_col: str, geom_col: str) -> DataFrame:
+    """a−B (``side`` "a") or b−A ("b"), the other side's id null: each
+    polygon minus the UNION of the other side's polygons overlapping it
+    (per-polygon parity in the scanline makes overlapping clippers
+    union correctly); polygons with no pair keep their full geometry."""
+    other = "b" if side == "a" else "a"
+    sid = f"{side}_id"
+    cols = [sid, "area", "n_pieces", "pieces"]
+    schema = f"{sid} BIGINT, area DOUBLE, n_pieces INT, pieces BINARY"
 
+    def clip(key, pdf):
+        g = wkb.wkb_to_rings(bytes(pdf[f"{side}_geom"].iloc[0]))
+        clippers = [wkb.wkb_to_rings(bytes(c)) for c in pdf[f"{other}_geom"]]
+        pieces, area = geom_overlay.boolean_pieces([g], clippers, "difference")
+        return pd.DataFrame([(key[0], area, len(pieces), _pieces_wkb(pieces))],
+                            columns=cols)
 
-def sym_difference(a: DataFrame, b: DataFrame, res: int = 6,
-                   id_a: str = "a_id", geom_a: str = "geometry",
-                   id_b: str = "b_id", geom_b: str = "geometry") -> DataFrame:
-    """vec_lyr_sym_difference_gp — LAYER-level symmetric difference
-    (union minus intersection): the a−(union of B) pieces (b_id null)
-    plus the b−(union of A) pieces (a_id null). Composing from the two
-    multi-clipper differences keeps non-overlapping polygons whole and
-    never double-counts multi-clipper overlaps (a per-PAIR sym-diff
-    would do both)."""
-    kw = dict(id_a=id_a, geom_a=geom_a, id_b=id_b, geom_b=geom_b)
-    a_rem = difference(a, b, res, **kw).withColumn(
-        "b_id", F.lit(None).cast("bigint"))
-    b_rem = (
-        difference(b, a, res, id_a=id_b, geom_a=geom_b,
-                   id_b=id_a, geom_b=geom_a)
-        .withColumnRenamed("a_id", "b_id")
-        .withColumn("a_id", F.lit(None).cast("bigint"))
-    )
-    cols = ["a_id", "b_id", "area", "n_pieces", "pieces"]
-    return a_rem.select(*cols).unionByName(b_rem.select(*cols))
+    clipped = pairs.groupBy(sid).applyInPandas(clip, schema=schema)
 
-
-def difference(a: DataFrame, b: DataFrame, res: int = 6,
-               id_a: str = "a_id", geom_a: str = "geometry",
-               id_b: str = "b_id", geom_b: str = "geometry") -> DataFrame:
-    """vec_lyr_difference_gp: each a-polygon minus the UNION of every
-    b-polygon overlapping it (per-polygon parity in the scanline makes
-    overlapping clippers union correctly). a-polygons with no
-    overlapping b keep their full geometry/area."""
-    pairs = candidate_pairs(a, b, res, id_a=id_a, geom_a=geom_a,
-                            id_b=id_b, geom_b=geom_b)
-
-    def per_a(key, pdf):
-        ga = bytes(pdf["a_geom"].iloc[0])
-        polys_b = [wkb.wkb_to_rings(bytes(g)) for g in pdf["b_geom"]]
-        pieces, area = geom_overlay.boolean_pieces(
-            [wkb.wkb_to_rings(ga)], polys_b, "difference")
-        return pd.DataFrame(
-            [(key[0], area, len(pieces), _pieces_wkb(pieces))],
-            columns=["a_id", "area", "n_pieces", "pieces"])
-
-    clipped = pairs.groupBy("a_id").applyInPandas(per_a, schema=DIFF_SCHEMA)
-
-    # untouched a's: full polygon passes through (anti-join on a_id).
-    # Decode with wkb_to_polygons (NOT wkb_to_rings — flattening a
-    # MultiPolygon would treat every ring after the first, including
+    # untouched polygons: the full polygon passes through (anti-join on
+    # the id). Decode with wkb_to_polygons (NOT wkb_to_rings — flattening
+    # a MultiPolygon would treat every ring after the first, including
     # other parts' shells, as a hole) and run the same trapezoid
     # decomposition as the clipped path so area/n_pieces/pieces use
     # one consistent representation.
     def full(batches):
         for pdf in batches:
             rows = []
-            for aid, g in zip(pdf[id_a], pdf[geom_a]):
+            for pid, g in zip(pdf[id_col], pdf[geom_col]):
                 polys = wkb.wkb_to_polygons(bytes(g))
-                pieces, area = geom_overlay.boolean_pieces(
-                    polys, [], "union")
-                rows.append((aid, area, len(pieces), _pieces_wkb(pieces)))
-            yield pd.DataFrame(
-                rows, columns=["a_id", "area", "n_pieces", "pieces"])
+                pieces, area = geom_overlay.boolean_pieces(polys, [], "union")
+                rows.append((pid, area, len(pieces), _pieces_wkb(pieces)))
+            yield pd.DataFrame(rows, columns=cols)
 
-    hit = pairs.select(F.col("a_id").alias("_hit_id")).distinct()
+    hit = pairs.select(F.col(sid).alias("_hit_id")).distinct()
     untouched = (
-        a.join(hit, a[id_a] == F.col("_hit_id"), "left_anti")
-        .select(id_a, geom_a)
-        .mapInPandas(full, schema=DIFF_SCHEMA)
+        layer.join(hit, layer[id_col] == F.col("_hit_id"), "left_anti")
+        .select(id_col, geom_col)
+        .mapInPandas(full, schema=schema)
     )
-    return clipped.unionByName(untouched)
+    return (clipped.unionByName(untouched)
+            .withColumn(f"{other}_id", F.lit(None).cast("bigint"))
+            .select(*COLS))
+
+
+def _overlay(a: DataFrame, b: DataFrame, res: int, parts: tuple,
+             id_a: str = "a_id", geom_a: str = "geometry",
+             id_b: str = "b_id", geom_b: str = "geometry") -> DataFrame:
+    """The one overlay core: build the candidate pairs once and return
+    the union of the asked ``parts`` over them — "a&b" (the per-pair
+    intersection pieces), "a-B" and "b-A" (the two remainders)."""
+    pairs = candidate_pairs(a, b, res, id_a, geom_a, id_b, geom_b)
+    built = {
+        "a&b": lambda: _pair_op(pairs),
+        "a-B": lambda: _remainder(a, pairs, "a", id_a, geom_a),
+        "b-A": lambda: _remainder(b, pairs, "b", id_b, geom_b),
+    }
+    return functools.reduce(DataFrame.unionByName,
+                            [built[p]() for p in parts])
+
+
+def intersection(a: DataFrame, b: DataFrame, res: int = 6,
+                 **kw) -> DataFrame:
+    """vec_lyr_intersection_gp: one row per overlapping (a, b) pair
+    with the intersection pieces + exact area."""
+    return _pair_op(candidate_pairs(a, b, res, **kw))
+
+
+def difference(a: DataFrame, b: DataFrame, res: int = 6,
+               id_a: str = "a_id", geom_a: str = "geometry",
+               id_b: str = "b_id", geom_b: str = "geometry") -> DataFrame:
+    """vec_lyr_difference_gp: each a-polygon minus the UNION of every
+    b-polygon overlapping it. a-polygons with no overlapping b keep
+    their full geometry/area."""
+    return _overlay(a, b, res, ("a-B",), id_a, geom_a, id_b,
+                    geom_b).drop("b_id")
+
+
+def sym_difference(a: DataFrame, b: DataFrame, res: int = 6,
+                   id_a: str = "a_id", geom_a: str = "geometry",
+                   id_b: str = "b_id", geom_b: str = "geometry") -> DataFrame:
+    """vec_lyr_sym_difference_gp — LAYER-level symmetric difference
+    (union minus intersection): the a−B pieces (b_id null) plus the
+    b−A pieces (a_id null). The two multi-clipper remainders keep
+    non-overlapping polygons whole and never double-count
+    multi-clipper overlaps."""
+    return _overlay(a, b, res, ("a-B", "b-A"), id_a, geom_a, id_b, geom_b)
 
 
 def identity(a: DataFrame, b: DataFrame, res: int = 6, **kw) -> DataFrame:
     """vec_lyr_identity_gp: a split by b's boundaries — the a∩b pieces
     (tagged with b_id) plus the a−B remainder (b_id null)."""
-    inter = intersection(a, b, res, **kw)
-    diff = difference(a, b, res, **kw).withColumn(
-        "b_id", F.lit(None).cast("bigint"))
-    return inter.unionByName(diff.select("a_id", "b_id", "area",
-                                         "n_pieces", "pieces"))
+    return _overlay(a, b, res, ("a&b", "a-B"), **kw)
 
 
 def union_overlay(a: DataFrame, b: DataFrame, res: int = 6,
@@ -228,19 +240,5 @@ def union_overlay(a: DataFrame, b: DataFrame, res: int = 6,
                   id_b: str = "b_id", geom_b: str = "geometry") -> DataFrame:
     """vec_lyr_union_gp (geopandas overlay 'union'): a∩b pieces +
     a−B pieces (b_id null) + b−A pieces (a_id null)."""
-    kw = dict(id_a=id_a, geom_a=geom_a, id_b=id_b, geom_b=geom_b)
-    inter = intersection(a, b, res, **kw)
-    a_rem = difference(a, b, res, **kw).withColumn(
-        "b_id", F.lit(None).cast("bigint"))
-    b_rem = (
-        difference(b, a, res, id_a=id_b, geom_a=geom_b,
-                   id_b=id_a, geom_b=geom_a)
-        .withColumnRenamed("a_id", "b_id")
-        .withColumn("a_id", F.lit(None).cast("bigint"))
-    )
-    cols = ["a_id", "b_id", "area", "n_pieces", "pieces"]
-    return (
-        inter.select(*cols)
-        .unionByName(a_rem.select(*cols))
-        .unionByName(b_rem.select(*cols))
-    )
+    return _overlay(a, b, res, ("a&b", "a-B", "b-A"), id_a, geom_a, id_b,
+                    geom_b)

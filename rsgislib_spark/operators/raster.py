@@ -216,8 +216,7 @@ def _windows(P: np.ndarray, r, c, k: int) -> np.ndarray:
 
 
 def focal_filter(grid: DataFrame, stat: str = "mean", k: int = 3,
-                 tile: int = 64, width: int | None = None,
-                 height: int | None = None) -> DataFrame:
+                 tile: int = 64) -> DataFrame:
     """k x k focal aggregate per pixel (apply_*_filter semantics,
     imagefilter/__init__.py:38-571). Edge pixels aggregate over the
     available neighbourhood (scipy 'nearest'-free truncation — matches

@@ -243,12 +243,21 @@ def hyperplanes(n_bits: int = 16, dim: int = 64, seed: int = 42):
     return rng.standard_normal((n_bits, dim))
 
 
+def _bit(i: int) -> int:
+    """Bit i's value in a two's-complement BIGINT: bit 63 is −2^63."""
+    return -(1 << 63) if i == 63 else 1 << i
+
+
 def hyperplane_signature(df: DataFrame, n_bits: int = 16, dim: int = 64,
                          id_col: str = "vec_id", vec_col: str = "embedding",
                          seed: int = 42) -> DataFrame:
     """Random-hyperplane LSH signature: bit i = sign(v . r_i).
     Hyperplanes are a deterministic seeded gaussian (driver numpy,
-    broadcast as literals — a few KB)."""
+    broadcast as literals — a few KB). The bits pack into one BIGINT
+    (two's complement: bit 63 is the sign bit), so at most 64."""
+    if n_bits > 64:
+        raise ValueError(f"n_bits={n_bits}: a signature packs into one "
+                         "BIGINT, at most 64 bits")
     planes = hyperplanes(n_bits, dim, seed)
     df = check_dim(df, vec_col, dim)
     from ..session import spread_scan
@@ -261,13 +270,13 @@ def hyperplane_signature(df: DataFrame, n_bits: int = 16, dim: int = 64,
         bits = None
         for i in range(n_bits):
             bit = F.when(dot_lits(vec_col, planes[i]) >= 0.0,
-                         F.lit(1 << i)).otherwise(F.lit(0))
+                         F.lit(_bit(i))).otherwise(F.lit(0))
             bits = bit if bits is None else bits + bit
         return df.select(F.col(id_col).alias("vec_id"),
                          bits.cast("long").alias("sig"))
     tagged = df.withColumn("_hp", _fold_dots_udf(planes, dim)(F.col(vec_col)))
     pack = F.expr(" + ".join(
-        f"IF(`_hp`[{i}] >= 0.0D, {1 << i}L, 0L)" for i in range(n_bits)))
+        f"IF(`_hp`[{i}] >= 0.0D, {_bit(i)}L, 0L)" for i in range(n_bits)))
     return tagged.select(F.col(id_col).alias("vec_id"), pack.alias("sig"))
 
 
@@ -345,7 +354,8 @@ def lsh_neardup_pairs(df: DataFrame, threshold: float = 0.95,
 
     rows = n_bits // bands
     sig = hyperplane_signature(df, n_bits, dim, id_col, vec_col, seed)
-    mask = (1 << rows) - 1
+    # a 64-row band is the whole BIGINT: every bit, mask -1
+    mask = (1 << rows) - 1 if rows < 64 else -1
     band_cols = [
         F.struct(F.lit(bi).alias("band"),
                  F.shiftright("sig", bi * rows).bitwiseAND(F.lit(mask)).alias("bh"))

@@ -183,14 +183,67 @@ def test_spark_overlay_wide_planar_polygon(spark):
 
 
 def test_spark_union_and_identity_areas(spark):
+    """One overlapping pair plus one untouched polygon on each side:
+    every part of union and identity is checked by its ids."""
     from rsgislib_spark.operators import overlay as ovl
 
-    a = _layer(spark, [(1, 0, 0, 10, 10)])
-    b = _layer(spark, [(2, 5, 0, 15, 10)]).withColumnRenamed("a_id", "b_id")
-    u = ovl.union_overlay(a, b, res=6)
-    assert sum(r.area for r in u.collect()) == 150.0  # 100+100-50
-    ident = ovl.identity(a, b, res=6)
-    assert sum(r.area for r in ident.collect()) == 100.0  # partitions a
+    a = _layer(spark, [(1, 0, 0, 10, 10), (3, 40, 40, 44, 44)])
+    b = _layer(spark, [(2, 5, 0, 15, 10), (4, 60, 60, 62, 62)]) \
+        .withColumnRenamed("a_id", "b_id")
+    for op, want in (
+        (ovl.union_overlay, {(1, 2): 50.0, (1, None): 50.0, (3, None): 16.0,
+                             (None, 2): 50.0, (None, 4): 4.0}),
+        (ovl.identity, {(1, 2): 50.0, (1, None): 50.0, (3, None): 16.0}),
+    ):
+        rows = op(a, b, res=6).collect()
+        assert {(r.a_id, r.b_id): r.area for r in rows} == want, op
+        assert len(rows) == len(want), op
+
+
+def test_spark_overlay_one_cover_pass_per_action(spark, monkeypatch):
+    """Each overlay builds its candidate pairs once: building starts no
+    job, and each layer's cover rows are emitted once per action
+    however many parts (a∩b, a−B, b−A) read the pairs."""
+    from rsgislib_spark.cells import quadcell
+    from rsgislib_spark.operators import overlay as ovl
+
+    boxes = {"a": [(i, i, 0, i + 5, 5) for i in range(0, 40, 2)],
+             "b": [(i, i, 0, i + 5, 5) for i in range(1, 40, 2)]}
+    a = _layer(spark, boxes["a"])
+    b = _layer(spark, boxes["b"]).withColumnRenamed("a_id", "b_id")
+    one_pass = {side: sum(len(quadcell.cover_bbox(x0, y0, x1, y1, 6))
+                          for _, x0, y0, x1, y1 in rows)
+                for side, rows in boxes.items()}
+    accs = {side: spark.sparkContext.accumulator(0) for side in boxes}
+    cover_side = ovl._cover_side
+
+    def counted(df, id_col, geom_col, res, prefix):
+        out = cover_side(df, id_col, geom_col, res, prefix)
+        acc = accs[prefix]
+
+        def gen(batches):
+            for pdf in batches:
+                acc.add(len(pdf))
+                yield pdf
+
+        return out.mapInPandas(gen, schema=out.schema)
+
+    monkeypatch.setattr(ovl, "_cover_side", counted)
+    sc = spark.sparkContext
+    for op in (ovl.difference, ovl.sym_difference, ovl.identity,
+               ovl.union_overlay):
+        for acc in accs.values():
+            acc.value = 0
+        group = f"overlay_build_{op.__name__}"
+        sc.setJobGroup(group, "overlay build")
+        try:
+            out = op(a, b, res=6)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], group
+        out.collect()
+        assert {s: acc.value for s, acc in accs.items()} == one_pass, group
 
 
 @settings(max_examples=25, deadline=None)

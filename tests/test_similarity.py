@@ -216,6 +216,49 @@ def test_sig_codegen_tier_has_no_python(spark, emb):
     assert "BatchEvalPython" not in plan
 
 
+def _packed_signs(E, planes):
+    """numpy twin of the signature: each plane's left-fold dot, its
+    sign bit at position i, packed as a two's-complement int64."""
+    bits = np.zeros(len(E), dtype=np.uint64)
+    for i, row in enumerate(planes):
+        acc = np.zeros(len(E))
+        for j, c in enumerate(row):
+            acc = acc + E[:, j] * c
+        bits |= (acc >= 0.0).astype(np.uint64) << np.uint64(i)
+    return bits.view(np.int64)
+
+
+def test_sig_64_bits_twos_complement(spark, emb, brute):
+    """64 bits fill the BIGINT, bit 63 as its sign bit, on both tiers
+    (64 planes x 64 dims fold in the Arrow tier, x 8 dims unroll in
+    codegen); a 64-row LSH band masks every bit; 65 bits raise."""
+    from pyspark.sql import functions as F
+
+    rows = sorted(emb.collect(), key=lambda r: r.vec_id)
+    ids = [r.vec_id for r in rows]
+    E = np.array([r.embedding for r in rows], dtype=np.float64)
+    for dim in (64, 8):
+        df = emb.select("vec_id", F.slice("embedding", 1, dim)
+                        .alias("embedding"))
+        want = dict(zip(ids, _packed_signs(
+            E[:, :dim], similarity.hyperplanes(64, dim, 42)).tolist()))
+        got = {r.vec_id: r.sig for r in similarity.hyperplane_signature(
+            df, n_bits=64, dim=dim, seed=42).collect()}
+        assert got == want, dim
+        assert min(got.values()) < 0 < max(got.values()), dim
+    # one band of 64 rows: candidates are equal signatures
+    _, S = brute
+    sig = _packed_signs(E, similarity.hyperplanes(64, 64, 42))
+    want = {(ids[i], ids[j]) for i in range(len(ids))
+            for j in range(i + 1, len(ids))
+            if sig[i] == sig[j] and S[i, j] >= 0.3}
+    got = {(r.a, r.b) for r in similarity.lsh_neardup_pairs(
+        emb, threshold=0.3, n_bits=64, bands=1).collect()}
+    assert got == want
+    with pytest.raises(ValueError, match="at most 64"):
+        similarity.hyperplane_signature(emb, n_bits=65)
+
+
 def test_dim_mismatch_raises_not_misscores(spark):
     """The unrolled fixed-dim dots must FAIL on a wrong-length vector,
     never silently truncate (dim < len) or NULL-propagate (dim > len)."""
