@@ -103,26 +103,13 @@ class _UF:
             self.p[max(ra, rb)] = min(ra, rb)
 
 
-def _closure_from_rows(spark, edges) -> DataFrame | None:
-    """Label-graph closure on the driver (edges scale with tile
-    perimeter ≈ sqrt(pixels) — tiny relative to the raster)."""
-    uf = _UF()
-    for e in edges:
-        uf.union(e.la, e.lb)
-    remap = [(k, uf.find(k)) for k in list(uf.p)]
-    remap = [(k, r) for k, r in remap if k != r]
-    if not remap:
-        return None
-    return F.broadcast(spark.createDataFrame(
-        remap, "clump_id BIGINT, root BIGINT"))
-
-
 def _closure_distributed(edges_df: DataFrame, max_iters: int = 64):
     """Fully distributed closure for perimeter sets beyond driver
     memory: iterative neighbour-min label propagation + pointer
     jumping (the Spark twin of _tile_cc's SV loop). Converges in
     O(log diameter) joins; each round persists and unpersists its
-    predecessor (no lineage growth)."""
+    predecessor (no lineage growth). Returns the last round, (node,
+    root) for every node, still persisted."""
     both = edges_df.union(
         edges_df.selectExpr("lb AS la", "la AS lb")).persist()
     lab = (both.selectExpr("la AS node").distinct()
@@ -152,25 +139,55 @@ def _closure_distributed(edges_df: DataFrame, max_iters: int = 64):
         if changed == 0:
             break
     both.unpersist()
-    out = lab.where(F.col("node") != F.col("root")) \
-             .selectExpr("node AS clump_id", "root")
-    return out
+    return lab
+
+
+def _components(edges: DataFrame, driver_edge_limit: int) -> DataFrame:
+    """(node, root) for every node of an (la, lb) edge frame, root the
+    component's minimum node: the one closure behind clump's border
+    merge and dedup.near_dup_groups.
+
+    The edges are persisted first: the deciding count and the chosen
+    path both read them, and without the persist the upstream edge
+    DAG (border join, LSH bucket join) runs twice. MEMORY_AND_DISK
+    keeps lineage, so an evicted partition recomputes instead of
+    failing. The path is decided by a COUNT capped at limit + 1,
+    never by a pull: a graph just over the limit must not bring
+    driver_edge_limit rows to the driver only to discard them. Up to
+    the limit the closure is a driver union-find over one collected
+    batch (edges scale with tile perimeter ≈ sqrt(pixels) in clump);
+    past it, the distributed rounds never touch the driver. A
+    persisted Dataset stays in the CacheManager until it is
+    unpersisted, so the edges are unpersisted before returning; the
+    distributed closure's last round stays persisted, as the result
+    reads it."""
+    from pyspark import StorageLevel
+
+    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        if edges.limit(driver_edge_limit + 1).count() > driver_edge_limit:
+            return _closure_distributed(edges)
+        uf = _UF()
+        for e in edges.collect():
+            uf.union(e.la, e.lb)
+        return F.broadcast(edges.sparkSession.createDataFrame(
+            [(k, uf.find(k)) for k in list(uf.p)],
+            edges.selectExpr("la AS node", "lb AS root").schema))
+    finally:
+        edges.unpersist()
 
 
 def clump(grid: DataFrame, tile: int = 64,
           no_data: float | None = None,
-          merge: str = "auto",
           driver_edge_limit: int = 2_000_000) -> DataFrame:
     """(x, y, value) -> (x, y, value, clump_id): 4-connected equal-
     value components; no_data pixels are dropped (reference clump
     skips the no-data value).
 
-    merge: 'driver' = collect the border equivalence edges and close
-    them with a union-find (perimeter-scale — the default fit);
-    'distributed' = iterative min-label join closure that never
-    touches the driver; 'auto' picks by edge count vs
-    driver_edge_limit."""
-    spark = grid.sparkSession
+    Up to driver_edge_limit border equivalence edges are closed by a
+    driver union-find (perimeter-scale — the usual fit); past it by
+    the iterative min-label join closure that never touches the
+    driver (see _components)."""
     px = grid.select("x", "y", "value")
 
     tiled = px.withColumn("_tx", (F.col("x") / tile).cast("long")) \
@@ -208,30 +225,13 @@ def clump(grid: DataFrame, tile: int = 64,
         .select("la", "lb").distinct()
     )
 
-    if merge == "auto":
-        # one job decides AND (in the common case) delivers the edge
-        # rows — never compute the edge join twice
-        rows = edges_df.limit(driver_edge_limit).collect()
-        if len(rows) < driver_edge_limit:
-            map_df = _closure_from_rows(spark, rows)
-        else:
-            map_df = _closure_distributed(edges_df)
-    elif merge == "driver":
-        map_df = _closure_from_rows(spark, edges_df.collect())
-    elif merge == "distributed":
-        map_df = _closure_distributed(edges_df)
-    else:
-        raise ValueError("merge must be auto/driver/distributed")
-
-    if map_df is not None:
-        out = (
-            labelled.join(map_df, "clump_id", "left")
-            .withColumn("clump_id", F.coalesce("root", "clump_id"))
-            .drop("root")
-        )
-    else:
-        out = labelled
-    return out.select("x", "y", "value", "clump_id")
+    roots = _components(edges_df, driver_edge_limit)
+    return (
+        labelled.join(roots.withColumnRenamed("node", "clump_id"),
+                      "clump_id", "left")
+        .select("x", "y", "value",
+                F.coalesce("root", "clump_id").alias("clump_id"))
+    )
 
 
 def union_of_clumps(a: DataFrame, b: DataFrame) -> DataFrame:

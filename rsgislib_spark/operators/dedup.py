@@ -18,6 +18,22 @@ Scale design:
   anywhere.
 - simhash64: weighted bit-vote fingerprint; near-dups = equal
   fingerprints per rotated band (Hamming via 4-table indexing).
+
+Shared steps (one implementation each):
+- _docs / _gram: the spread (doc_id, _text) source every tokenizing
+  operator starts from, and the indexed word n-gram expression.
+- _shingle_hashes: the (doc_id, sh_h) shingle-hash table of the
+  jaccard, minhash-verify and decontamination paths.
+- _band_pairs: the band-bucket self-join (explode band keys, equi-
+  join on the bucket, a < b) behind minhash_lsh_pairs,
+  simhash_near_pairs and similarity.lsh_neardup_pairs; _band_rows
+  rejects a banding with an empty band.
+- _jaccard: sizes, the two size joins, n / (sza + szb - n) and the
+  threshold, for ngram_jaccard_pairs and the minhash verify.
+- _id_groups: the (optionally capped) sorted id list per key, for
+  exact_dedup and simhash_dup_groups.
+- clump._components: the connected-components closure (driver
+  union-find or distributed rounds) behind near_dup_groups.
 """
 
 from __future__ import annotations
@@ -66,6 +82,23 @@ def _perm_params(n_perm: int, seed: int = 42):
             for _ in range(n_perm)]
 
 
+def _docs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, _text), spread: the tokenize/explode stages downstream
+    are every text operator's heavy narrow work, and a one-row-group
+    corpus file would otherwise run them all on one core."""
+    from ..session import spread_scan
+
+    return spread_scan(df.select(F.col(id_col).alias("doc_id"),
+                                 F.col(text_col).alias("_text")),
+                       by="doc_id")
+
+
+def _gram(n: int) -> str:
+    """The word n-gram starting at token i of ``_toks``, as SQL."""
+    return "concat_ws(' ', " + ", ".join(
+        f"_toks[i + {j}]" for j in range(n)) + ")"
+
+
 def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
              n: int = 3) -> DataFrame:
     """Word n-gram shingle table (doc_id, shingle) — distinct per doc.
@@ -80,25 +113,98 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     array_join(slice(...), " ") exactly: split() never yields NULLs,
     and both keep empty strings.
     """
-    from ..session import spread_scan
-
-    gram = "concat_ws(' ', " + ", ".join(
-        f"_toks[i + {j}]" for j in range(n)) + ")"
     return (
-        # spread_scan: the tokenize/explode/distinct chain is the
-        # expensive narrow stage of every shingle consumer (minhash
-        # signatures, jaccard pairs, decontamination) — a single-row-
-        # group corpus file would otherwise run it all on one core
-        spread_scan(df.select(F.col(id_col).alias("doc_id"),
-                              F.col(text_col).alias("_text")),
-                    by="doc_id")
+        _docs(df, id_col, text_col)
         .select("doc_id", F.split("_text", " ").alias("_toks"))
         .where(F.size("_toks") >= n)
         .select("doc_id", F.explode(F.array_distinct(F.expr(
-            f"transform(sequence(0, size(_toks) - {n}), i -> {gram})"
+            f"transform(sequence(0, size(_toks) - {n}), i -> {_gram(n)})"
         ))).alias("shingle"))
         .where(F.length("shingle") > 0)
     )
+
+
+def _shingle_hashes(df: DataFrame, id_col: str, text_col: str,
+                    n: int) -> DataFrame:
+    """(doc_id, sh_h): each distinct shingle as its 64-bit hash. Joins
+    on the 8-byte hash shuffle ~3x fewer bytes than on the ~25-byte
+    string. Distinct-per-doc is taken BEFORE hashing (shingles()
+    dedupes), so a 2^-64 collision can only merge two DIFFERENT
+    shingles (count off by 1), never double-count."""
+    return shingles(df, id_col, text_col, n).select(
+        "doc_id", F.xxhash64("shingle").alias("sh_h"))
+
+
+def _jaccard(inter: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """(a, b, jaccard >= threshold) from the shared-shingle counts
+    (a, b, n_common) and the shingle table they were counted over:
+    |A ∪ B| = |A| + |B| - |A ∩ B|."""
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    return (
+        inter.join(sizes.selectExpr("doc_id AS a", "sz AS sza"), "a")
+        .join(sizes.selectExpr("doc_id AS b", "sz AS szb"), "b")
+        .withColumn(
+            "jaccard",
+            F.col("n_common")
+            / (F.col("sza") + F.col("szb") - F.col("n_common")).cast("double"),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select("a", "b", "jaccard")
+    )
+
+
+def _band_rows(n: int, bands: int, what: str) -> int:
+    """Rows per band of an n-row signature. A band with no rows keys
+    every item to one bucket, so the candidates would be every pair —
+    the corpus-quadratic join banding exists to avoid."""
+    if bands < 1 or n // bands == 0:
+        raise ValueError(f"bands={bands} with {what}={n}: need "
+                         f"1 <= bands <= {what}")
+    return n // bands
+
+
+def _band_pairs(items: DataFrame, id_col: str, bands: int, band_key,
+                carry: str | None = None) -> DataFrame:
+    """The band-bucket self-join: one (band, band_key(band)) bucket per
+    item and band, an equi-join on the bucket, a < b. Pairs only form
+    inside buckets, never in a cross join; a pair sharing several
+    buckets comes out once per bucket. Output (bk, a, b), plus
+    ``carry`` of each side as ca, cb when given."""
+    keys = [F.struct(F.lit(bi).alias("band"), band_key(bi).alias("bh"))
+            for bi in range(bands)]
+    kept = [id_col] + ([carry] if carry else [])
+    buckets = items.select(*kept, F.explode(F.array(*keys)).alias("bk"))
+
+    def side(s):
+        return buckets.select(F.col(id_col).alias(s), "bk", *(
+            [F.col(carry).alias("c" + s)] if carry else []))
+
+    return side("a").join(side("b"), "bk").where(F.col("a") < F.col("b"))
+
+
+def _id_groups(keyed: DataFrame, key: str, stats, max_ids: int | None,
+               having=None) -> DataFrame:
+    """Per ``key``: the ``stats`` aggregates and the sorted doc_ids.
+    max_ids caps the id list BEFORE aggregation (per-key row_number
+    rank filter — slicing after collect_list would still materialize
+    the full array in the agg buffer); the stats stay exact, from a
+    separate uncapped aggregation. ``having`` filters on the stats."""
+    from pyspark.sql import Window
+
+    ids = F.sort_array(F.collect_list("doc_id")).alias("doc_ids")
+    grouped = keyed.groupBy(key).agg(*stats, *([ids] if max_ids is None
+                                               else []))
+    if having is not None:
+        grouped = grouped.where(having)
+    if max_ids is None:
+        return grouped
+    w = Window.partitionBy(key).orderBy("doc_id")
+    capped = (
+        keyed.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= max_ids)
+        .groupBy(key).agg(ids)
+    )
+    return grouped.join(capped, key)
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id",
@@ -116,25 +222,9 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id",
     separate uncapped count-only aggregation."""
     hashed = df.select(F.col(id_col).alias("doc_id"),
                        F.md5(text_col).alias("h"))
-    if max_ids is None:
-        return (
-            hashed.groupBy("h")
-            .agg(F.min("doc_id").alias("keep_id"),
-                 F.count("*").alias("n_copies"),
-                 F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
-        )
-    from pyspark.sql import Window
-
-    stats = hashed.groupBy("h").agg(
-        F.min("doc_id").alias("keep_id"), F.count("*").alias("n_copies"))
-    w = Window.partitionBy("h").orderBy("doc_id")
-    capped = (
-        hashed.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= max_ids)
-        .groupBy("h")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
-    )
-    return stats.join(capped, "h")
+    return _id_groups(hashed, "h", [F.min("doc_id").alias("keep_id"),
+                                    F.count("*").alias("n_copies")],
+                      max_ids)
 
 
 # Exact mode (max_df=None) switches from the shingle self-join to the
@@ -259,19 +349,10 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
     shingles). Pass max_df=None only for small corpora where exact
     parity with a brute-force oracle is required.
     """
-    # join on the 64-bit shingle hash, not the ~25-byte string: the
-    # self-join shuffles |corpus| * |shingles/doc| rows — 8-byte keys
-    # cut shuffle bytes ~3x. Distinct-per-doc is taken BEFORE hashing
-    # (shingles() already dedupes), so a 2^-64 hash collision can
-    # only merge two DIFFERENT shingles (count off by 1), never
-    # double-count — negligible against exact semantics.
-    sh = shingles(df, id_col, text_col, n).select(
-        "doc_id", F.xxhash64("shingle").alias("sh_h"))
+    sh = _shingle_hashes(df, id_col, text_col, n)
     if max_df is not None:
         hot = sh.groupBy("sh_h").count().where(F.col("count") > max_df)
         sh = sh.join(hot.select("sh_h"), "sh_h", "left_anti")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    if max_df is not None:
         # ONE shuffle of the shingle table: bucket per shingle hash,
         # then a JVM combinational explode of (a < b) pairs inside
         # the bucket. The self-join alternative shuffles the table
@@ -321,18 +402,7 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
             .where(F.col("a") < F.col("b"))
             .groupBy("a", "b").agg(F.count("*").alias("n_common"))
         )
-    out = (
-        inter.join(sizes.selectExpr("doc_id AS a", "sz AS sza"), "a")
-        .join(sizes.selectExpr("doc_id AS b", "sz AS szb"), "b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common")
-            / (F.col("sza") + F.col("szb") - F.col("n_common")).cast("double"),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
-    return out
+    return _jaccard(inter, sh, threshold)
 
 
 def minhash_signatures(df: DataFrame, n_perm: int = 32,
@@ -374,7 +444,7 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5,
     default hashes each band slice to one 64-bit key (smaller shuffle
     rows, collision risk 2^-64 and collisions are exact-verified
     anyway)."""
-    rows = n_perm // bands
+    rows = _band_rows(n_perm, bands, "n_perm")
     # NOTE the shingle explode is referenced by four subtrees here
     # (signatures, sizes, both verify sides) and deliberately NOT
     # persisted: measured at sf1.0, caching the 2.6M-row shingle
@@ -385,27 +455,15 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5,
     # signature pass).
     sig = minhash_signatures(df, n_perm, id_col, text_col, n, seed,
                              hash_mode)
-    if hash_mode == "portable":
-        band_cols = [
-            F.struct(F.lit(bi).alias("band"),
-                     F.array_join(F.slice("sig", bi * rows + 1, rows)
-                                  .cast("array<string>"), ",").alias("bh"))
-            for bi in range(bands)
-        ]
-    else:
-        band_cols = [
-            F.struct(F.lit(bi).alias("band"),
-                     F.xxhash64(F.slice("sig", bi * rows + 1, rows).cast("string"))
-                     .alias("bh"))
-            for bi in range(bands)
-        ]
-    buckets = sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bk"))
-    l = buckets.select(F.col("doc_id").alias("a"), "bk")
-    r = buckets.select(F.col("doc_id").alias("b"), "bk")
-    cand = (
-        l.join(r, "bk").where(F.col("a") < F.col("b"))
+
+    def band_key(bi):
+        band = F.slice("sig", bi * rows + 1, rows)
+        if hash_mode == "portable":
+            return F.array_join(band.cast("array<string>"), ",")
+        return F.xxhash64(band.cast("string"))
+
+    cand = _band_pairs(sig, "doc_id", bands, band_key) \
         .select("a", "b").distinct()
-    )
     # Verify ONLY the candidate pairs: fan each pair out by doc a's
     # shingles, equi-join to doc b's shingle set on (b, shingle) to
     # count the intersection. Cost is O(Σ|shingles(a)| over candidate
@@ -423,27 +481,13 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5,
     # NEVER fired for the three consumers (identical Generate-explode
     # count with and without it), so the extra exchange was pure
     # shuffle cost.
-    sh = shingles(df, id_col, text_col, n).select(
-        "doc_id", F.xxhash64("shingle").alias("sh_h"))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    sh_a = sh.selectExpr("doc_id AS a", "sh_h")
-    sh_b = sh.selectExpr("doc_id AS b", "sh_h")
+    sh = _shingle_hashes(df, id_col, text_col, n)
     inter = (
-        cand.join(sh_a, "a")
-        .join(sh_b, ["b", "sh_h"])
+        cand.join(sh.selectExpr("doc_id AS a", "sh_h"), "a")
+        .join(sh.selectExpr("doc_id AS b", "sh_h"), ["b", "sh_h"])
         .groupBy("a", "b").agg(F.count("*").alias("n_common"))
     )
-    return (
-        inter.join(sizes.selectExpr("doc_id AS a", "sz AS sza"), "a")
-        .join(sizes.selectExpr("doc_id AS b", "sz AS szb"), "b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common")
-            / (F.col("sza") + F.col("szb") - F.col("n_common")).cast("double"),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
+    return _jaccard(inter, sh, threshold)
 
 
 def simhash64(df: DataFrame, id_col: str = "doc_id",
@@ -455,14 +499,8 @@ def simhash64(df: DataFrame, id_col: str = "doc_id",
     hash_mode="portable": md5-derived 60-bit token hash (bits 60-63
     then always vote -1 — a 60-bit fingerprint) so the DuckDB oracle
     can replicate the fingerprint bit-for-bit."""
-    from ..session import spread_scan
-
     toks = (
-        # spread_scan: the token explode + 64 partial bit-vote sums
-        # run in the scan stage — single-core on a one-row-group file
-        spread_scan(df.select(F.col(id_col).alias("doc_id"),
-                              F.col(text_col).alias("_text")),
-                    by="doc_id")
+        _docs(df, id_col, text_col)
         .select("doc_id", F.explode(F.split("_text", " ")).alias("tok"))
         .where(F.length("tok") > 0)
         .withColumn("hv", _hash64("tok", hash_mode))
@@ -507,29 +545,20 @@ def simhash_near_pairs(df: DataFrame, k: int = 3, id_col: str = "doc_id",
     nb = k + 1
     width = 64 // nb
     sh = simhash64(df, id_col, text_col, hash_mode)
-    bands = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            # band bi = bits [bi*width, ...); last band takes the rest
-            F.shiftrightunsigned(
-                F.col("simhash"), bi * width).bitwiseAND(
-                F.lit(-1 if bi == nb - 1 else (1 << width) - 1))
-            .alias("bits"))
-        for bi in range(nb)
-    ]
-    buckets = sh.select("doc_id", "simhash",
-                        F.explode(F.array(*bands)).alias("bk"))
-    l = buckets.selectExpr("doc_id AS a", "simhash AS ha", "bk")
-    r = buckets.selectExpr("doc_id AS b", "simhash AS hb", "bk")
+
+    def band_key(bi):
+        # band bi = bits [bi*width, ...); last band takes the rest
+        return F.shiftrightunsigned(F.col("simhash"), bi * width).bitwiseAND(
+            F.lit(-1 if bi == nb - 1 else (1 << width) - 1))
+
     # verify BEFORE the distinct: bit_count is one codegen instruction
     # per candidate, and filtering to hamming <= k first means the
     # distinct's shuffle carries only near pairs (usually a tiny
     # fraction of band-bucket candidates) instead of every candidate
     return (
-        l.join(r, "bk")
-        .where(F.col("a") < F.col("b"))
+        _band_pairs(sh, "doc_id", nb, band_key, carry="simhash")
         .select("a", "b",
-                F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+                F.bit_count(F.col("ca").bitwiseXOR(F.col("cb")))
                 .alias("hamming"))
         .where(F.col("hamming") <= k)
         .distinct()
@@ -545,25 +574,9 @@ def simhash_dup_groups(df: DataFrame, id_col: str = "doc_id",
     max_ids caps the per-group id list like exact_dedup's — applied
     BEFORE aggregation (rank filter) so the agg buffer itself is
     bounded, not just the output row."""
-    sh = simhash64(df, id_col, text_col, hash_mode)
-    if max_ids is None:
-        return (
-            sh.groupBy("simhash")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
-            .where(F.col("n_docs") > 1)
-        )
-    from pyspark.sql import Window
-
-    stats = sh.groupBy("simhash").agg(F.count("*").alias("n_docs"))         .where(F.col("n_docs") > 1)
-    w = Window.partitionBy("simhash").orderBy("doc_id")
-    capped = (
-        sh.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= max_ids)
-        .groupBy("simhash")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
-    )
-    return stats.join(capped, "simhash")
+    return _id_groups(simhash64(df, id_col, text_col, hash_mode), "simhash",
+                      [F.count("*").alias("n_docs")], max_ids,
+                      having=F.col("n_docs") > 1)
 
 
 def near_dup_groups(pairs: DataFrame,
@@ -575,55 +588,16 @@ def near_dup_groups(pairs: DataFrame,
 
     Pair graphs are usually tiny relative to the corpus: up to
     driver_edge_limit edges the closure is a driver union-find over
-    ONE collected batch (same pattern as clump's border merge); bigger
-    graphs switch to the distributed iterative neighbour-min closure,
-    which never touches the driver. Output: (doc_id, group_id) for
+    ONE collected batch; bigger graphs switch to the distributed
+    iterative neighbour-min closure, which never touches the driver
+    (clump._components, the closure of clump's border merge). Output: (doc_id, group_id) for
     every document in some group; group_id = the group's minimum
     doc_id (deterministic keeper)."""
-    from .clump import _closure_distributed, _closure_from_rows
+    from .clump import _components
 
-    from pyspark import StorageLevel
-
-    spark = pairs.sparkSession
-    # persist BEFORE the path decision: the pair generation upstream
-    # (shingle self-join / LSH bucket join) is the expensive part, and
-    # both the deciding count and the chosen path read the same edge
-    # set — without the persist the whole pair DAG runs twice (the
-    # original count-not-collect fix measured 1.7x slower end-to-end
-    # for exactly that reason). MEMORY_AND_DISK keeps lineage, so an
-    # evicted partition recomputes instead of failing.
-    edges = pairs.selectExpr("a AS la", "b AS lb") \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    # decide the path with a COUNT (limit+1 caps the scan), never by
-    # materializing edges on the driver: a graph just over the limit
-    # would otherwise pull driver_edge_limit rows only to discard
-    # them and run the distributed closure anyway
-    n_capped = edges.limit(driver_edge_limit + 1).count()
-    if n_capped <= driver_edge_limit:
-        rows = edges.collect()
-        edges.unpersist()
-        remap = _closure_from_rows(spark, rows)
-        node_ids = sorted({r.la for r in rows} | {r.lb for r in rows})
-        nodes = spark.createDataFrame(
-            [(int(n),) for n in node_ids], "doc_id BIGINT")
-        if remap is None:
-            return nodes.withColumn("group_id", F.col("doc_id"))
-    else:
-        # edges stays persisted across the closure iterations and the
-        # lazy nodes read; the ContextCleaner frees the blocks when
-        # the result frame goes out of scope (same lifecycle as
-        # spatial_join's localCheckpoint)
-        remap = _closure_distributed(edges)
-        nodes = (
-            edges.selectExpr("la AS doc_id")
-            .union(edges.selectExpr("lb AS doc_id")).distinct()
-        )
-    return (
-        nodes.join(remap.withColumnRenamed("clump_id", "doc_id"),
-                   "doc_id", "left")
-        .withColumn("group_id", F.coalesce("root", "doc_id"))
-        .drop("root")
-    )
+    return _components(pairs.selectExpr("a AS la", "b AS lb"),
+                       driver_edge_limit).selectExpr(
+        "node AS doc_id", "root AS group_id")
 
 
 def contamination_flags(corpus: DataFrame, eval_set: DataFrame,
@@ -645,14 +619,11 @@ def contamination_flags(corpus: DataFrame, eval_set: DataFrame,
     Returns (doc_id, n_shared) for contaminated docs only —
     downstream does an anti-join against this to drop them.
     """
-    ev = (shingles(eval_set, id_col, text_col, n)
-          .select(F.xxhash64("shingle").alias("sh_h")).distinct())
-    sh = shingles(corpus, id_col, text_col, n).select(
-        "doc_id", F.xxhash64("shingle").alias("sh_h"))
-    from pyspark.sql.functions import broadcast
-
+    ev = _shingle_hashes(eval_set, id_col, text_col, n) \
+        .select("sh_h").distinct()
     return (
-        sh.join(broadcast(ev), "sh_h")
+        _shingle_hashes(corpus, id_col, text_col, n)
+        .join(F.broadcast(ev), "sh_h")
         .groupBy("doc_id").agg(F.count("*").alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
     )
@@ -710,15 +681,8 @@ def span_dup_stats(df: DataFrame, id_col: str = "doc_id",
         stride = span_tokens
     if not 1 <= stride <= span_tokens:
         raise ValueError(f"stride must be in [1, span_tokens], got {stride}")
-    from ..session import spread_scan
-
     spans = (
-        # spread_scan: span assembly (array_join per offset) and the
-        # portable-hash projection are the heavy narrow stages; a
-        # one-row-group corpus would run them on one core
-        spread_scan(df.select(F.col(id_col).alias("doc_id"),
-                              F.col(text_col).alias("_text")),
-                    by="doc_id")
+        _docs(df, id_col, text_col)
         .select("doc_id",
                 F.split(F.coalesce(F.col("_text"), F.lit("")), " ")
                 .alias("_tk"))
@@ -774,18 +738,11 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
                         n_tokens (ties resolved by the count alone —
                         only the max count matters)
     """
-    from ..session import spread_scan
-
-    gram = "concat_ws(' ', " + ", ".join(
-        f"_toks[i + {j}]" for j in range(n)) + ")"
     return (
-        # spread_scan: the n-gram/array_sort/aggregate projections are
-        # interpreted higher-order functions — by far the heaviest
-        # per-row work here, all in the scan stage (no shuffle at all
-        # in this operator), so a one-row-group file serializes it
-        spread_scan(df.select(F.col(id_col).alias("doc_id"),
-                              F.col(text_col).alias("_text")),
-                    by="doc_id")
+        # the n-gram/array_sort/aggregate projections are interpreted
+        # higher-order functions, all in the (spread) scan stage: this
+        # operator has no shuffle at all
+        _docs(df, id_col, text_col)
         .select("doc_id", F.split("_text", " ").alias("_toks"))
         .selectExpr(
             "doc_id",
@@ -793,7 +750,7 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
             f"""CASE WHEN size(_toks) < {n} THEN CAST(0 AS DOUBLE)
                 ELSE 1 - CAST(size(array_distinct(
                     transform(sequence(0, size(_toks) - {n}),
-                              i -> {gram}))) AS DOUBLE)
+                              i -> {_gram(n)}))) AS DOUBLE)
                      / CAST(size(_toks) - {n} + 1 AS DOUBLE)
             END AS dup_ngram_frac""",
             # max token frequency == longest equal run of the SORTED

@@ -169,40 +169,59 @@ def with_unit_vec(df: DataFrame, vec_col: str = "embedding",
                              for i in range(dim)) + ")")).drop("__n")
 
 
+def _vecs(df: DataFrame, p: str, id_col: str, vec_col: str, dim: int,
+          *keep: str) -> DataFrame:
+    """The (id, vector, norm) projection every cosine scorer reads,
+    named p, p + "v", p + "n" (plus the ``keep`` columns). Norms come
+    once per vector BEFORE any pair join (the per-vector sum is the
+    same IEEE expression as a per-pair norm), so the pair stage does
+    only the dot."""
+    return df.select(F.col(id_col).alias(p), F.col(vec_col).alias(p + "v"),
+                     norm_col(vec_col, dim).alias(p + "n"), *keep)
+
+
+def _cosine(x: str, y: str, dim: int) -> Column:
+    """Cosine of the _vecs projections named x and y."""
+    return dot_cols(x + "v", y + "v", dim) / (F.col(x + "n") * F.col(y + "n"))
+
+
+def _pairs_over(pairs: DataFrame, threshold: float, dim: int) -> DataFrame:
+    """(a, b, score) for the a/b pairs whose cosine reaches threshold."""
+    return (
+        pairs.withColumn("score", _cosine("a", "b", dim))
+        .where(F.col("score") >= threshold)
+        .select("a", "b", F.round("score", 6).alias("score"))
+    )
+
+
+def _topk(pairs: DataFrame, k: int, dim: int) -> DataFrame:
+    """(q, c, score, rank) for each q's k best-scoring c != q; ties on
+    score go to the smaller c."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("q").orderBy(F.desc("score"), F.asc("c"))
+    return (
+        pairs.where(F.col("q") != F.col("c"))
+        .withColumn("score", _cosine("q", "c", dim))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("q", "c", F.round("score", 6).alias("score"), "rank")
+    )
+
+
 def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
                 q_id: str = "vec_id", c_id: str = "vec_id",
                 vec_col: str = "embedding", dim: int = 64) -> DataFrame:
     """Exact brute-force top-k: broadcast the (smaller) query side,
     score every corpus vector, rank per query. Output (q, c, score,
-    rank). Self-matches (same id) excluded.
-
-    Norms are computed once per vector BEFORE the cross join (same
-    IEEE value — the per-vector sum is the identical expression), so
-    the O(|q|*|c|) stage does only the dot."""
-    from pyspark.sql import Window
-
-    q = check_dim(queries, vec_col, dim).select(
-        F.col(q_id).alias("q"), F.col(vec_col).alias("qv"),
-        norm_col(vec_col, dim).alias("qn"))
-    c = check_dim(corpus, vec_col, dim).select(
-        F.col(c_id).alias("c"), F.col(vec_col).alias("cv"),
-        norm_col(vec_col, dim).alias("cn"))
+    rank). Self-matches (same id) excluded."""
+    q = _vecs(check_dim(queries, vec_col, dim), "q", q_id, vec_col, dim)
+    c = _vecs(check_dim(corpus, vec_col, dim), "c", c_id, vec_col, dim)
     # spread the streamed corpus across the cluster: a small parquet
     # arrives as ONE split, which would run the O(|q|*|c|) scoring
     # stage on a single core
     c = c.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-    scored = (
-        F.broadcast(q).crossJoin(c)
-        .where(F.col("q") != F.col("c"))
-        .withColumn("score",
-                    dot_cols("qv", "cv", dim) / (F.col("qn") * F.col("cn")))
-    )
-    w = Window.partitionBy("q").orderBy(F.desc("score"), F.asc("c"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q", "c", F.round("score", 6).alias("score"), "rank")
-    )
+    return _topk(F.broadcast(q).crossJoin(c), k, dim)
 
 
 def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.95,
@@ -210,26 +229,15 @@ def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.95,
                          vec_col: str = "embedding",
                          dim: int = 64) -> DataFrame:
     """All pairs (a < b) with cosine >= threshold — embedding near-dup
-    detection (brute force; LSH variant below for scale).
-
-    Norms are computed ONCE PER VECTOR before the pair join (same
-    IEEE value as a per-pair norm — the per-vector sum is the same
-    expression either way), so the O(n^2) stage does only the dot."""
-    base = check_dim(df, vec_col, dim).select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
-        norm_col(vec_col, dim).alias("_n"))
+    detection (brute force; LSH variant below for scale)."""
+    checked = check_dim(df, vec_col, dim)
     # spread the streamed side: a small parquet arrives as ONE split,
     # which would run the O(n^2) pair stage on a single core
-    a = base.selectExpr("_id AS a", "_v AS av", "_n AS na").repartition(
+    a = _vecs(checked, "a", id_col, vec_col, dim).repartition(
         df.sparkSession.sparkContext.defaultParallelism)
-    b = base.selectExpr("_id AS b", "_v AS bv", "_n AS nb")
-    return (
-        a.crossJoin(F.broadcast(b)).where(F.col("a") < F.col("b"))
-        .withColumn("score", dot_cols("av", "bv", dim)
-                    / (F.col("na") * F.col("nb")))
-        .where(F.col("score") >= threshold)
-        .select("a", "b", F.round("score", 6).alias("score"))
-    )
+    b = _vecs(checked, "b", id_col, vec_col, dim)
+    return _pairs_over(a.crossJoin(F.broadcast(b))
+                       .where(F.col("a") < F.col("b")), threshold, dim)
 
 
 def hyperplanes(n_bits: int = 16, dim: int = 64, seed: int = 42):
@@ -352,23 +360,18 @@ def lsh_neardup_pairs(df: DataFrame, threshold: float = 0.95,
     curve."""
     from pyspark.sql.types import LongType
 
-    rows = n_bits // bands
-    sig = hyperplane_signature(df, n_bits, dim, id_col, vec_col, seed)
-    # a 64-row band is the whole BIGINT: every bit, mask -1
-    mask = (1 << rows) - 1 if rows < 64 else -1
-    band_cols = [
-        F.struct(F.lit(bi).alias("band"),
-                 F.shiftright("sig", bi * rows).bitwiseAND(F.lit(mask)).alias("bh"))
-        for bi in range(bands)
-    ]
+    from .dedup import _band_pairs, _band_rows
+
+    rows = _band_rows(n_bits, bands, "n_bits")
     # persist the signature table: the band self-join would otherwise
     # evaluate the signature computation (an Arrow UDF pass at
     # n_bits*dim > _CODEGEN_MAX_TERMS) once per join side
-    sig = sig.persist()
-    buckets = sig.select("vec_id", F.explode(F.array(*band_cols)).alias("bk"))
-    l = buckets.select(F.col("vec_id").alias("a"), "bk")
-    r = buckets.select(F.col("vec_id").alias("b"), "bk")
-    cand = l.join(r, "bk").where(F.col("a") < F.col("b")).select("a", "b")
+    sig = hyperplane_signature(df, n_bits, dim, id_col, vec_col,
+                               seed).persist()
+    # a 64-row band is the whole BIGINT: every bit, mask -1
+    mask = (1 << rows) - 1 if rows < 64 else -1
+    cand = _band_pairs(sig, "vec_id", bands, lambda bi: F.shiftright(
+        "sig", bi * rows).bitwiseAND(F.lit(mask))).select("a", "b")
     id_ok = isinstance(df.schema[id_col].dataType, LongType)
     if id_ok and df.count() <= _VERIFY_KERNEL_MAX_VECS:
         # verify FIRST, dedupe after: duplicate candidates (a pair
@@ -379,19 +382,17 @@ def lsh_neardup_pairs(df: DataFrame, threshold: float = 0.95,
         # bit-identical rows, so distinct-after is the same set.
         return _verify_cosine_kernel(df, cand, threshold, id_col,
                                      vec_col, dim).distinct()
-    cand = cand.distinct()
-    vecs = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
-                     norm_col(vec_col, dim).alias("_n"))
-    out = (
-        cand.join(vecs.selectExpr("_id AS a", "_v AS av", "_n AS na"), "a")
-        .join(vecs.selectExpr("_id AS b", "_v AS bv", "_n AS nb"), "b")
-    )
-    return (
-        out.withColumn("score", dot_cols("av", "bv", dim)
-                       / (F.col("na") * F.col("nb")))
-        .where(F.col("score") >= threshold)
-        .select("a", "b", F.round("score", 6).alias("score"))
-    )
+    return _pairs_over(
+        cand.distinct()
+        .join(_vecs(df, "a", id_col, vec_col, dim), "a")
+        .join(_vecs(df, "b", id_col, vec_col, dim), "b"), threshold, dim)
+
+
+def _centroids(centroids, n_centroids: int, dim: int, seed: int):
+    """The given (n, dim) centroids as float64, or the seeded ones."""
+    if centroids is not None:
+        return np.asarray(centroids, dtype=np.float64)
+    return _seed_centroids(n_centroids, dim, seed)
 
 
 def _seed_centroids(n_centroids: int, dim: int, seed: int):
@@ -456,8 +457,7 @@ def ivf_assign(df: DataFrame, n_centroids: int = 16, dim: int = 64,
     k-means-refined cells; None = deterministic seeded random (keeps
     the gate fixture reproducible)."""
 
-    cents = (np.asarray(centroids, dtype=np.float64) if centroids is not None
-             else _seed_centroids(n_centroids, dim, seed))
+    cents = _centroids(centroids, n_centroids, dim, seed)
     n_centroids = len(cents)
     df = check_dim(df, vec_col, dim)
     if n_centroids * dim <= _CODEGEN_MAX_TERMS:
@@ -481,8 +481,7 @@ def ivf_probe_cells(df: DataFrame, n_probe: int, n_centroids: int = 16,
     """Top-``n_probe`` nearest centroids per vector (multi-probe IVF —
     the standard recall lever). Adds exploded ``ivf_cell``."""
 
-    cents = (np.asarray(centroids, dtype=np.float64) if centroids is not None
-             else _seed_centroids(n_centroids, dim, seed))
+    cents = _centroids(centroids, n_centroids, dim, seed)
     n_centroids = len(cents)
     df = check_dim(df, vec_col, dim)
     if n_centroids * dim <= _CODEGEN_MAX_TERMS:
@@ -535,8 +534,6 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
     via auto_n_centroids — one count() job; a FIXED small default
     (the old 16) would leave ~|corpus|/16 vectors per join key at
     scale, the classic hot-reducer."""
-    from pyspark.sql import Window
-
     if centroids is not None:
         n_centroids = len(centroids)
     elif n_centroids is None:
@@ -546,23 +543,10 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
     # spread the corpus before quantization: the O(|corpus| * k * dim)
     # assignment is the expensive stage and would otherwise run on the
     # scan's (possibly single-split) partitioning
-    q = ivf_probe_cells(queries, n_probe, n_centroids, dim, vec_col,
-                        centroids=centroids).select(
-        F.col(q_id).alias("q"), F.col(vec_col).alias("qv"), "ivf_cell",
-        norm_col(vec_col, dim).alias("qn"))
-    c = ivf_assign(spread_scan(corpus), n_centroids, dim, c_id, vec_col,
-                   centroids=centroids).select(
-        F.col(c_id).alias("c"), F.col(vec_col).alias("cv"), "ivf_cell",
-        norm_col(vec_col, dim).alias("cn"))
-    scored = (
-        q.join(c, "ivf_cell")
-        .where(F.col("q") != F.col("c"))
-        .withColumn("score",
-                    dot_cols("qv", "cv", dim) / (F.col("qn") * F.col("cn")))
-    )
-    w = Window.partitionBy("q").orderBy(F.desc("score"), F.asc("c"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q", "c", F.round("score", 6).alias("score"), "rank")
-    )
+    q = _vecs(ivf_probe_cells(queries, n_probe, n_centroids, dim, vec_col,
+                              centroids=centroids),
+              "q", q_id, vec_col, dim, "ivf_cell")
+    c = _vecs(ivf_assign(spread_scan(corpus), n_centroids, dim, c_id,
+                         vec_col, centroids=centroids),
+              "c", c_id, vec_col, dim, "ivf_cell")
+    return _topk(q.join(c, "ivf_cell"), k, dim)

@@ -298,9 +298,9 @@ def test_clump_distributed_merge_equals_driver(spark):
             for y in range(48) for x in range(48)]
     grid = spark.createDataFrame(rows, "x BIGINT, y BIGINT, value DOUBLE")
     a = {(r.x, r.y): r.clump_id
-         for r in cl.clump(grid, tile=16, merge="driver").collect()}
+         for r in cl.clump(grid, tile=16).collect()}
     b = {(r.x, r.y): r.clump_id
-         for r in cl.clump(grid, tile=16, merge="distributed").collect()}
+         for r in cl.clump(grid, tile=16, driver_edge_limit=0).collect()}
     assert a == b
 
 

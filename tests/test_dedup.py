@@ -180,16 +180,22 @@ def test_near_dup_groups_connected_components(spark):
 
 
 def test_near_dup_groups_distributed_path_matches(spark):
+    """Both closure paths give the same groups, for integer and for
+    string ids."""
     from rsgislib_spark.operators import dedup as dd
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (7, 9), (10, 11), (9, 12)], "a BIGINT, b BIGINT")
-    small = {r.doc_id: r.group_id
-             for r in dd.near_dup_groups(pairs).collect()}
-    forced = {r.doc_id: r.group_id
-              for r in dd.near_dup_groups(pairs,
-                                          driver_edge_limit=1).collect()}
-    assert small == forced
+    for id_type in ("BIGINT", "STRING"):
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3), (7, 9), (10, 11), (9, 12)], "a BIGINT, b BIGINT"
+        ).selectExpr(f"CAST(a AS {id_type}) AS a",
+                     f"CAST(b AS {id_type}) AS b")
+        small = {r.doc_id: r.group_id
+                 for r in dd.near_dup_groups(pairs).collect()}
+        forced = {r.doc_id: r.group_id
+                  for r in dd.near_dup_groups(pairs,
+                                              driver_edge_limit=1).collect()}
+        assert small == forced, id_type
+        assert len(small) == 8, id_type
 
 
 def test_near_dup_groups_distributed_path_never_collects(spark, monkeypatch):
@@ -217,6 +223,31 @@ def test_near_dup_groups_distributed_path_never_collects(spark, monkeypatch):
     assert pulls == [], f"distributed path collected {pulls}"
     monkeypatch.setattr(DataFrame, "collect", orig)
     assert out.count() == 8  # every node of the pair graph appears
+
+
+def test_near_dup_groups_leaves_no_edge_cache(spark):
+    """The closure persists its edge set for the deciding count and
+    the chosen path, and must unpersist it before returning. Only the
+    distributed closure's last round, which the result reads, may
+    stay persisted."""
+    from rsgislib_spark.operators import dedup as dd
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 9), (10, 11), (9, 12)], "a BIGINT, b BIGINT")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    out = dd.near_dup_groups(pairs, driver_edge_limit=1)
+    new = set(jsc.getPersistentRDDs().keySet()) - before
+    assert len(new) <= 1, f"persisted RDDs left behind: {sorted(new)}"
+    assert out.count() == 8
+
+
+@pytest.mark.parametrize("n_perm,bands", [(32, 0), (4, 8)])
+def test_minhash_lsh_rejects_empty_bands(spark, docs, n_perm, bands):
+    """bands < 1 or bands > n_perm leaves a band with no rows: every
+    document then shares one bucket and the candidates are all pairs."""
+    with pytest.raises(ValueError, match="bands"):
+        dedup.minhash_lsh_pairs(docs, 0.5, n_perm=n_perm, bands=bands)
 
 
 def test_contamination_flags_counts_shared_shingles(spark):

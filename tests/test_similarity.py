@@ -280,3 +280,11 @@ def test_dim_mismatch_raises_not_misscores(spark):
     # the guard passes vectors of the declared dim through untouched
     ok = similarity.with_unit_vec(short, dim=32).collect()
     assert len(ok) == 2
+
+
+@pytest.mark.parametrize("n_bits,bands", [(16, 0), (4, 8)])
+def test_lsh_neardup_rejects_empty_bands(spark, emb, n_bits, bands):
+    """bands < 1 or bands > n_bits leaves a band with no bits: every
+    vector then shares one bucket and the candidates are all pairs."""
+    with pytest.raises(ValueError, match="bands"):
+        similarity.lsh_neardup_pairs(emb, n_bits=n_bits, bands=bands)

@@ -91,6 +91,19 @@ CHECKS = {
         forbid=["CartesianProduct", "BroadcastNestedLoopJoin",
                 "BatchEvalPython"],
     ),
+    "minhash lsh pairs (band-bucket equi-join → candidate verify)": dict(
+        # candidates come from the shared band-bucket self-join, an
+        # equi-join on (band, key): never an all-pairs product, and
+        # no Python anywhere
+        expect=["Join [bk#"],
+        forbid=["CartesianProduct", "BroadcastNestedLoopJoin",
+                "BatchEvalPython", "ArrowEvalPython"],
+    ),
+    "simhash near pairs (band-bucket equi-join → xor verify)": dict(
+        expect=["Join [bk#"],
+        forbid=["CartesianProduct", "BroadcastNestedLoopJoin",
+                "BatchEvalPython", "ArrowEvalPython"],
+    ),
     "ivf top-k (quantize → probe-cell equi-join)": dict(
         # corpus joins queries on ivf_cell (the inverted-file layout);
         # quantization against 64 centroids is the Arrow fold tier
@@ -243,6 +256,14 @@ def main():
         return similarity.lsh_neardup_pairs(emb, threshold=0.4, n_bits=32,
                                             bands=4, dim=64, seed=42)
 
+    def minhash_lsh():
+        docs = spark.read.parquet(f"{sf}/documents.parquet")
+        return dedup.minhash_lsh_pairs(docs, threshold=0.5)
+
+    def simhash_near():
+        docs = spark.read.parquet(f"{sf}/documents.parquet")
+        return dedup.simhash_near_pairs(docs, k=3)
+
     def ivf():
         from rsgislib_spark.operators import similarity
 
@@ -303,7 +324,7 @@ def main():
                             minhash, unq_ids,
                             sj_left_pages, overlay_pairs, clump_edges,
                             knn_pages, sj_df_big,
-                            lsh_pairs, ivf,
+                            lsh_pairs, minhash_lsh, simhash_near, ivf,
                             decontaminate, repetition,
                             span_dd, url_rollup, pii,
                             pushdown, partition_prune, rasterize]))
