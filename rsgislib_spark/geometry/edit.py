@@ -150,33 +150,37 @@ def disk_ngon(cx: float, cy: float, r: float, k: int = 16) -> np.ndarray:
     return np.vstack([ring, ring[:1]])
 
 
-def buffer_polygon(rings: list, dist: float, k: int = 16):
-    """Positive buffer of a polygon (holes shrink is approximated by
-    buffering the shell only — documented divergence): Minkowski sum
-    with a k-gon disk = scanline union of the polygon, one quad per
-    edge (offset both sides), and one k-gon per vertex.
+def buffer_polygon(polys: list, dist: float, k: int = 16):
+    """Positive buffer of a (multi)polygon — a list of polygons, each a
+    list of rings, shell first (holes shrink is approximated by
+    buffering the shells only — documented divergence): Minkowski sum
+    with a k-gon disk = one scanline union of every shell, one quad per
+    shell edge (offset both sides), and one k-gon per shell vertex, so
+    parts whose buffers overlap count once.
 
     Returns (pieces, area) — the trapezoid partition of the buffered
     region (geometry/overlay.py representation)."""
     if dist <= 0.0:
         raise ValueError("buffer distance must be positive")
-    shell = np.asarray(rings[0], dtype=np.float64)
-    if np.array_equal(shell[0], shell[-1]):
-        shell = shell[:-1]
-    parts = [[np.vstack([shell, shell[:1]])]]
-    n = len(shell)
-    for i in range(n):
-        a, b = shell[i], shell[(i + 1) % n]
-        d = b - a
-        L = float(np.hypot(*d))
-        if L == 0.0:
-            continue
-        nx, ny = -d[1] / L * dist, d[0] / L * dist
-        quad = np.array([
-            [a[0] + nx, a[1] + ny], [b[0] + nx, b[1] + ny],
-            [b[0] - nx, b[1] - ny], [a[0] - nx, a[1] - ny],
-            [a[0] + nx, a[1] + ny],
-        ])
-        parts.append([quad])
-        parts.append([disk_ngon(a[0], a[1], dist, k)])
+    parts = []
+    for rings in polys:
+        shell = np.asarray(rings[0], dtype=np.float64)
+        if np.array_equal(shell[0], shell[-1]):
+            shell = shell[:-1]
+        parts.append([np.vstack([shell, shell[:1]])])
+        n = len(shell)
+        for i in range(n):
+            a, b = shell[i], shell[(i + 1) % n]
+            d = b - a
+            L = float(np.hypot(*d))
+            if L == 0.0:
+                continue
+            nx, ny = -d[1] / L * dist, d[0] / L * dist
+            quad = np.array([
+                [a[0] + nx, a[1] + ny], [b[0] + nx, b[1] + ny],
+                [b[0] - nx, b[1] - ny], [a[0] - nx, a[1] - ny],
+                [a[0] + nx, a[1] + ny],
+            ])
+            parts.append([quad])
+            parts.append([disk_ngon(a[0], a[1], dist, k)])
     return boolean.boolean_pieces(parts, [], "union")

@@ -50,6 +50,21 @@ def multipolygon_to_wkb(polygons: list) -> bytes:
     return b"".join(out)
 
 
+def polygons_to_wkb(polygons: list) -> bytes:
+    """A Polygon for one part, a MultiPolygon otherwise."""
+    if len(polygons) == 1:
+        return polygon_to_wkb(polygons[0])
+    return multipolygon_to_wkb(polygons)
+
+
+def pieces_to_wkb(pieces: list) -> bytes | None:
+    """Trapezoid pieces (geometry/overlay.py) as a MultiPolygon of
+    single-ring parts; None for no pieces."""
+    if not pieces:
+        return None
+    return multipolygon_to_wkb([[p] for p in pieces])
+
+
 def _read_ring(buf: memoryview, off: int):
     (k,) = struct.unpack_from("<I", buf, off)
     off += 4
@@ -74,26 +89,9 @@ def _read_polygon(buf: memoryview, off: int):
 
 
 def wkb_to_rings(wkb: bytes) -> list:
-    """Decode Polygon/MultiPolygon WKB → list of (k,2) float64 rings."""
-    buf = memoryview(wkb)
-    byte_order, gtype = struct.unpack_from("<BI", buf, 0)
-    if byte_order != 1:
-        raise ValueError("only little-endian WKB supported")
-    if gtype == WKB_POLYGON:
-        rings, _ = _read_polygon(buf, 0)
-        return rings
-    if gtype == WKB_MULTIPOLYGON:
-        (npolys,) = struct.unpack_from("<I", buf, 5)
-        off = 9
-        rings = []
-        for _ in range(npolys):
-            pr, off = _read_polygon(buf, off)
-            rings.extend(pr)
-        return rings
-    if gtype == WKB_POINT:
-        x, y = struct.unpack_from("<dd", buf, 5)
-        return [np.array([[x, y]])]
-    raise ValueError(f"unsupported WKB geometry type {gtype}")
+    """Decode Polygon/MultiPolygon WKB → list of (k,2) float64 rings:
+    the flatten of ``wkb_to_polygons``."""
+    return [r for rings in wkb_to_polygons(wkb) for r in rings]
 
 
 def wkb_to_polygons(wkb: bytes) -> list:

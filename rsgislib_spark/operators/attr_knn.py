@@ -18,6 +18,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 METRICS = {"euclidean", "manhattan", "chebyshev", "minkowski", "mahalanobis"}
 SUMMARIES = {"mode", "mean", "median", "min", "max", "stddev"}
@@ -97,10 +98,9 @@ def apply_knn(apply_df: DataFrame, train_df: DataFrame, feat_cols: list,
 
     from ..session import spread_scan
 
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in apply_df.schema.fields)
-    return spread_scan(apply_df).mapInPandas(
-        _apply, schema=schema + f", {out_col} DOUBLE")
+    schema = StructType(list(apply_df.schema.fields)
+                        + [StructField(out_col, DoubleType())])
+    return spread_scan(apply_df).mapInPandas(_apply, schema=schema)
 
 
 def apply_knn_distributed(apply_df: DataFrame, train_df: DataFrame,

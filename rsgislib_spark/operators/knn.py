@@ -30,6 +30,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import (DoubleType, IntegerType, LongType,
+                               StructField, StructType)
 
 from ..cells import quadcell
 from ..geometry.predicates import haversine_m
@@ -96,9 +98,10 @@ def knn_broadcast(points: DataFrame, sites: DataFrame, k: int = 1,
                 out = out[out[dist_col] <= cut]
             yield out
 
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in points.schema.fields)
-    schema += f", nn_site_id BIGINT, {dist_col} DOUBLE, nn_rank INT"
+    schema = StructType(list(points.schema.fields) + [
+        StructField("nn_site_id", LongType()),
+        StructField(dist_col, DoubleType()),
+        StructField("nn_rank", IntegerType())])
     # spread the point side: the O(|pts| * |sites|) distance kernel is
     # the whole cost of this operator, and a few-row-group parquet
     # source would hand it to one or two tasks (each row is

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.ml.clustering import KMeans
 from pyspark.ml.feature import PCA, VectorAssembler
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 
 def _assemble(df: DataFrame, feat_cols: list) -> DataFrame:
@@ -59,8 +60,8 @@ def isodata_cluster(df: DataFrame, feat_cols: list, n_clusters: int = 8,
 
     def assign(centers: np.ndarray) -> DataFrame:
         ctr = centers.copy()  # broadcast via closure (k x d, tiny)
-        schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                           for f in feats.schema.fields) + f", {out_col} INT"
+        schema = StructType(list(feats.schema.fields)
+                            + [StructField(out_col, IntegerType())])
 
         def gen(batches):
             for pdf in batches:

@@ -47,12 +47,6 @@ PAIR_SCHEMA = ("a_id BIGINT, b_id BIGINT, area DOUBLE, n_pieces INT, "
                "pieces BINARY")
 
 
-def _pieces_wkb(pieces: list) -> bytes | None:
-    if not pieces:
-        return None
-    return wkb.multipolygon_to_wkb([[p] for p in pieces])
-
-
 def _cover_side(df: DataFrame, id_col: str, geom_col: str, res: int,
                 prefix: str) -> DataFrame:
     """(id, geom) → one row per cover cell with bbox columns. The
@@ -133,7 +127,7 @@ def _pair_op(pairs: DataFrame) -> DataFrame:
                 if area == 0.0:
                     continue
                 rows.append((aid, bid, area, len(pieces),
-                             _pieces_wkb(pieces)))
+                             wkb.pieces_to_wkb(pieces)))
             yield pd.DataFrame(rows, columns=COLS)
 
     return pairs.mapInPandas(gen, schema=PAIR_SCHEMA)
@@ -154,8 +148,9 @@ def _remainder(layer: DataFrame, pairs: DataFrame, side: str,
         g = wkb.wkb_to_rings(bytes(pdf[f"{side}_geom"].iloc[0]))
         clippers = [wkb.wkb_to_rings(bytes(c)) for c in pdf[f"{other}_geom"]]
         pieces, area = geom_overlay.boolean_pieces([g], clippers, "difference")
-        return pd.DataFrame([(key[0], area, len(pieces), _pieces_wkb(pieces))],
-                            columns=cols)
+        return pd.DataFrame(
+            [(key[0], area, len(pieces), wkb.pieces_to_wkb(pieces))],
+            columns=cols)
 
     clipped = pairs.groupBy(sid).applyInPandas(clip, schema=schema)
 
@@ -171,7 +166,7 @@ def _remainder(layer: DataFrame, pairs: DataFrame, side: str,
             for pid, g in zip(pdf[id_col], pdf[geom_col]):
                 polys = wkb.wkb_to_polygons(bytes(g))
                 pieces, area = geom_overlay.boolean_pieces(polys, [], "union")
-                rows.append((pid, area, len(pieces), _pieces_wkb(pieces)))
+                rows.append((pid, area, len(pieces), wkb.pieces_to_wkb(pieces)))
             yield pd.DataFrame(rows, columns=cols)
 
     hit = pairs.select(F.col(sid).alias("_hit_id")).distinct()

@@ -14,6 +14,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 
 def fit_linear_trend(df: DataFrame, key_cols: list, t_col: str,
@@ -40,10 +41,10 @@ def fit_linear_trend(df: DataFrame, key_cols: list, t_col: str,
         out.update(slope=[slope], intercept=[intercept], r2=[r2], n_obs=[n])
         return pd.DataFrame(out)
 
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields if f.name in key_cols)
-    schema = key_schema + ", slope DOUBLE, intercept DOUBLE, r2 DOUBLE, n_obs BIGINT"
+    schema = StructType(
+        [f for f in df.schema.fields if f.name in key_cols]
+        + [StructField(n, DoubleType()) for n in ("slope", "intercept", "r2")]
+        + [StructField("n_obs", LongType())])
     return df.groupBy(*key_cols).applyInPandas(_fit, schema=schema)
 
 

@@ -9,6 +9,7 @@ a one-expression transformation that Catalyst fuses into scans.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 
 def subset_by_attribute(df: DataFrame, col: str, values: list,
@@ -231,9 +232,8 @@ def merge_utm_vecs_wgs84(dfs: list, easting: str = "easting",
     from ..functions import crs
 
     def to_wgs84(df: DataFrame) -> DataFrame:
-        schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                           for f in df.schema.fields)
-        schema += ", lon DOUBLE, lat DOUBLE"
+        schema = StructType(list(df.schema.fields) + [
+            StructField("lon", DoubleType()), StructField("lat", DoubleType())])
 
         def gen(batches):
             for pdf in batches:

@@ -71,9 +71,11 @@ def test_add_geom_stats(spark):
         bb = predicates.ring_bbox(rings)
         r = out[p["poly_id"]]
         assert (r.xmin, r.ymin, r.xmax, r.ymax) == bb
-        if p.get("multi"):
-            continue  # WKB multipolygon splits rings; area checked per polygon
-        assert r.area == pytest.approx(predicates.shoelace_area(rings), rel=1e-12)
+        # a multi fixture is one single-ring part per ring: its area is
+        # the sum over the parts
+        parts = [[ring] for ring in rings] if p.get("multi") else [rings]
+        area = sum(predicates.shoelace_area(q) for q in parts)
+        assert r.area == pytest.approx(area, rel=1e-12)
         assert r.perimeter == pytest.approx(predicates.ring_length(rings), rel=1e-12)
 
 

@@ -57,7 +57,7 @@ def test_dp_max_deviation_bound():
 def test_buffer_square_area_bounds():
     sq = [closed([[0, 0], [10, 0], [10, 10], [0, 10]])]
     r, k = 2.0, 32
-    pieces, area = edit.buffer_polygon(sq, r, k=k)
+    pieces, area = edit.buffer_polygon([sq], r, k=k)
     # Minkowski: area = A + perim*r + (disk area); k-gon disk is
     # inscribed in the true disk
     kgon_disk = 0.5 * k * r * r * np.sin(2 * np.pi / k)
@@ -70,7 +70,7 @@ def test_buffer_square_area_bounds():
 
 def test_buffer_contains_original():
     tri = [closed([[0, 0], [8, 0], [4, 6]])]
-    _, area = edit.buffer_polygon(tri, 1.0, k=16)
+    _, area = edit.buffer_polygon([tri], 1.0, k=16)
     assert area > polygons_area([tri])
 
 
@@ -154,3 +154,80 @@ def test_alpha_shape_spark_groups(spark):
     out = {r.gid: r.area for r in
            vector_geom.alpha_shape(df, by="gid", alpha=1 / 0.8).collect()}
     assert out == {1: 9.0, 2: 9.0}  # 3x3 unit squares each
+
+
+def _square(x, y, w):
+    return [closed([[x, y], [x + w, y], [x + w, y + w], [x, y + w]])]
+
+
+def test_add_geom_stats_multipart_area(spark):
+    from rsgislib_spark.operators import vector_geom
+
+    multi = wkb.multipolygon_to_wkb([_square(0, 0, 1), _square(5, 5, 2)])
+    r = vector_geom.add_geom_stats(_wkb_layer(spark, [(1, multi)])).collect()[0]
+    assert r.area == 5.0  # summed over the parts
+    assert r.perimeter == 12.0
+    assert (r.centroid_x, r.centroid_y) == (0.5, 0.5)  # first part's shell
+    assert (r.xmin, r.ymin, r.xmax, r.ymax) == (0.0, 0.0, 7.0, 7.0)
+
+
+@pytest.mark.parametrize("gap", [10.0, 0.1])
+def test_buffer_polygons_every_part(spark, gap):
+    from rsgislib_spark.operators import vector_geom
+
+    a, b = _square(0, 0, 1), _square(1 + gap, 0, 2)
+    df = _wkb_layer(spark, [(1, wkb.multipolygon_to_wkb([a, b])),
+                            (2, wkb.polygon_to_wkb(a)),
+                            (3, wkb.polygon_to_wkb(b))])
+    got = {r.gid: r.buf_area
+           for r in vector_geom.buffer_polygons(df, dist=0.5, k=8).collect()}
+    if gap > 2 * 0.5:   # disjoint buffers: the sum of the parts
+        assert got[1] == pytest.approx(got[2] + got[3], rel=1e-12)
+    else:               # overlapping buffers count once
+        assert max(got[2], got[3]) < got[1] < got[2] + got[3] - 1e-9
+
+
+def test_explode_quoted_column_name(spark):
+    from rsgislib_spark.operators import vector_geom
+
+    multi = wkb.multipolygon_to_wkb([_square(0, 0, 1), _square(5, 5, 2)])
+    df = spark.createDataFrame([(3, multi)], "`page id` BIGINT, geometry BINARY")
+    out = vector_geom.explode_multipolygon(df).collect()
+    assert sorted((r["page id"], r.part_id) for r in out) == [(3, 0), (3, 1)]
+
+
+_D = "double"
+_GEOM_IN = [("gid", "bigint"), ("name", "string"), ("geometry", "binary")]
+_GROUP_OUT = [("area", _D), ("n_pieces", "int"), ("geometry", "binary")]
+
+
+@pytest.mark.parametrize("op, want", [
+    ("add_geom_stats", _GEOM_IN + [(c, _D) for c in (
+        "xmin", "ymin", "xmax", "ymax", "area", "perimeter",
+        "centroid_x", "centroid_y")]),
+    ("explode_multipolygon", _GEOM_IN + [("part_id", "int")]),
+    ("drop_holes", _GEOM_IN),
+    ("simplify", _GEOM_IN),
+    ("buffer_polygons", _GEOM_IN + [("buf_area", _D)]),
+    ("dissolve", [("name", "string")] + _GROUP_OUT),
+    ("alpha_shape", [("gid", "bigint")] + _GROUP_OUT),
+])
+def test_vector_geom_output_schemas(spark, op, want):
+    from rsgislib_spark.operators import vector_geom as vg
+
+    df = spark.createDataFrame(
+        [(1, "a", wkb.polygon_to_wkb(_square(0, 0, 1)))],
+        "gid BIGINT, name STRING, geometry BINARY")
+    pts = spark.createDataFrame([(1, 0.0, 0.0), (1, 1.0, 0.0), (1, 0.0, 1.0)],
+                                "gid BIGINT, lon DOUBLE, lat DOUBLE")
+    out = {
+        "add_geom_stats": lambda: vg.add_geom_stats(df),
+        "explode_multipolygon": lambda: vg.explode_multipolygon(df),
+        "drop_holes": lambda: vg.drop_holes(df),
+        "simplify": lambda: vg.simplify(df, 0.1),
+        "buffer_polygons": lambda: vg.buffer_polygons(df, 0.5, k=4),
+        "dissolve": lambda: vg.dissolve(df, by="name"),
+        "alpha_shape": lambda: vg.alpha_shape(pts, by="gid", alpha=0.0),
+    }[op]()
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == want
+    assert out.count() == 1

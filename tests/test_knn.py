@@ -284,3 +284,14 @@ def test_knn_kring_matches_duckdb_oracle(spark):
     assert len(srows) == len(drows) > 0
     assert (compare_oracle.table_hash(srows, got.columns)
             == compare_oracle.table_hash(drows, want.column_names))
+
+
+def test_knn_broadcast_quoted_column_name(spark):
+    # the output schema is built from StructFields, so a column name
+    # that DDL would have to quote passes through
+    pts = spark.createDataFrame([(1, 0.0, 0.0)],
+                                "`page id` BIGINT, lon DOUBLE, lat DOUBLE")
+    sites = spark.createDataFrame([(7, 0.5, 0.0)],
+                                  "site_id BIGINT, site_lon DOUBLE, site_lat DOUBLE")
+    r = knn.knn_broadcast(pts, sites).collect()[0]
+    assert (r["page id"], r.nn_site_id, r.nn_dist_sq) == (1, 7, 0.25)

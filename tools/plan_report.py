@@ -156,6 +156,13 @@ CHECKS = {
         expect=["BroadcastHashJoin"],
         forbid=["MapInPandas", "ArrowEvalPython", "BatchEvalPython"],
     ),
+    "vector geometry map (explode_multipolygon, one per-geometry pass)": dict(
+        # the per-geometry operators are one Arrow map over the rows:
+        # no shuffle and no pandas or row-at-a-time Python node
+        expect=["MapInArrow"],
+        forbid=["Exchange", "MapInPandas", "BatchEvalPython",
+                "ArrowEvalPython"],
+    ),
 }
 
 
@@ -320,6 +327,11 @@ def main():
             fixtures.grid_df(spark, bands=(1, 2)), fixtures.GRID_POLYGONS,
             fixtures.GRID_ORIGIN_X, fixtures.GRID_ORIGIN_Y, fixtures.GRID_RES)
 
+    def vector_geom_map():
+        from rsgislib_spark.operators import vector_geom
+
+        return vector_geom.explode_multipolygon(fixtures.polygons_df(spark))
+
     dfs = dict(zip(CHECKS, [headline, spatial, spatial_edges, zonal_q,
                             minhash, unq_ids,
                             sj_left_pages, overlay_pairs, clump_edges,
@@ -327,7 +339,8 @@ def main():
                             lsh_pairs, minhash_lsh, simhash_near, ivf,
                             decontaminate, repetition,
                             span_dd, url_rollup, pii,
-                            pushdown, partition_prune, rasterize]))
+                            pushdown, partition_prune, rasterize,
+                            vector_geom_map]))
 
     out = ["# PLANS — physical-plan evidence (generated by tools/plan_report.py)",
            "",
