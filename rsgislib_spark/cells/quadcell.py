@@ -130,11 +130,10 @@ def parent_sql(cell: str, child_res: int, parent_res: int) -> str:
     get_img_sum_stats_in_pxl, python/src/imagecalc.cpp:2384 — stats of
     fine pixels within each coarse pixel = parent-cell rollup).
 
-    Note: uses DIV (integer division) — Spark's ``DIV`` and DuckDB's
-    ``//`` differ in spelling, so we emit two dialects via
-    parent_sql_duckdb when needed; for the shared-oracle queries we
-    instead recompute the parent from lon/lat with cell_sql (always
-    identical). This function is the Spark-side fast path.
+    Note: uses Spark's ``DIV`` (integer division), which DuckDB spells
+    ``//``, so the shared-oracle queries recompute the parent from
+    lon/lat with cell_sql instead. This function is the Spark-side
+    fast path; ``parent_np`` is its numpy twin.
     """
     f = 1 << (child_res - parent_res)
     return _PARENT_SQL.format(cell=cell, pres=parent_res, f=f)

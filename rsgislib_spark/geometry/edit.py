@@ -173,14 +173,13 @@ def buffer_polygon(polys: list, dist: float, k: int = 16):
             a, b = shell[i], shell[(i + 1) % n]
             d = b - a
             L = float(np.hypot(*d))
-            if L == 0.0:
-                continue
-            nx, ny = -d[1] / L * dist, d[0] / L * dist
-            quad = np.array([
-                [a[0] + nx, a[1] + ny], [b[0] + nx, b[1] + ny],
-                [b[0] - nx, b[1] - ny], [a[0] - nx, a[1] - ny],
-                [a[0] + nx, a[1] + ny],
-            ])
-            parts.append([quad])
+            if L > 0.0:  # a zero-length edge has no quad, its vertex a k-gon
+                nx, ny = -d[1] / L * dist, d[0] / L * dist
+                quad = np.array([
+                    [a[0] + nx, a[1] + ny], [b[0] + nx, b[1] + ny],
+                    [b[0] - nx, b[1] - ny], [a[0] - nx, a[1] - ny],
+                    [a[0] + nx, a[1] + ny],
+                ])
+                parts.append([quad])
             parts.append([disk_ngon(a[0], a[1], dist, k)])
     return boolean.boolean_pieces(parts, [], "union")

@@ -143,8 +143,8 @@ def buffer_polygons(df: DataFrame, dist: float, k: int = 16,
     geometry with the piece partition."""
     def buf(polys):
         pieces, area = edit.buffer_polygon(polys, dist, k)
-        # no pieces (a shell of one repeated vertex): an empty
-        # MultiPolygon, not the input geometry
+        # no pieces (a k below 3 on a shell of one repeated vertex): an
+        # empty MultiPolygon, not the input geometry
         return [(wkb.pieces_to_wkb(pieces) or wkb.multipolygon_to_wkb([]),
                  area)]
 

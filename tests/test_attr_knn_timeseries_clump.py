@@ -2,6 +2,7 @@
 wrappers — each vs an independent numpy oracle."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -225,6 +226,34 @@ def test_stratified_sample(spark):
     # deterministic: same rows every time
     out2 = V.stratified_sample(df, "s", "k", {"a": 50, "b": 10}).collect()
     assert sorted(r.k for r in out) == sorted(r.k for r in out2)
+
+
+def test_train_test_split_matches_pandas(spark):
+    from rsgislib_spark.operators import vector_ops as V
+
+    pdf = pd.DataFrame({"k": np.arange(2000, dtype=np.int64),
+                        "v": np.arange(2000) % 7})
+    train, test = V.train_test_split(spark.createDataFrame(pdf), "k", 30)
+    in_test = (pdf["k"] * 2654435761) % 100 < 30
+    assert sorted(r.k for r in test.collect()) == \
+        pdf.loc[in_test, "k"].tolist()
+    assert sorted(r.k for r in train.collect()) == \
+        pdf.loc[~in_test, "k"].tolist()
+
+
+def test_find_replace_str_matches_pandas(spark):
+    """A literal replace in each named column; other columns and
+    nulls are untouched."""
+    from rsgislib_spark.operators import vector_ops as V
+
+    pdf = pd.DataFrame({"a": ["x.y.z", "xyz", None, "..."],
+                        "b": ["a.b", ".", "q", None],
+                        "c": ["1.2", "3.4", "5", "6."]})
+    got = V.find_replace_str(spark.createDataFrame(pdf), ["a", "b"], ".", "--")
+    want = pdf.assign(**{c: pdf[c].str.replace(".", "--", regex=False)
+                         for c in ("a", "b")})
+    assert got.toPandas().to_dict("list") == \
+        want.astype(object).where(want.notna(), None).to_dict("list")
 
 
 # ------------------------------------------------------------------ ML wrappers

@@ -37,6 +37,15 @@ def test_parent_contains_child():
     assert np.array_equal(parent, direct)
 
 
+@pytest.mark.parametrize("child, parent", [(11, 6), (9, 9), (20, 0)])
+def test_parent_sql_matches_numpy(spark, child, parent):
+    cells = quadcell.cell_np(LON, LAT, child)
+    df = spark.createDataFrame([(int(c),) for c in cells], "cell BIGINT")
+    got = np.array([r[0] for r in df.selectExpr(
+        quadcell.parent_sql("cell", child, parent)).collect()])
+    assert np.array_equal(got, quadcell.parent_np(cells, parent))
+
+
 def test_cell_bounds_contain_point():
     cells = quadcell.cell_np(LON, LAT, 8)
     x0, y0, x1, y1 = quadcell.cell_bounds_np(cells)

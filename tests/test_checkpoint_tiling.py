@@ -60,6 +60,23 @@ def test_salt_precomputed_hot_list_matches_inline(assigned):
     assert a == b
 
 
+@pytest.mark.parametrize("threshold", [None, 100])
+def test_repartition_by_cell_colocates_each_key(assigned, threshold):
+    """Every row is kept, and each partition key (the cell, or the
+    salted cell past the threshold) lands in one partition."""
+    out = tiling.repartition_by_cell(assigned, "cell_r5", n_partitions=6,
+                                     threshold_rows=threshold)
+    key = "cell_r5" if threshold is None else "cell_salted"
+    got = out.select("url", key, F.spark_partition_id().alias("p")).toPandas()
+    want = assigned.select("url").toPandas()
+    assert out.rdd.getNumPartitions() == 6
+    assert sorted(got["url"]) == sorted(want["url"])
+    assert (got.groupby(key)["p"].nunique() == 1).all()
+    if threshold is not None:  # a hot cell spans several salted keys
+        cells = got[key].str.split("_").str[0]
+        assert got.groupby(cells)[key].nunique().max() > 1
+
+
 def test_halo_explode_contains_neighbours(spark):
     df = spark.createDataFrame([(quadcell.pack(5, 10, 10),)], "cell BIGINT")
     out = tiling.halo_explode(df, "cell", res=5, k=1).collect()

@@ -74,6 +74,17 @@ def test_buffer_contains_original():
     assert area > polygons_area([tri])
 
 
+def test_buffer_of_one_repeated_vertex_is_its_kgon():
+    """A shell whose vertices are one point buffers to the k-gon disk
+    around it: the regular 8-gon of circumradius 1 has area 2*sqrt(2)."""
+    pieces, area = edit.buffer_polygon([[[(1, 1)] * 5]], 1.0, 8)
+    assert area == pytest.approx(2 * np.sqrt(2), rel=1e-12)
+    assert sum(abs(edit.boolean.ring_signed_area(p)) for p in pieces) == \
+        pytest.approx(area, rel=1e-12)
+    xs = np.concatenate([np.asarray(p)[:, 0] for p in pieces])
+    assert (xs.min(), xs.max()) == pytest.approx((0.0, 2.0), abs=1e-12)
+
+
 # ------------------------------------------------- spark-side operators
 
 def _wkb_layer(spark, rows):
@@ -185,6 +196,18 @@ def test_buffer_polygons_every_part(spark, gap):
         assert got[1] == pytest.approx(got[2] + got[3], rel=1e-12)
     else:               # overlapping buffers count once
         assert max(got[2], got[3]) < got[1] < got[2] + got[3] - 1e-9
+
+
+def test_buffer_polygons_of_one_repeated_vertex(spark):
+    """The k-gon is written, not an empty MultiPolygon."""
+    from rsgislib_spark.operators import vector_geom
+
+    df = _wkb_layer(spark, [(1, wkb.polygon_to_wkb([[(1.0, 1.0)] * 5]))])
+    (row,) = vector_geom.buffer_polygons(df, dist=1.0, k=8).collect()
+    assert row.buf_area == pytest.approx(2 * np.sqrt(2), rel=1e-12)
+    polys = wkb.wkb_to_polygons(bytes(row.geometry))
+    assert polys
+    assert polygons_area(polys) == pytest.approx(row.buf_area, rel=1e-12)
 
 
 def test_explode_quoted_column_name(spark):

@@ -1,17 +1,21 @@
 """Session start-up: the codegen cache holds a whole pass, a local
-session lists partition directories in one task per core, and the
-class archive of ``session.class_archive`` is made once, mapped by
-later launches, and never fails a launch or changes a result.
+session lists partition directories in one task per core, its Python
+workers re-read no unchanged zip archive, and the class archive of
+``session.class_archive`` is made once, mapped by later launches, and
+never fails a launch or changes a result.
 
 Every archive test launches its driver in a fresh process with
 ``XDG_CACHE_HOME`` under ``tmp_path``, so the host's own archive is
 never read or written."""
 
+import importlib.util
 import json
 import os
 import shutil
 import subprocess
 import sys
+import zipfile
+import zipimport
 from types import SimpleNamespace
 
 import pytest
@@ -45,7 +49,10 @@ with open(f"/proc/{proc.pid}/maps") as f:
 print(json.dumps({"count": n,
                   "args": list(bean.getRuntimeMXBean().getInputArguments()),
                   "mapped": mapped,
-                  "probe": s.conf.get("spark.probe.key", None)}))
+                  "probe": s.conf.get("spark.probe.key", None),
+                  "daemon": s.conf.get("spark.python.daemon.module", None),
+                  "pythonpath": s.conf.get("spark.executorEnv.PYTHONPATH",
+                                           None)}))
 s.stop()
 SparkContext._gateway.shutdown()
 proc.stdin.close()
@@ -305,3 +312,128 @@ def test_listing_cap_decision(master, conf, capped):
         master=master, defaultParallelism=64))
     session._cap_listing(spark)
     assert spark.conf.get(session._LISTING) == capped
+
+
+def test_conf_dir_daemon_values_are_kept(tmp_path):
+    """spark-defaults' daemon module is kept, and so is its executor
+    PYTHONPATH, after the daemon's directory."""
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text(
+        "spark.executorEnv.PYTHONPATH /probe/path\n")
+    res = _launch(tmp_path / "xdg", SPARK_CONF_DIR=str(conf))
+    assert res["daemon"] == session.DAEMON_MODULE
+    assert res["pythonpath"] == f"{session._DAEMON_DIR}{os.pathsep}/probe/path"
+    (conf / "spark-defaults.conf").write_text(
+        "spark.python.daemon.module pyspark.daemon\n")
+    res = _launch(tmp_path / "xdg", SPARK_CONF_DIR=str(conf))
+    assert res["daemon"] == "pyspark.daemon"
+    assert res["pythonpath"] is None
+
+
+def _daemon_module():
+    """The daemon module, loaded from its file without installing its
+    wrapper in this process."""
+    spec = importlib.util.spec_from_file_location(
+        "daemon_under_test",
+        os.path.join(session._DAEMON_DIR, f"{session.DAEMON_MODULE}.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _zip(path, **modules):
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in modules.items():
+            zf.writestr(f"{name}.py", src)
+
+
+def test_daemon_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    mod = _daemon_module()
+    path = str(tmp_path / "pkg.zip")
+    _zip(path, first="X = 1\n")
+    importer = zipimport.zipimporter(path)
+    other = zipimport.zipimporter(path)
+    mod.invalidate_caches(importer)  # the daemon stamps what it holds
+    reads = []
+    real = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory",
+                        lambda p: reads.append(p) or real(p))
+    mod.invalidate_caches(importer)
+    mod.invalidate_caches(other)
+    assert reads == []
+    _zip(path, first="X = 1\n", second="X = 2\n")
+    mod.invalidate_caches(importer)
+    mod.invalidate_caches(other)
+    assert reads == [path]
+    # both importers see the new entry, the second without a read
+    for imp in (importer, other):
+        spec = imp.find_spec("second")
+        loaded = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(loaded)
+        assert loaded.X == 2
+
+
+def test_reused_worker_rereads_no_archive(spark):
+    """Two one-partition Python tasks in one worker: the first wraps
+    ``zipimport._read_directory`` with a counter, the second reads how
+    many archive directories its set-up (``importlib.invalidate_caches``)
+    read. With ``pyspark.daemon`` that was 16. Idle workers are handed
+    out in turn, so every task counts in its own worker, and jobs run
+    until one worker has run two of them."""
+    def reads_since_last_task(_):
+        import os
+        import zipimport
+        seen = getattr(zipimport, "_reads_seen", None)
+        if seen is None:
+            real = zipimport._read_directory
+            seen = zipimport._reads_seen = [0]
+
+            def counted(p):
+                seen[0] += 1
+                return real(p)
+            zipimport._read_directory = counted
+            return os.getpid(), None
+        reads, seen[0] = seen[0], 0
+        return os.getpid(), reads
+
+    installed, counted = set(), []
+    for _ in range(16):
+        pid, reads = spark.sparkContext.parallelize([0], 1).map(
+            reads_since_last_task).collect()[0]
+        if reads is None:
+            installed.add(pid)
+        else:
+            assert pid in installed
+            counted.append(reads)
+            if len(counted) == 2:
+                break
+    assert counted == [0, 0]
+
+
+_PATH = "spark.executorEnv.PYTHONPATH"
+
+
+@pytest.mark.parametrize("master, conf, after", [
+    ("local", {}, None),
+    ("local[*]", {}, None),
+    ("local[4,2]", {}, None),
+    ("local[4]", {_PATH: "/a:/b"}, "/a:/b"),
+    ("local[4]", {"spark.python.daemon.module": "pyspark.daemon"}, False),
+    ("local[4]", {"spark.python.daemon.module": "custom", _PATH: "/a"}, False),
+    ("yarn", {}, False),
+    ("spark://host:7077", {}, False),
+    ("local-cluster[2,1,1024]", {}, False),
+])
+def test_python_daemon_decision(master, conf, after):
+    """Only a local master with no daemon module of its own gets the
+    engine's, with its directory first on the executors' PYTHONPATH
+    and any path already set ``after`` it; a cluster keeps Spark's
+    daemon (``False``: no conf at all)."""
+    got = session._python_daemon({"spark.master": master, **conf})
+    if after is False:
+        assert got == {}
+    else:
+        assert got == {"spark.python.daemon.module": session.DAEMON_MODULE,
+                       _PATH: os.pathsep.join(
+                           [session._DAEMON_DIR, *filter(None, [after])])}
